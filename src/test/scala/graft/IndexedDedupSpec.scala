@@ -10,7 +10,8 @@ import graft.dedup.{Dedup, IndexManifest, IndexedDedup, LinearHashIndex}
   * linear-hash bucket splitting under generational directories,
   * PROBE-PROPORTIONAL keep-side IO, exact verdict parity with
   * [[Dedup.incrementalDedup]] across batches (including df-cap
-  * tombstone crossings), whole-batch replay idempotence, and the
+  * tombstone crossings and seeded random batches), components of any
+  * diameter, whole-batch replay idempotence, and the
   * ATOMIC MANIFEST COMMIT protocol — crash-injected between the two
   * index rewrites and before the manifest rename, proving verdicts and
   * both indexes converge bit-identically on replay. */
@@ -261,6 +262,87 @@ class IndexedDedupSpec extends AnyFunSuite {
     val replay = got(spark, idx, b1, seq = 1L, maxDf = 35)
     assert(replay == first, s"replayed verdicts differ: $replay vs $first")
     assert(snapshot(idx) == s1, "replay mutated index state")
+  }
+
+  test("IndexedDedup: seeded random batches match incrementalDedup batch " +
+    "by batch — fresh docs, copies, word reversals, token drops, a df-cap " +
+    "crossing, a doc shorter than k, a committed replay and an asOf read") {
+    val rnd = new scala.util.Random(20261018L)
+    val maxDf = 4
+    def fresh(n: Int = 6 + rnd.nextInt(7)): String =
+      Seq.fill(n)(s"w${rnd.nextInt(40)}").mkString(" ")
+    // the common phrase: 4 shingles, 3 keep carriers. With batch 1's
+    // three carriers its keep+batch df crosses the cap, which alone
+    // decides two verdicts: the dup of keep doc 1 (J = 1/3 once its 4
+    // phrase shingles leave both sizes, 1/7 if keep doc 1 kept them)
+    // and the unmatched pair of fresh carriers (J = 4/12 if the phrase
+    // survived). Two kept carriers then tombstone it for good.
+    val phrase = "c1 c2 c3 c4 c5 c6"
+    def toks(t: String): Vector[String] = t.split(" ").toVector
+    def pick(corpus: Seq[(Long, String)]): String =
+      corpus(rnd.nextInt(corpus.size))._2
+    def batchOf(base: Long, corpus: Seq[(Long, String)],
+                extra: Seq[String]): Seq[(Long, String)] = {
+      val f = Seq.fill(3)(fresh())
+      val docs = f ++ Seq(f.head) ++ // an in-batch copy
+        Seq.fill(2)(pick(corpus)) ++
+        Seq.fill(2)(toks(pick(corpus)).reverse.mkString(" ")) ++
+        Seq.fill(2) {
+          val ts = toks(pick(corpus)); ts.patch(rnd.nextInt(ts.size), Nil, 1)
+            .mkString(" ")
+        } ++ extra
+      docs.zipWithIndex.map { case (t, i) => (base + i) -> t }
+    }
+    var corpus: Seq[(Long, String)] = Seq(1L -> s"$phrase a1 a2",
+        2L -> s"$phrase x1 x2 x3 x4", 3L -> s"$phrase ${fresh(4)}") ++
+      (4L to 16L).map(i => i -> fresh())
+    val idx = boot(mkDocs(corpus), maxDf)
+    // one step: verdicts must equal the q274 recompute against the keep
+    // corpus the batch is judged against; the kept docs then join it
+    def step(b: Seq[(Long, String)], seq: Long): Map[Long, (String, Long)] = {
+      val exp = ref(mkDocs(corpus), mkDocs(b), maxDf)
+      val v = got(spark, idx, mkDocs(b), seq, maxDf)
+      assert(v == exp, s"batch $seq: $v vs $exp")
+      corpus = corpus ++ b.filter(d => v(d._1)._1 == "kept")
+      v
+    }
+    val b1 = batchOf(1000L, corpus, Seq("tiny doc", s"$phrase a1 b1",
+      s"$phrase y1 y2 y3 y4", s"$phrase z1 z2 z3 z4"))
+    val v1 = step(b1, 1L)
+    assert(v1(1010L) == ("kept", 1010L), s"a doc shorter than k is kept: $v1")
+    assert(v1(1011L) == ("dup_of_keep", 1L) && v1(1012L)._1 == "kept"
+      && v1(1013L)._1 == "kept", s"the df-cap crossing decides: $v1")
+    assert(v1.values.map(_._1).toSet == Set("kept", "dup_of_keep", "dup_in_drop"),
+      s"batch 1 should exercise every status: $v1")
+    assert(snapshot(idx)._1.contains(("c1 c2 c3", -1L)),
+      "the common phrase should have crossed the cap")
+    val before2 = idx.manifest.read().get
+    val b2 = batchOf(2000L, corpus, Seq("tiny doc", s"$phrase a1 a2"))
+    val v2 = step(b2, 2L)
+    val after2 = snapshot(idx)
+    // a replay of the committed batch recomputes read-only
+    assert(got(spark, idx, mkDocs(b2), 2L, maxDf) == v2)
+    assert(snapshot(idx) == after2, "replay mutated index state")
+    // time travel: batch 2 against the snapshot that preceded it
+    val tt = IndexedDedup.processBatch(spark, idx, mkDocs(b2), 2L, k = 3,
+      threshold = 0.3, maxShingleDf = maxDf, asOf = Some(before2))
+    val ttv = tt.as[(Long, String, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(tt)
+    assert(ttv == v2 && snapshot(idx) == after2, s"asOf read: $ttv vs $v2")
+    step(batchOf(3000L, corpus, Nil), 3L)
+  }
+
+  test("IndexedDedup: a 25-doc near-duplicate chain in one batch resolves " +
+    "to its lowest id — the per-batch path has no round limit") {
+    val idx = boot(mkDocs(Seq(1L -> "k1 k2 k3 k4 k5 k6 k7 k8")), maxDf = 20)
+    // doc i = tokens 4i..4i+11: neighbours share 6 of 10 shingles
+    // (J = 0.43), docs two apart 2 (J = 0.11) — a 24-hop path
+    val chain = mkDocs((0 until 25).map(i =>
+      (100L + i) -> (4 * i until 4 * i + 12).map(t => s"t$t").mkString(" ")))
+    val v = got(spark, idx, chain, seq = 1L, maxDf = 20)
+    assert(v.size == 25 && v(100L) == ("kept", 100L))
+    assert((101L to 124L).forall(d => v(d) == ("dup_in_drop", 100L)), v)
   }
 
   // ------------------------------------------------ crash injection
