@@ -1,9 +1,11 @@
 package graft.curation
 
+import scala.concurrent.Future
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.dedup.IndexedDedup
+import graft.ops.Exec
 import graft.similarity.IvfIndex
 import graft.text.Bm25Index
 
@@ -15,9 +17,10 @@ import graft.text.Bm25Index
   * flip atomically per batch. [[IndexedDedup]], [[Bm25Index]] and
   * [[graft.similarity.IvfIndex]] each know how to STAGE their rewrites
   * (fresh bucket/cell generations, nothing visible) and return the
-  * bucket sets to commit; this coordinator runs dedup staging, feeds
-  * the batch's KEPT docs to the BM25 staging and their vectors to the
-  * IVF staging, and publishes all indexes (shingle + doc; term + doc +
+  * bucket sets to commit; this coordinator runs the BM25 and IVF
+  * read-only prepare steps alongside the dedup verdicts, hands the
+  * batch's KEPT doc ids to their finish steps, and publishes all
+  * indexes (shingle + doc; term + doc +
   * stats; IVF cells) plus the batch id in ONE single-file manifest
   * rename. A crash anywhere — inside any family's rewrites or between
   * families — leaves readers of ALL families on the previous
@@ -90,13 +93,26 @@ object CuratedIndexes {
       maxShingleDf)
     val mb = Bm25Index.bootstrapStaged(spark, idx.bm25, docs, maxTermDf)
     val ma = idx.ann.map { a =>
-      a.name -> IvfIndex.stageMerge(annVecs.get, "doc_id", a.vec,
-        a.centroids, a.root, 0L, None, a.name).getOrElse(
-        sys.error("CuratedIndexes: ann bootstrap staged nothing"))
+      a.name -> IvfIndex.finishMerge(IvfIndex.prepareMerge(annVecs.get,
+        "doc_id", a.vec, a.centroids, 0L), None, a.root, 0L, None, a.name)
     }.toMap
     idx.dedup.manifest.commit(0L, md ++ mb ++ ma)
     idx
   }
+
+  /** The futures one batch forks on the shared stage pool. A batch
+    * quiesces all of them before any exception leaves it, so a failed
+    * batch never leaves a staging write racing its replay's overwrite. */
+  private final class Forks {
+    private val forked = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
+    def apply[A](f: => A): Future[A] = {
+      val fu = Exec.fork(f); forked += fu; fu
+    }
+    def quiesceAll(): Unit = forked.foreach(Exec.quiesce)
+  }
+
+  private def unpersist(df: DataFrame): Unit =
+    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(df)
 
   private def gcAll(spark: SparkSession, idx: Indexes): Unit = {
     val mf = idx.dedup.manifest
@@ -115,7 +131,18 @@ object CuratedIndexes {
     * kept ids. Returns the dedup verdicts (doc_id, status, rep_id) —
     * localCheckpoint-pinned; the caller releases them (the q274
     * contract). A replay of a committed batch recomputes the verdicts
-    * read-only and skips the write path entirely. */
+    * read-only and skips the write path entirely.
+    *
+    * Launch order. The BM25 and IVF merges split into a read-only
+    * prepare step over the whole batch ([[Bm25Index.prepareMerge]],
+    * [[IvfIndex.prepareMerge]]) and a finish step that stages the kept
+    * docs' rewrites. The prepare steps need no verdicts and write
+    * nothing, so both are forked BEFORE the dedup verdict phase and
+    * overlap it. Then: dedup writes launched → `testCrashBetweenFamilies`
+    * → BM25 finish launched → `testCrashBeforeAnnFamily` → IVF finish.
+    * Whatever throws, every forked future is quiesced before the
+    * exception leaves, the pinned prepare frame is released, and so are
+    * the verdicts. */
   def processBatch(spark: SparkSession, idx: Indexes, batch: DataFrame,
                    batchSeq: Long, k: Int, threshold: Double,
                    maxShingleDf: Int, maxTermDf: Long,
@@ -124,55 +151,48 @@ object CuratedIndexes {
       "CuratedIndexes: ann handle and annVecs come together")
     val snap = idx.dedup.manifest.read().getOrElse(
       sys.error("CuratedIndexes: bootstrap first"))
-    // dedup verdicts compute eagerly; the dedup INDEX-WRITE phase comes
-    // back as a thunk so it can overlap the other families' stagings
-    val (verdicts, dedupThunk) = IndexedDedup.stageBatchDeferred(spark,
-      idx.dedup, batch, batchSeq, k, threshold, maxShingleDf,
-      snapshot = Some(snap))
-    dedupThunk.foreach { thunk =>
-      val keptIds = verdicts.where(col("status") === "kept").select("doc_id")
-      val kept = batch.join(keptIds, Seq("doc_id"), "left_semi")
-      // ALL families' stagings overlap on the shared stage pool (guide
-      // §2.6, OPTIMIZATION r15): they stage DISJOINT directories from
-      // the same committed snapshot and nothing is visible before the
-      // one manifest rename. The crash hooks keep their launch-order
-      // positions (dedup writes launched → bm25 launched → ann), and
-      // every exception path quiesces the in-flight futures so a
-      // crashed batch never races its replay's overwrite.
-      val fMd = graft.ops.Exec.fork(thunk())
-      try testCrashBetweenFamilies()
-      catch { case t: Throwable => graft.ops.Exec.quiesce(fMd); throw t }
-      val fMb = graft.ops.Exec.fork(
-        Bm25Index.stageMerge(spark, idx.bm25, kept, batchSeq,
-          maxTermDf, snap).getOrElse(
-          sys.error("CuratedIndexes: dedup staged but bm25 saw the batch " +
-            "as committed — manifest batchSeq out of sync")))
-      try testCrashBeforeAnnFamily()
-      catch { case t: Throwable =>
-        graft.ops.Exec.quiesce(fMb); graft.ops.Exec.quiesce(fMd); throw t
+    val writes = snap.batchSeq < batchSeq // false: committed replay
+    val forks = new Forks
+    val fPrepB = Option.when(writes)(forks(
+      Bm25Index.prepareMerge(spark, idx.bm25, batch, snap)))
+    val fPrepA = idx.ann.filter(_ => writes).map(a => forks(
+      IvfIndex.prepareMerge(annVecs.get, "doc_id", a.vec, a.centroids,
+        batchSeq)))
+    var verdicts: DataFrame = null
+    var ok = false
+    try {
+      // dedup verdicts compute eagerly; the dedup INDEX-WRITE phase
+      // comes back as a thunk so it overlaps the other families' finish
+      // steps: all stage DISJOINT directories from the same committed
+      // snapshot and nothing is visible before the one manifest rename
+      val (v, kept, dedupThunk) = IndexedDedup.stageBatchDeferred(spark,
+        idx.dedup, batch, batchSeq, k, threshold, maxShingleDf,
+        snapshot = Some(snap))
+      verdicts = v
+      dedupThunk.foreach { thunk =>
+        val fMd = forks(thunk())
+        testCrashBetweenFamilies()
+        val fMb = forks(Bm25Index.finishMerge(spark, idx.bm25,
+          Exec.await(fPrepB.get), Some(kept), maxTermDf, snap))
+        testCrashBeforeAnnFamily()
+        val ma = idx.ann.map(a => a.name -> IvfIndex.finishMerge(
+          Exec.await(fPrepA.get), Some(kept), a.root, batchSeq, Some(snap),
+          a.name)).toMap
+        val md = Exec.await(fMd)
+        val mb = Exec.await(fMb)
+        // THE commit point: every family + the batch id flip together,
+        // CAS'd against the one snapshot all families staged from
+        idx.dedup.manifest.commit(batchSeq, md ++ mb ++ ma,
+          expectedVersion = Some(snap.version))
+        gcAll(spark, idx)
       }
-      val ma =
-        try idx.ann.map { a =>
-          val keptVecs = annVecs.get.join(keptIds, Seq("doc_id"), "left_semi")
-          a.name -> IvfIndex.stageMerge(keptVecs, "doc_id", a.vec,
-            a.centroids, a.root, batchSeq, Some(snap), a.name).getOrElse(
-            sys.error("CuratedIndexes: dedup staged but ann saw the batch " +
-              "as committed — manifest batchSeq out of sync"))
-        }.toMap
-        catch { case t: Throwable =>
-          graft.ops.Exec.quiesce(fMb); graft.ops.Exec.quiesce(fMd); throw t
-        }
-      val md =
-        try graft.ops.Exec.await(fMd)
-        catch { case t: Throwable => graft.ops.Exec.quiesce(fMb); throw t }
-      val mb = graft.ops.Exec.await(fMb)
-      // THE commit point: every family + the batch id flip together,
-      // CAS'd against the one snapshot all families staged from
-      idx.dedup.manifest.commit(batchSeq, md ++ mb ++ ma,
-        expectedVersion = Some(snap.version))
-      gcAll(spark, idx)
+      ok = true
+      verdicts
+    } finally {
+      forks.quiesceAll()
+      fPrepB.flatMap(_.value).flatMap(_.toOption).foreach(unpersist)
+      if (!ok && verdicts != null) unpersist(verdicts)
     }
-    verdicts
   }
 
   /** Takedown: remove the docs from the keep-set, the search index AND
@@ -194,33 +214,23 @@ object CuratedIndexes {
     // ALL families' retraction stagings overlap (guide §2.6), same
     // protocol shape as processBatch: disjoint staged directories, one
     // rename, exception paths quiesce in-flight futures
-    val fMd = graft.ops.Exec.fork(
-      IndexedDedup.stageRetract(spark, idx.dedup, retract, batchSeq,
-        k, maxShingleDf, retained, snap).get)
-    try testCrashBetweenFamilies()
-    catch { case t: Throwable => graft.ops.Exec.quiesce(fMd); throw t }
-    val fMb = graft.ops.Exec.fork(
-      Bm25Index.stageRetract(spark, idx.bm25, retract, batchSeq,
-        maxTermDf, retained, snap).get)
-    try testCrashBeforeAnnFamily()
-    catch { case t: Throwable =>
-      graft.ops.Exec.quiesce(fMb); graft.ops.Exec.quiesce(fMd); throw t
-    }
-    val ma =
-      try idx.ann.map { a =>
+    val forks = new Forks
+    try {
+      val fMd = forks(IndexedDedup.stageRetract(spark, idx.dedup, retract,
+        batchSeq, k, maxShingleDf, retained, snap).get)
+      testCrashBetweenFamilies()
+      val fMb = forks(Bm25Index.stageRetract(spark, idx.bm25, retract,
+        batchSeq, maxTermDf, retained, snap).get)
+      testCrashBeforeAnnFamily()
+      val ma = idx.ann.map { a =>
         a.name -> IvfIndex.stageDelete(retractVecs.get, "doc_id", a.vec,
           a.centroids, a.root, batchSeq, Some(snap), a.name).get
       }.toMap
-      catch { case t: Throwable =>
-        graft.ops.Exec.quiesce(fMb); graft.ops.Exec.quiesce(fMd); throw t
-      }
-    val md =
-      try graft.ops.Exec.await(fMd)
-      catch { case t: Throwable => graft.ops.Exec.quiesce(fMb); throw t }
-    val mb = graft.ops.Exec.await(fMb)
-    idx.dedup.manifest.commit(batchSeq, md ++ mb ++ ma,
-      expectedVersion = Some(snap.version))
-    gcAll(spark, idx)
+      idx.dedup.manifest.commit(batchSeq,
+        Exec.await(fMd) ++ Exec.await(fMb) ++ ma,
+        expectedVersion = Some(snap.version))
+      gcAll(spark, idx)
+    } finally forks.quiesceAll()
   }
 
   /** ANN REBUILD UNDER THE SHARED MANIFEST (VERDICT r14 #3) — the

@@ -132,6 +132,32 @@ object Dedup {
       .select("doc_a", "doc_b", "hamming")
   }
 
+  /** Driver union-find with union by minimum root: every root is the
+    * least id of its set, so `find(d)` is min-label connected
+    * components' label, with no round limit. For edge sets already on
+    * the driver (a batch's thresholded near-dup pairs); a corpus-wide
+    * graph stays on [[connectedComponents]]. */
+  private[graft] final class MinUnionFind {
+    private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+
+    def union(a: Long, b: Long): Unit = {
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+
+    /** (node, label) for every node that took part in a union. */
+    def labels: Seq[(Long, Long)] = parent.keys.toSeq.map(n => (n, find(n)))
+  }
+
   /** Connected components over a near-dup pair graph — the clustering
     * step that turns pairwise matches into dedup groups (keep
     * min-id per component). Iterative min-label propagation: each
@@ -222,8 +248,9 @@ object Dedup {
     *     drop-vs-keep shingle equi-join plus a drop-vs-drop self-join.
     *     Keep-vs-keep pairs — the quadratic bulk of a full re-run — never
     *     materialize; cost is O(drop shingles × their index matches).
-    *   - Connected components runs over only the new edges, so rounds ×
-    *     work track the DROP's component closure, not the corpus.
+    *   - Components run over only the new edges (collected once, then a
+    *     driver [[MinUnionFind]]), so work tracks the DROP's component
+    *     closure, not the corpus, and no chain is too long to resolve.
     *
     * Invariants the caller owns (both hold in any append-only pipeline):
     * ids are unique across keep ∪ drop and new ids sort after keep ids;
@@ -266,8 +293,17 @@ object Dedup {
       .where(col("c").cast("double")
         / (col("na") + col("nb") - col("c")).cast("double") >= threshold)
       .select("doc_a", "doc_b")
-    val labels = connectedComponents(edges, "doc_a", "doc_b")
+    // edges touch the drop only, so they are collected once and labelled
+    // by the driver union-find: no round limit on a long near-dup chain
+    val uf = new MinUnionFind
+    edges.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+      .collect().foreach(r => uf.union(r.getLong(0), r.getLong(1)))
     org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(allEx)
+    val labels = {
+      val spark = keep.sparkSession
+      import spark.implicits._
+      uf.labels.toDF("node", "label")
+    }
     val verdicts = dropD.select(col("doc"))
       .join(labels.withColumnRenamed("node", "doc"), Seq("doc"), "left")
       .withColumn("rep_id", coalesce(col("label"), col("doc")))

@@ -182,8 +182,8 @@ object IndexedDedup {
                              (sink: DataFrame => Unit): DataFrame = {
     val snap0 = idx.manifest.read().getOrElse(
       sys.error(s"IndexedDedup: no committed manifest at ${idx.manifest.root}"))
-    val (verdicts, thunk) = stageBatchDeferred(spark, idx, batch, batchSeq,
-      k, threshold, maxShingleDf, snapshot = Some(snap0))
+    val (verdicts, _, thunk) = stageBatchDeferred(spark, idx, batch,
+      batchSeq, k, threshold, maxShingleDf, snapshot = Some(snap0))
     val fSink = graft.ops.Exec.fork(sink(verdicts))
     try thunk.foreach { t =>
       val m = t()
@@ -207,8 +207,8 @@ object IndexedDedup {
                                 asOf: Option[IndexManifest.State] = None,
                                 snapshot: Option[IndexManifest.State] = None)
       : (DataFrame, Option[Map[String, Set[String]]]) = {
-    val (verdicts, thunk) = stageBatchDeferred(spark, idx, batch, batchSeq,
-      k, threshold, maxShingleDf, asOf, snapshot)
+    val (verdicts, _, thunk) = stageBatchDeferred(spark, idx, batch,
+      batchSeq, k, threshold, maxShingleDf, asOf, snapshot)
     (verdicts, thunk.map(_.apply()))
   }
 
@@ -221,13 +221,15 @@ object IndexedDedup {
     * all of them write disjoint fresh-generation directories and
     * nothing is visible before the caller's single manifest rename.
     * The thunk must be invoked exactly once (None = read-only replay,
-    * already released). */
+    * already released). The middle element is the batch's kept doc
+    * ids, driver-held, so a caller can restrict its own staging to
+    * them without another Spark job. */
   private[graft] def stageBatchDeferred(spark: SparkSession, idx: Indexes,
                                 batch: DataFrame, batchSeq: Long, k: Int,
                                 threshold: Double, maxShingleDf: Int,
                                 asOf: Option[IndexManifest.State] = None,
                                 snapshot: Option[IndexManifest.State] = None)
-      : (DataFrame, Option[() => Map[String, Set[String]]]) = {
+      : (DataFrame, Array[Long], Option[() => Map[String, Set[String]]]) = {
     // `snapshot` = the committed state the CALLER already read (so its
     // CAS commit is against exactly the version staged from); `asOf`
     // still wins — a time-travel read is always read-only
@@ -300,29 +302,18 @@ object IndexedDedup {
         lit(null).cast("long").as("doc_b")))
       .collect()
     org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(bEx)
-    // ---- components by a driver union-find, union by minimum root:
-    // every root is the least id of its set, so find(d) is min-label
-    // connected components' label, with no round limit
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var y = x
-      while (y != r) { val up = parent(y); parent(y) = r; y = up }
-      r
-    }
+    // ---- components by the driver union-find (min-label connected
+    // components, no round limit)
+    val uf = new Dedup.MinUnionFind
     val batchIds = scala.collection.mutable.HashSet.empty[Long]
     links.foreach { row =>
       if (row.isNullAt(1)) batchIds += row.getLong(0)
-      else {
-        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
+      else uf.union(row.getLong(0), row.getLong(1))
     }
     // a rep outside the batch is a keep doc: only keep docs that passed
     // the doc-index size lookup have edges
     val rows = batchIds.toSeq.map { d =>
-      val rep = find(d)
+      val rep = uf.find(d)
       Row(d, if (rep == d) "kept" else if (batchIds(rep)) "dup_in_drop"
         else "dup_of_keep", rep)
     }
@@ -405,7 +396,7 @@ object IndexedDedup {
       Map(idx.shingleName -> newLiveS, idx.docName -> newLiveD)
       } finally release()
     } else { release(); None }
-    (verdicts, staged)
+    (verdicts, kept, staged)
   }
 
   /** RETRACTION (VERDICT r12 #1 — takedown/GDPR/corpus-refresh): remove

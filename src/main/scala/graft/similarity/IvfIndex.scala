@@ -179,51 +179,75 @@ object IvfIndex {
     val spark = batch.sparkSession
     val mf = manifestOf(spark, root)
     val snap = mf.read()
-    stageMerge(batch, id, vec, centroids, root, batchSeq, snap, IvfIx,
-      encodeWith).foreach { bs =>
-      testCrashBeforeCommit()
-      // THE commit point — CAS against the snapshot this batch staged
-      // from (a zombie writer that lost the single-writer contract
-      // publishes nothing)
-      mf.commit(batchSeq, Map(IvfIx -> bs),
-        expectedVersion = Some(snap.map(_.version).getOrElse(0L)))
-      gc(spark, root, mf.retainedUnion(IvfIx))
-    }
+    if (snap.exists(_.batchSeq >= batchSeq)) return // committed replay
+    val bs = finishMerge(prepareMerge(batch, id, vec, centroids, batchSeq,
+      encodeWith), None, root, batchSeq, snap, IvfIx)
+    testCrashBeforeCommit()
+    // THE commit point — CAS against the snapshot this batch staged
+    // from (a zombie writer that lost the single-writer contract
+    // publishes nothing)
+    mf.commit(batchSeq, Map(IvfIx -> bs),
+      expectedVersion = Some(snap.map(_.version).getOrElse(0L)))
+    gc(spark, root, mf.retainedUnion(IvfIx))
   }
 
-  /** [[mergeBatch]] with the manifest commit LEFT TO THE CALLER
-    * (cross-family single-manifest pipelines): returns the full new
-    * directory set for `name`, or None for a committed replay. The
-    * caller must gc against `manifest.retainedUnion(name)` after its
-    * commit lands. */
-  private[graft] def stageMerge(batch: DataFrame, id: String, vec: String,
-                                centroids: Seq[(Int, Array[Double])],
-                                root: String, batchSeq: Long,
-                                snap: Option[IndexManifest.State],
-                                name: String,
-                                encodeWith: Option[Pq.Codebooks] = None)
-      : Option[Set[String]] = {
-    if (snap.exists(_.batchSeq >= batchSeq)) return None // committed replay
-    val spark = batch.sparkSession
-    if (snap.isEmpty) requireNoLegacyLayout(spark, root) // ADVICE r14
-    val live = liveMap(snap, name)
+  /** What [[prepareMerge]] learned about a batch: its assigned rows
+    * (`id`, vector, `cell`, `__ver`, optional `codes` — a lazy frame)
+    * and, driver-held, every row's (id, cell). */
+  private[graft] final case class MergePrep(id: String,
+                                            assigned: DataFrame,
+                                            cells: Seq[(Any, Int)])
+
+  /** The READ-ONLY half of a merge, over the whole batch: assign every
+    * row against the frozen centroids and collect each id's cell (one
+    * job, bounded by the batch's id count). Writes nothing, so a caller
+    * may run it before it knows which ids it keeps; the rows are not
+    * pinned — the one write in [[finishMerge]] recomputes the cheap
+    * assignment arithmetic instead of paying a pinning job. */
+  private[graft] def prepareMerge(batch: DataFrame, id: String, vec: String,
+                                  centroids: Seq[(Int, Array[Double])],
+                                  batchSeq: Long,
+                                  encodeWith: Option[Pq.Codebooks] = None)
+      : MergePrep = {
     val assigned0 = batch
       .select(col(id), col(vec))
       .withColumn("cell", Clustering.assignCell(col(vec), centroids))
       .withColumn("__ver", lit(batchSeq))
     val assigned = encodeWith.fold(assigned0)(cb =>
       assigned0.withColumn("codes", Pq.encode(col(vec), cb)))
-    val cells = assigned.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSet // bounded by nCells, never batch size
-    if (cells.isEmpty) return Some(live.values.toSet) // empty batch: seq still advances
+    MergePrep(id, assigned, assigned.select(col(id), col("cell")).collect()
+      .map(r => r.get(0) -> r.getInt(1)).toSeq)
+  }
+
+  /** The WRITE half of a merge: stage the touched cells for the `kept`
+    * ids of a [[prepareMerge]] (None = every id) and return the full new
+    * directory set for `name` — the caller owns the manifest commit and
+    * must gc against `manifest.retainedUnion(name)` after it lands. The
+    * touched cells come off the driver-held assignment, so the write is
+    * the only job. */
+  private[graft] def finishMerge(prep: MergePrep, kept: Option[Array[Long]],
+                                 root: String, batchSeq: Long,
+                                 snap: Option[IndexManifest.State],
+                                 name: String): Set[String] = {
+    val spark = prep.assigned.sparkSession
+    if (snap.isEmpty) requireNoLegacyLayout(spark, root) // ADVICE r14
+    val live = liveMap(snap, name)
+    val (rows, cells) = kept match {
+      case None => (prep.assigned, prep.cells.map(_._2).toSet)
+      case Some(ks) =>
+        val keep: Set[Any] = ks.toSet
+        (prep.assigned.where(array_contains(typedLit(ks), col(prep.id))),
+          prep.cells.collect { case (i, c) if keep(i) => c }.toSet)
+    }
+    if (cells.isEmpty) return live.values.toSet // empty batch: seq still advances
     val oldDirs = cells.toSeq.sorted.flatMap(live.get).map(d => s"$root/$d")
     val old =
-      if (oldDirs.isEmpty) assigned.limit(0)
+      if (oldDirs.isEmpty) rows.limit(0)
       else spark.read.parquet(oldDirs: _*)
-    val merged = graft.ops.Merge.upsertLatest(old, assigned, id, "__ver", id)
+    val merged = graft.ops.Merge.upsertLatest(old, rows, prep.id, "__ver", prep.id)
     val stagedDirs = stageCells(spark, root, merged, batchSeq)
     val untouched = live.collect { case (c, d) if !cells(c) => d }.toSet
-    Some(untouched ++ stagedDirs)
+    untouched ++ stagedDirs
   }
 
   /** ROW DELETION (VERDICT r12 #1, similarity family — takedown/GDPR):

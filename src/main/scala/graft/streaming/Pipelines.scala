@@ -7,8 +7,8 @@ import org.apache.spark.sql.types._
 
 /** Structured Streaming pipelines reproducing the reference's E1/E2 flows
   * (SURVEY.md §3) with the reliability the reference lacks: checkpoints
-  * (T3), watermark dedup instead of driver-local state (T4/P3), and
-  * event-time windows (T6).
+  * (T3) and watermark dedup instead of driver-local state (T4/P3);
+  * event-time bars are the streaming queries' own windows (q107).
   *
   * All transforms are source-agnostic — they take any streaming DataFrame
   * with the wire schema, so tests drive them from MemoryStream/file
@@ -69,21 +69,6 @@ object Pipelines {
                      watermark: String = "10 minutes"): DataFrame =
     stream.withWatermark(ts, watermark)
       .dropDuplicatesWithinWatermark(Seq(key, ts))
-
-  /** T6: event-time tumbling bars per key (what `features_engineering.py`
-    * promises). Append mode + watermark → emits each bar once, when it
-    * can no longer change. */
-  def windowedBars(stream: DataFrame, ts: String, key: String, value: String,
-                   width: String, watermark: String = "10 minutes"): DataFrame =
-    stream.withWatermark(ts, watermark)
-      .groupBy(window(col(ts), width), col(key))
-      .agg(
-        min(col(value)).as("low"),
-        max(col(value)).as("high"),
-        count(lit(1)).as("n_ticks"),
-        sum(col(value)).as("sum_value"))
-      .select(col("window.start").as("bar_start"), col(key), col("low"),
-        col("high"), col("n_ticks"), col("sum_value"))
 
   /** E2 routing split (P7, `mongo_stream_etl.py:34-39`) as a foreachBatch
     * sink: one pass, two partitioned parquet outputs. `partitionBy(key)`

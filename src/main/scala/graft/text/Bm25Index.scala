@@ -40,6 +40,15 @@ import graft.dedup.{IndexManifest, LinearHashIndex}
   * near-stopwords ever cross it (posting rows per term ≤ cap, per
   * shard ≤ cap/B ≪ rowCap).
   *
+  * Per-batch merge, in two steps: [[prepareMerge]] is read-only and
+  * pins ONE term-keyed frame over the whole batch (batch entries of
+  * docs not yet indexed, live-posting df, tombstone flag per term);
+  * [[finishMerge]] takes the kept doc ids and stages the term, doc and
+  * stats rewrites off that frame with no new shuffle. A cross-family
+  * caller ([[graft.curation.CuratedIndexes]]) runs the prepare step
+  * while its dedup verdicts are still being computed; [[mergeBatch]]
+  * runs both back to back with every doc kept.
+  *
   * Crash safety: rewrites land in fresh bucket generations; the batch
   * becomes visible only when the single-file manifest rename commits
   * all three indexes + the batch id together, and a replay of an
@@ -100,13 +109,23 @@ object Bm25Index {
       namePrefix + "term", namePrefix + "doc", namePrefix + "stats")
 
   /** Per-doc term frequencies + doc length from whitespace tokens (the
-    * q92 tokenizer — [[TextAnalysis.tokens]]). */
+    * q92 tokenizer — [[TextAnalysis.tokens]]); `first` marks each doc's
+    * least term, one row per doc. */
   private def docTerms(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         TextAnalysis.tokens(col("text")).as("__toks"))
       .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
+        array_min(col("__toks")).as("__min"),
         explode(col("__toks")).as("term"))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
+      .groupBy("doc_id", "dl", "__min", "term").agg(count(lit(1)).as("tf"))
+      .select(col("doc_id"), col("dl"), col("term"), col("tf"),
+        (col("term") === col("__min")).as("first"))
+
+  /** The B posting-shard keys of every term in `terms`. */
+  private def shardKeys(spark: SparkSession, terms: DataFrame): DataFrame =
+    terms.crossJoin(
+        spark.range(Shards).select(col("id").cast("string").as("sh")))
+      .select(concat(col("term"), lit("#"), col("sh")).as("tk"))
 
   /** Seed all three indexes from the initial corpus; manifest version 1
     * (batchSeq 0) makes them visible atomically. */
@@ -134,7 +153,8 @@ object Bm25Index {
         .select(tkCol(col("term"), col("doc_id")).as("tk"),
           col("term"), col("doc_id"), col("tf"))
         .unionByName(tombRows(hot0)))
-    val dls = dt.select("doc_id", "dl").distinct().localCheckpoint(true)
+    val dls = dt.where(col("first")).select("doc_id", "dl")
+      .localCheckpoint(true)
     val liveD = idx.doc.bootstrap(dls)
     val liveG = idx.stats.bootstrap(
       dls.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl"))
@@ -146,75 +166,103 @@ object Bm25Index {
   /** Extend the index with one micro-batch of NEW documents (one atomic
     * manifest commit; a replay of a committed batch is a no-op, and doc
     * ids already indexed are skipped, so retries and overlapping feeds
-    * both converge). */
+    * both converge): [[prepareMerge]] then [[finishMerge]] with every
+    * doc kept. */
   def mergeBatch(spark: SparkSession, idx: Indexes, batch: DataFrame,
                  batchSeq: Long, maxTermDf: Long): Unit = {
     val snap = idx.manifest.read().getOrElse(
       sys.error(s"Bm25Index: no committed manifest at ${idx.manifest.root}"))
-    stageMerge(spark, idx, batch, batchSeq, maxTermDf, snap).foreach { m =>
-      // THE commit point: all three indexes + the batch id flip
-      // together, CAS'd against the staged-from version (a zombie
-      // writer publishes nothing); gc keeps the retained-snapshot
-      // union (time travel stays readable)
-      idx.manifest.commit(batchSeq, m, expectedVersion = Some(snap.version))
-      idx.term.gc(idx.manifest.retainedUnion(idx.termName))
-      idx.doc.gc(idx.manifest.retainedUnion(idx.docName))
-      idx.stats.gc(idx.manifest.retainedUnion(idx.statsName))
-    }
+    if (snap.batchSeq >= batchSeq) return // committed replay
+    val perT = prepareMerge(spark, idx, batch, snap)
+    val m =
+      try finishMerge(spark, idx, perT, None, maxTermDf, snap)
+      finally unpersist(perT)
+    // THE commit point: all three indexes + the batch id flip together,
+    // CAS'd against the staged-from version (a zombie writer publishes
+    // nothing); gc keeps the retained-snapshot union (time travel stays
+    // readable)
+    idx.manifest.commit(batchSeq, m, expectedVersion = Some(snap.version))
+    idx.term.gc(idx.manifest.retainedUnion(idx.termName))
+    idx.doc.gc(idx.manifest.retainedUnion(idx.docName))
+    idx.stats.gc(idx.manifest.retainedUnion(idx.statsName))
   }
 
-  /** [[mergeBatch]] with the manifest commit LEFT TO THE CALLER (None =
-    * committed replay, nothing to do). The caller must gc each index
-    * against `manifest.retainedUnion` after its commit lands. */
-  private[graft] def stageMerge(spark: SparkSession, idx: Indexes,
-                                batch: DataFrame, batchSeq: Long,
-                                maxTermDf: Long, snap: IndexManifest.State)
-      : Option[Map[String, Set[String]]] = {
-    if (snap.batchSeq >= batchSeq) return None // committed replay
+  /** The READ-ONLY half of a merge, over the whole batch: ONE pinned
+    * term-keyed pass over the batch's doc terms ∪ the probed postings.
+    * Per batch term it holds `e`, the batch entries (doc_id, tf, dl,
+    * first) of docs not already in the doc index (`first` marks each
+    * doc's least term, so the doc-length rows come off the same frame
+    * with no distinct); `dfk`, its count of live postings; and `tomb`.
+    * Groups without a batch entry are the co-bucketed rows the probe
+    * reads along, dropped before the pin. Writes nothing, so a caller
+    * may run it before it knows which docs it keeps; the caller
+    * releases the returned frame once [[finishMerge]] has returned. */
+  private[graft] def prepareMerge(spark: SparkSession, idx: Indexes,
+                                  batch: DataFrame,
+                                  snap: IndexManifest.State): DataFrame = {
+    val bIds = batch.select("doc_id").distinct()
+    val already = idx.doc.probe(bIds, snap.buckets(idx.docName))
+      .join(bIds, Seq("doc_id"), "left_semi").select("doc_id")
+    val nt = docTerms(batch).join(broadcast(already), Seq("doc_id"), "left_anti")
+    val posts = idx.term.probe(shardKeys(spark, nt.select("term").distinct()),
+      snap.buckets(idx.termName))
+    val entries = nt.select(col("term"),
+      struct("doc_id", "tf", "dl", "first").as("__e"),
+      lit(null).cast("long").as("__p"))
+    entries
+      .unionByName(posts.select(col("term"),
+        lit(null).cast(entries.schema("__e").dataType).as("__e"),
+        col("doc_id").as("__p")))
+      .groupBy("term")
+      .agg(collect_list(col("__e")).as("e"),
+        count(when(col("__p") >= 0L, 1)).as("dfk"),
+        coalesce(max(col("__p") === -1L), lit(false)).as("tomb"))
+      .where(size(col("e")) > 0)
+      .localCheckpoint(true)
+  }
+
+  /** The WRITE half of a merge: stage the rewrites for the `kept` docs
+    * of a [[prepareMerge]] frame (None = every doc) and return the
+    * bucket sets for the caller's single manifest commit; the caller
+    * gcs each index against `manifest.retainedUnion` after it lands.
+    * Everything is read off the pinned frame with no new shuffle: df
+    * counts KEPT docs only — batch-relative df is current postings +
+    * kept entries, monotone, so crossing the cap tombstones the term
+    * for good — and the term rewrite's key set is the kept terms, so it
+    * touches the same buckets a merge of the kept docs alone would. */
+  private[graft] def finishMerge(spark: SparkSession, idx: Indexes,
+                                 perT: DataFrame, kept: Option[Array[Long]],
+                                 maxTermDf: Long, snap: IndexManifest.State)
+      : Map[String, Set[String]] = {
     val liveT = snap.buckets(idx.termName)
     val liveD = snap.buckets(idx.docName)
     val liveG = snap.buckets(idx.statsName)
-    val bIds = batch.select("doc_id").distinct()
-    val already = idx.doc.probe(bIds, liveD)
-      .join(bIds, Seq("doc_id"), "left_semi").select("doc_id")
-    val nt = docTerms(batch)
-      .join(broadcast(already), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    // batch-relative df: current postings (probe) + this batch's docs;
-    // monotone, so crossing the cap tombstones the term for good
-    val terms = nt.select("term").distinct()
-    val probeKeys = terms.crossJoin(
-        spark.range(Shards).select(col("id").cast("string").as("sh")))
-      .select(concat(col("term"), lit("#"), col("sh")).as("tk"))
-    val pm = idx.term.probe(probeKeys, liveT)
-      .join(broadcast(terms), Seq("term"))
-    val tomb = pm.where(col("doc_id") === -1L).select("term")
-    val posts = pm.where(col("doc_id") >= 0L)
-    val dfKeep = posts.groupBy("term").agg(count(lit(1)).as("dfk"))
-    val addc = nt.groupBy("term").agg(count(lit(1)).as("addc"))
-    val newPerm = addc.join(dfKeep, Seq("term"), "left")
-      .where(coalesce(col("dfk"), lit(0L)) + col("addc") > maxTermDf)
-      .select("term").join(broadcast(tomb), Seq("term"), "left_anti")
-      .localCheckpoint(true)
-    val tombAfter = tomb.unionByName(newPerm).distinct()
+    val ke = kept.fold(col("e"))(ks =>
+      filter(col("e"), x => array_contains(typedLit(ks), x.getField("doc_id"))))
+    // `after` = tombstoned once this batch commits
+    val perK = perT.select(col("term"), col("tomb"), ke.as("ke"),
+        (col("tomb") || col("dfk") + size(ke) > maxTermDf).as("after"))
+      .where(size(col("ke")) > 0)
+    val newPerm = perK.where(col("after") && !col("tomb")).select("term")
+    val keptEx = perK.select(col("term"), col("after"),
+      explode(col("ke")).as("x"))
     // the three rewrites touch DISJOINT indexes and nothing is visible
     // before the single manifest rename, so they OVERLAP on the shared
     // stage pool (guide §2.6, OPTIMIZATION r15 — the per-batch path is
     // job-latency-bound); exception paths quiesce in-flight futures
-    val fTerm = graft.ops.Exec.fork(idx.term.rewrite(probeKeys, liveT) { old =>
-      old.join(broadcast(newPerm), Seq("term"), "left_anti")
-        .unionByName(nt
-          .join(broadcast(tombAfter), Seq("term"), "left_anti")
-          .select(tkCol(col("term"), col("doc_id")).as("tk"),
-            col("term"), col("doc_id"), col("tf")))
-        .unionByName(tombRows(newPerm))
-    })
+    val fTerm = graft.ops.Exec.fork(
+      idx.term.rewrite(shardKeys(spark, perK.select("term")), liveT) { old =>
+        old.join(broadcast(newPerm), Seq("term"), "left_anti")
+          .unionByName(keptEx.where(!col("after"))
+            .select(tkCol(col("term"), col("x.doc_id")).as("tk"),
+              col("term"), col("x.doc_id").as("doc_id"), col("x.tf").as("tf")))
+          .unionByName(tombRows(newPerm))
+      })
     try {
       testCrashBetweenIndexWrites()
     } catch { case t: Throwable => graft.ops.Exec.quiesce(fTerm); throw t }
-    val newDl =
-      try nt.select("doc_id", "dl").distinct().localCheckpoint(true)
-      catch { case t: Throwable => graft.ops.Exec.quiesce(fTerm); throw t }
+    val newDl = keptEx.where(col("x.first"))
+      .select(col("x.doc_id").as("doc_id"), col("x.dl").as("dl"))
     val (newLiveT, newLiveD, newLiveG) = try {
       val fDoc = graft.ops.Exec.fork(
         idx.doc.rewrite(newDl.select("doc_id"), liveD) { old =>
@@ -241,9 +289,8 @@ object Bm25Index {
       (t0, d0, graft.ops.Exec.await(fStats))
     } catch { case t: Throwable => graft.ops.Exec.quiesce(fTerm); throw t }
     testCrashBeforeManifestCommit()
-    unpersist(nt); unpersist(newPerm); unpersist(newDl)
-    Some(Map(idx.termName -> newLiveT, idx.docName -> newLiveD,
-      idx.statsName -> newLiveG))
+    Map(idx.termName -> newLiveT, idx.docName -> newLiveD,
+      idx.statsName -> newLiveG)
   }
 
   /** RETRACTION (VERDICT r12 #1): remove `retract`'s docs (doc_id,
@@ -299,9 +346,7 @@ object Bm25Index {
       .join(broadcast(presentIds), Seq("doc_id"), "left_semi")
       .localCheckpoint(true)
     val terms = rt.select("term").distinct()
-    val probeKeys = terms.crossJoin(
-        spark.range(Shards).select(col("id").cast("string").as("sh")))
-      .select(concat(col("term"), lit("#"), col("sh")).as("tk"))
+    val probeKeys = shardKeys(spark, terms)
     val pm = idx.term.probe(probeKeys, liveT)
       .join(broadcast(terms), Seq("term"))
     val tombTouched = pm.where(col("doc_id") === -1L).select("term")
@@ -331,7 +376,7 @@ object Bm25Index {
       .select(tkCol(col("term"), col("doc_id")).as("tk"),
         col("term"), col("doc_id"), col("tf"))
     // disjoint-index rewrites overlap (guide §2.6) — same protocol
-    // shape as stageMerge's staged rewrites above
+    // shape as finishMerge's staged rewrites above
     val fTerm = graft.ops.Exec.fork(idx.term.rewrite(probeKeys, liveT) { old =>
       // drop the retracted docs' postings and the un-tombstoned
       // tombstone rows (a tombstoned term has ONLY its tombstone row),
@@ -453,10 +498,7 @@ object Bm25Index {
     val q = queries.select(col("query_id").cast("long").as("query_id"),
       col("term")).distinct().localCheckpoint(true)
     val terms = q.select("term").distinct()
-    val probeKeys = terms.crossJoin(
-        spark.range(Shards).select(col("id").cast("string").as("sh")))
-      .select(concat(col("term"), lit("#"), col("sh")).as("tk"))
-    val pm = idx.term.probe(probeKeys, snap.buckets(idx.termName))
+    val pm = idx.term.probe(shardKeys(spark, terms), snap.buckets(idx.termName))
       .join(broadcast(terms), Seq("term"))
     val posts = pm.where(col("doc_id") >= 0L).localCheckpoint(true)
     val dfT = posts.groupBy("term").agg(count(lit(1)).as("df"))

@@ -96,6 +96,38 @@ class Bm25IndexSpec extends AnyFunSuite {
       () => Bm25Index.testCrashBeforeManifestCommit = () => ())
   }
 
+  test("CuratedIndexes: df counts KEPT docs only — a batch whose " +
+    "duplicates alone would push a term over the cap leaves it " +
+    "untombstoned, and the index equals a bootstrap of the kept corpus") {
+    import graft.curation.CuratedIndexes
+    val keep = Seq(1L -> "z a1 a2 a3", 2L -> "z b1 b2 b3")
+    // 10 is kept; 11 and 12 copy it. df(z) over kept docs = 3 = cap, over
+    // every batch doc 5 > cap
+    val batch = Seq(10L -> "z c1 c2 c3 c4", 11L -> "z c1 c2 c3 c4",
+      12L -> "z c1 c2 c3 c4")
+    val idx = CuratedIndexes.bootstrap(spark, mkDocs(keep), k = 2,
+      maxShingleDf = 10, maxTermDf = 3L, tmp("b25k_si_"), tmp("b25k_di_"),
+      tmp("b25k_t_"), tmp("b25k_d_"), tmp("b25k_g_"), tmp("b25k_m_"),
+      rowCap = 64L)
+    val v = CuratedIndexes.processBatch(spark, idx, mkDocs(batch), 1L,
+        k = 2, threshold = 0.3, maxShingleDf = 10, maxTermDf = 3L)
+      .as[(Long, String, Long)].collect().toSet
+    assert(v == Set((10L, "kept", 10L), (11L, "dup_in_drop", 10L),
+      (12L, "dup_in_drop", 10L)))
+    val st = idx.dedup.manifest.read().get
+    val b = idx.bm25
+    val got = (
+      b.term.allRows(st.buckets(b.termName))
+        .as[(String, String, Long, Long)].collect().toSet,
+      b.doc.allRows(st.buckets(b.docName)).as[(Long, Long)].collect().toSet,
+      b.stats.allRows(st.buckets(b.statsName))
+        .as[(String, Long, Long)].collect().toSet)
+    assert(!got._1.exists(_._3 == -1L), s"a term was tombstoned: ${got._1}")
+    val want = snapshot(boot(mkDocs(keep :+ batch.head), cap = 3L))
+    assert(got == ((want._3, want._4, want._5)),
+      "merged index differs from a bootstrap of the kept corpus")
+  }
+
   // ------------------------------------------------ probe IO
   private def recordsRead(body: => Unit): Long = {
     val recs = new java.util.concurrent.atomic.AtomicLong(0)

@@ -366,6 +366,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (13L, "kept", 13L)))
   }
 
+  test("incrementalDedup: a 25-doc near-duplicate chain in one drop " +
+    "resolves to its lowest id — no round limit on the components") {
+    val keep = Seq((1L, "k1 k2 k3 k4 k5 k6 k7 k8")).toDF("doc_id", "text")
+    // doc i = tokens 4i..4i+11: neighbours share 6 of 10 shingles
+    // (J = 0.43), docs two apart 2 (J = 0.11) — a 24-hop path, past the
+    // 20 rounds the Spark components would have run
+    val chain = (0 until 25).map(i =>
+        (100L + i, (4 * i until 4 * i + 12).map(t => s"t$t").mkString(" ")))
+      .toDF("doc_id", "text")
+    val v = Dedup.incrementalDedup(keep, chain, "doc_id", "text",
+        k = 3, threshold = 0.3, maxShingleDf = 20)
+      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    assert(v.size == 25 && v(100L) == ("kept", 100L))
+    assert((101L to 124L).forall(d => v(d) == ("dup_in_drop", 100L)), v)
+  }
+
   test("incrementalDedup EQUALS a full-corpus re-run when keep is deduped (sf0.001)") {
     // The theorem the operator rests on: with an internally deduped
     // keep-set, keep-keep pairs contribute no edges, so the incremental

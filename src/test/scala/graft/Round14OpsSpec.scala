@@ -344,6 +344,48 @@ class Round14OpsSpec extends AnyFunSuite {
     curatedAnnCrashCase(mergePath = false)
   }
 
+  test("CuratedIndexes: a crash at either family hook releases every " +
+    "pinned frame, the prepare steps' included; after the replay " +
+    "commits, gc leaves no uncommitted BM25 or IVF directory") {
+    import graft.curation.CuratedIndexes
+    // 22 is kept, 23 (a copy) is not: both families prepare over both
+    val b = mkDocs(Seq(22L -> "q r s t", 23L -> "q r s t"))
+    def step(i: CuratedIndexes.Indexes): DataFrame =
+      CuratedIndexes.processBatch(spark, i, b, 1L, k = 2, threshold = 0.3,
+        maxShingleDf = 4, maxTermDf = 64L,
+        annVecs = Some(curVecs(Seq(22L, 23L))))
+    final class InjectedCrash extends RuntimeException("injected")
+    val hooks: Seq[(() => Unit) => Unit] = Seq(
+      h => CuratedIndexes.testCrashBetweenFamilies = h,
+      h => CuratedIndexes.testCrashBeforeAnnFamily = h)
+    hooks.foreach { arm =>
+      val idx = curatedAnnBoot()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      arm(() => throw new InjectedCrash)
+      try intercept[InjectedCrash] { step(idx) }
+      finally arm(() => ())
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"a crashed batch left $leaked pinned")
+      val v = step(idx)
+      assert(v.where(col("status") === "kept").select("doc_id").as[Long]
+        .collect().toSet == Set(22L))
+      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(v)
+      assert(curState(idx) == ((Set(1L, 2L, 3L, 4L, 22L),
+        Set(1L, 2L, 3L, 4L, 22L), Set(1L, 2L, 3L, 22L))))
+      val mf = idx.dedup.manifest
+      def dirs(root: String): Set[String] =
+        new java.io.File(root).listFiles.filter(_.isDirectory)
+          .map(_.getName.stripPrefix("__lb=")).toSet
+      Seq(idx.bm25.term.root -> idx.bm25.termName,
+        idx.bm25.doc.root -> idx.bm25.docName,
+        idx.bm25.stats.root -> idx.bm25.statsName,
+        idx.ann.get.root -> idx.ann.get.name).foreach { case (root, nm) =>
+        val stray = dirs(root) -- mf.retainedUnion(nm)
+        assert(stray.isEmpty, s"$nm: uncommitted directories survive gc: $stray")
+      }
+    }
+  }
+
   // ---------------------------------------- q307 hybrid fusion
 
   test("q307: RRF fusion is integer-exact and consistent — rrf_micro " +

@@ -129,34 +129,42 @@ class StreamingSpec extends AnyFunSuite {
     // transformWithState processor whose TTL is enforced by the state
     // store itself. Requires RocksDB — the only provider the new API
     // supports; set-and-restore so other suites keep the default.
+    // The TTL is checked against each batch's timestamp, so the test
+    // waits until the batch that takes each row has committed: the
+    // first two rows land in back-to-back batches far inside the TTL,
+    // and the third is added a full TTL plus margin after the second
+    // was judged — no wall-clock race on a loaded machine.
+    val ttlMs = 8000L
     Pipelines.withRocksDBProvider(spark) {
       implicit val sc = spark.sqlContext
       val input = MemoryStream[(String, Long)]
       val stream = input.toDF().toDF("symbol", "ts")
       val filtered = Pipelines.highWatermarkFilterTws(spark, stream,
-        "symbol", "ts", ttlMs = 2000L)
+        "symbol", "ts", ttlMs)
       val name = "t_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // 500 ms trigger + quiesced stop: see the fMGWS TTL test above
+      // 500 ms trigger + quiesced stop: see the fMGWS TTL test above.
+      // processAllAvailable never returns here (a processing-time
+      // stateful query always runs another batch), so wait for the
+      // progress report whose source end offset is the added one
       val q = filtered.writeStream.outputMode("append").format("memory")
         .queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
         .start()
-      def awaitRows(n: Long): Unit = {
+      def judged(o: org.apache.spark.sql.connector.read.streaming.Offset): Unit = {
+        def done = Option(q.lastProgress)
+          .exists(_.sources.exists(_.endOffset == o.json))
         val deadline = System.currentTimeMillis() + 60000L
-        while (spark.table(name).count() < n &&
-          System.currentTimeMillis() < deadline) Thread.sleep(50L)
-        assert(spark.table(name).count() >= n, s"sink never reached $n rows")
+        while (!done && System.currentTimeMillis() < deadline) Thread.sleep(50L)
+        assert(done, s"no batch committed offset ${o.json}")
       }
       try {
-        input.addData(("AAPL", 200L))
-        awaitRows(1L)
+        judged(input.addData(("AAPL", 200L)))
         // within TTL, behind the watermark → dropped
-        input.addData(("AAPL", 150L))
+        judged(input.addData(("AAPL", 150L)))
         // idle past the TTL: the store expires AAPL's value state
-        Thread.sleep(4000L)
+        Thread.sleep(ttlMs + 2000L)
         // the SAME stale row now re-admits (key restarted cold)
-        input.addData(("AAPL", 150L))
-        awaitRows(2L)
+        judged(input.addData(("AAPL", 150L)))
       } finally quiesceStop(q)
       val got = spark.table(name).as[(String, Long)].collect().toSeq
         .groupBy(identity).view.mapValues(_.size).toMap
