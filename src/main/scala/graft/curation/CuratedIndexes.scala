@@ -1,11 +1,9 @@
 package graft.curation
 
-import scala.concurrent.Future
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.dedup.IndexedDedup
-import graft.ops.Exec
+import graft.dedup.{IndexTxn, IndexedDedup}
+import graft.dedup.IndexTxn.Point
 import graft.similarity.IvfIndex
 import graft.text.Bm25Index
 
@@ -14,25 +12,21 @@ import graft.text.Bm25Index
   * dedup verdicts, a searchable BM25 index, and (optionally) an
   * ANN-retrievable vector index for the SAME corpus, and the invariant
   * "a doc is kept ⟺ it is searchable ⟺ its vector is retrievable" must
-  * flip atomically per batch. [[IndexedDedup]], [[Bm25Index]] and
-  * [[graft.similarity.IvfIndex]] each know how to STAGE their rewrites
-  * (fresh bucket/cell generations, nothing visible) and return the
-  * bucket sets to commit; this coordinator runs the BM25 and IVF
-  * read-only prepare steps alongside the dedup verdicts, hands the
-  * batch's KEPT doc ids to their finish steps, and publishes all
-  * indexes (shingle + doc; term + doc +
-  * stats; IVF cells) plus the batch id in ONE single-file manifest
-  * rename. A crash anywhere — inside any family's rewrites or between
-  * families — leaves readers of ALL families on the previous
-  * consistent snapshot, and the deterministic replay recomputes the
-  * same verdicts and overwrites the same fresh generations
-  * (Round13OpsSpec/Round14OpsSpec crash-inject between each adjacent
-  * family pair).
+  * flip atomically per batch. Each write entry point here is ONE
+  * [[graft.dedup.IndexTxn]] over the shared manifest: [[IndexedDedup]],
+  * [[Bm25Index]] and [[graft.similarity.IvfIndex]] stage their rewrites
+  * in it (fresh bucket/cell generations, nothing visible), the BM25 and
+  * IVF read-only prepare steps run alongside the dedup verdicts, their
+  * finish steps take the batch's KEPT doc ids, and one rename publishes
+  * all seven indexes (shingle + doc; term + doc + stats; IVF cells) plus
+  * the batch id. Crash and replay contract as [[graft.dedup.IndexTxn]],
+  * whose named points (launch order documented there) the crash specs
+  * arm between each adjacent family pair.
   *
   * Index names are namespaced ("dedup.shingle", …, "bm25.stats",
   * "ann.ivf") so all bucket sets coexist in one
   * [[graft.dedup.IndexManifest]]; every family handle shares the same
-  * manifest root — the coordinator is the only committer.
+  * manifest root.
   *
   * Retraction rides the same protocol: a takedown batch leaves the
   * keep-set, the search index AND the vector index in the same commit,
@@ -56,11 +50,6 @@ object CuratedIndexes {
   final case class Indexes(dedup: IndexedDedup.Indexes,
                            bm25: Bm25Index.Indexes,
                            ann: Option[Ann] = None)
-
-  /** Crash-injection points between adjacent families' staged rewrites
-    * (dedup→bm25 and bm25→ann). Production never sets these. */
-  private[graft] var testCrashBetweenFamilies: () => Unit = () => ()
-  private[graft] var testCrashBeforeAnnFamily: () => Unit = () => ()
 
   def attach(spark: SparkSession, shingleRoot: String, dedupDocRoot: String,
              termRoot: String, bm25DocRoot: String, statsRoot: String,
@@ -100,30 +89,6 @@ object CuratedIndexes {
     idx
   }
 
-  /** The futures one batch forks on the shared stage pool. A batch
-    * quiesces all of them before any exception leaves it, so a failed
-    * batch never leaves a staging write racing its replay's overwrite. */
-  private final class Forks {
-    private val forked = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
-    def apply[A](f: => A): Future[A] = {
-      val fu = Exec.fork(f); forked += fu; fu
-    }
-    def quiesceAll(): Unit = forked.foreach(Exec.quiesce)
-  }
-
-  private def unpersist(df: DataFrame): Unit =
-    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(df)
-
-  private def gcAll(spark: SparkSession, idx: Indexes): Unit = {
-    val mf = idx.dedup.manifest
-    idx.dedup.shingle.gc(mf.retainedUnion(idx.dedup.shingleName))
-    idx.dedup.doc.gc(mf.retainedUnion(idx.dedup.docName))
-    idx.bm25.term.gc(mf.retainedUnion(idx.bm25.termName))
-    idx.bm25.doc.gc(mf.retainedUnion(idx.bm25.docName))
-    idx.bm25.stats.gc(mf.retainedUnion(idx.bm25.statsName))
-    idx.ann.foreach(a => IvfIndex.gc(spark, a.root, mf.retainedUnion(a.name)))
-  }
-
   /** Classify one micro-batch, index its KEPT docs for search (and,
     * with an ann handle, their vectors for retrieval), and flip every
     * family visible in one commit. `annVecs` carries the BATCH's
@@ -138,60 +103,39 @@ object CuratedIndexes {
     * [[IvfIndex.prepareMerge]]) and a finish step that stages the kept
     * docs' rewrites. The prepare steps need no verdicts and write
     * nothing, so both are forked BEFORE the dedup verdict phase and
-    * overlap it. Then: dedup writes launched → `testCrashBetweenFamilies`
-    * → BM25 finish launched → `testCrashBeforeAnnFamily` → IVF finish.
-    * Whatever throws, every forked future is quiesced before the
-    * exception leaves, the pinned prepare frame is released, and so are
-    * the verdicts. */
+    * overlap it; the stagings then launch in [[IndexTxn.Point]] order. */
   def processBatch(spark: SparkSession, idx: Indexes, batch: DataFrame,
                    batchSeq: Long, k: Int, threshold: Double,
                    maxShingleDf: Int, maxTermDf: Long,
                    annVecs: Option[DataFrame] = None): DataFrame = {
     require(idx.ann.isDefined == annVecs.isDefined,
       "CuratedIndexes: ann handle and annVecs come together")
-    val snap = idx.dedup.manifest.read().getOrElse(
-      sys.error("CuratedIndexes: bootstrap first"))
-    val writes = snap.batchSeq < batchSeq // false: committed replay
-    val forks = new Forks
-    val fPrepB = Option.when(writes)(forks(
-      Bm25Index.prepareMerge(spark, idx.bm25, batch, snap)))
-    val fPrepA = idx.ann.filter(_ => writes).map(a => forks(
-      IvfIndex.prepareMerge(annVecs.get, "doc_id", a.vec, a.centroids,
-        batchSeq)))
-    var verdicts: DataFrame = null
-    var ok = false
-    try {
-      // dedup verdicts compute eagerly; the dedup INDEX-WRITE phase
-      // comes back as a thunk so it overlaps the other families' finish
-      // steps: all stage DISJOINT directories from the same committed
-      // snapshot and nothing is visible before the one manifest rename
-      val (v, kept, dedupThunk) = IndexedDedup.stageBatchDeferred(spark,
-        idx.dedup, batch, batchSeq, k, threshold, maxShingleDf,
-        snapshot = Some(snap))
-      verdicts = v
-      dedupThunk.foreach { thunk =>
-        val fMd = forks(thunk())
-        testCrashBetweenFamilies()
-        val fMb = forks(Bm25Index.finishMerge(spark, idx.bm25,
-          Exec.await(fPrepB.get), Some(kept), maxTermDf, snap))
-        testCrashBeforeAnnFamily()
-        val ma = idx.ann.map(a => a.name -> IvfIndex.finishMerge(
-          Exec.await(fPrepA.get), Some(kept), a.root, batchSeq, Some(snap),
-          a.name)).toMap
-        val md = Exec.await(fMd)
-        val mb = Exec.await(fMb)
-        // THE commit point: every family + the batch id flip together,
-        // CAS'd against the one snapshot all families staged from
-        idx.dedup.manifest.commit(batchSeq, md ++ mb ++ ma,
-          expectedVersion = Some(snap.version))
-        gcAll(spark, idx)
+    IndexTxn.run(idx.dedup.manifest, batchSeq) { txn =>
+      val snap = txn.snap
+      val fPrepB = Option.when(txn.writes)(txn.fork(
+        Bm25Index.prepareMerge(spark, txn, idx.bm25, batch)))
+      val fPrepA = idx.ann.filter(_ => txn.writes).map(a => txn.fork(
+        IvfIndex.prepareMerge(annVecs.get, "doc_id", a.vec, a.centroids,
+          batchSeq)))
+      // the dedup INDEX-WRITE phase comes back as a thunk so it overlaps
+      // the other families' finish steps
+      val (verdicts, kept, dedupWrite) = IndexedDedup.stageBatchDeferred(
+        spark, txn, idx.dedup, batch, k, threshold, maxShingleDf)
+      dedupWrite.foreach { write =>
+        txn.point(Point.BeforeDedupFamily)
+        val fMd = txn.fork(write())
+        txn.point(Point.BetweenFamilies)
+        val fMb = txn.fork(Bm25Index.finishMerge(spark, txn, idx.bm25,
+          txn.await(fPrepB.get), Some(kept), maxTermDf))
+        txn.point(Point.BeforeAnnFamily)
+        idx.ann.foreach(a => IvfIndex.stage(txn, spark, a.root, a.name,
+          IvfIndex.finishMerge(txn.await(fPrepA.get), Some(kept), a.root,
+            batchSeq, Some(snap), a.name)))
+        txn.await(fMd)
+        txn.await(fMb)
+        txn.commit()
       }
-      ok = true
       verdicts
-    } finally {
-      forks.quiesceAll()
-      fPrepB.flatMap(_.value).flatMap(_.toOption).foreach(unpersist)
-      if (!ok && verdicts != null) unpersist(verdicts)
     }
   }
 
@@ -208,29 +152,25 @@ object CuratedIndexes {
                    retractVecs: Option[DataFrame] = None): Unit = {
     require(idx.ann.isDefined == retractVecs.isDefined,
       "CuratedIndexes: ann handle and retractVecs come together")
-    val snap = idx.dedup.manifest.read().getOrElse(
-      sys.error("CuratedIndexes: bootstrap first"))
-    if (snap.batchSeq >= batchSeq) return // committed replay: no-op
-    // ALL families' retraction stagings overlap (guide §2.6), same
-    // protocol shape as processBatch: disjoint staged directories, one
-    // rename, exception paths quiesce in-flight futures
-    val forks = new Forks
-    try {
-      val fMd = forks(IndexedDedup.stageRetract(spark, idx.dedup, retract,
-        batchSeq, k, maxShingleDf, retained, snap).get)
-      testCrashBetweenFamilies()
-      val fMb = forks(Bm25Index.stageRetract(spark, idx.bm25, retract,
-        batchSeq, maxTermDf, retained, snap).get)
-      testCrashBeforeAnnFamily()
-      val ma = idx.ann.map { a =>
-        a.name -> IvfIndex.stageDelete(retractVecs.get, "doc_id", a.vec,
-          a.centroids, a.root, batchSeq, Some(snap), a.name).get
-      }.toMap
-      idx.dedup.manifest.commit(batchSeq,
-        Exec.await(fMd) ++ Exec.await(fMb) ++ ma,
-        expectedVersion = Some(snap.version))
-      gcAll(spark, idx)
-    } finally forks.quiesceAll()
+    IndexTxn.run(idx.dedup.manifest, batchSeq) { txn =>
+      val snap = txn.snap
+      if (txn.writes) {
+        // ALL families' retraction stagings overlap (guide §2.6)
+        txn.point(Point.BeforeDedupFamily)
+        val fMd = txn.fork(IndexedDedup.stageRetract(spark, txn, idx.dedup,
+          retract, k, maxShingleDf, retained))
+        txn.point(Point.BetweenFamilies)
+        val fMb = txn.fork(Bm25Index.stageRetract(spark, txn, idx.bm25,
+          retract, maxTermDf, retained))
+        txn.point(Point.BeforeAnnFamily)
+        idx.ann.foreach(a => IvfIndex.stage(txn, spark, a.root, a.name,
+          IvfIndex.stageDelete(retractVecs.get, "doc_id", a.vec, a.centroids,
+            a.root, batchSeq, Some(snap), a.name).get))
+        txn.await(fMd)
+        txn.await(fMb)
+        txn.commit()
+      }
+    }
   }
 
   /** ANN REBUILD UNDER THE SHARED MANIFEST (VERDICT r14 #3) — the
@@ -242,10 +182,8 @@ object CuratedIndexes {
     * integer sums, bit-reproducible, SQL-replayable), reassign every
     * row, stage every cell as a fresh generation, and publish with ONE
     * shared-manifest rename that carries the five text families'
-    * bucket sets UNCHANGED — a crash anywhere mid-rebuild leaves
-    * readers of ALL seven indexes on the pre-rebuild snapshot, and
-    * time travel across the rebuild stays readable (the retained-union
-    * gc). Returns the handle set with the refit centroids swapped in —
+    * bucket sets UNCHANGED ([[IndexTxn]] contract: a crash leaves all
+    * seven indexes on the pre-rebuild snapshot). Returns the handle set with the refit centroids swapped in —
     * subsequent merges/takedowns/probes MUST use it (the frozen seed
     * handle would assign against the wrong centroids); persisting the
     * refit set is the caller's job (k×dim scalars, codebook-sized).
@@ -255,20 +193,18 @@ object CuratedIndexes {
   def rebuildAnn(spark: SparkSession, idx: Indexes, batchSeq: Long): Indexes = {
     val a = idx.ann.getOrElse(
       sys.error("CuratedIndexes: no ann family attached"))
-    val mf = idx.dedup.manifest
-    val snap = mf.read().getOrElse(
-      sys.error("CuratedIndexes: bootstrap first"))
-    if (snap.batchSeq >= batchSeq) return idx // committed replay: no-op
-    val (staged, refit) = graft.similarity.IvfIndex.stageRebuild(
-      spark, a.root, snap, a.name, "doc_id", a.vec, batchSeq)
-    testCrashBeforeAnnFamily()
-    // ONE rename: the rebuilt ann layout + the batch id flip together;
-    // every text family's bucket set rides along unchanged
-    mf.commit(batchSeq, snap.buckets.updated(a.name, staged),
-      expectedVersion = Some(snap.version))
-    val next = idx.copy(ann = Some(a.copy(centroids = refit)))
-    gcAll(spark, next)
-    next
+    IndexTxn.run(idx.dedup.manifest, batchSeq) { txn =>
+      val snap = txn.snap
+      if (!txn.writes) idx // committed replay: no-op
+      else {
+        val (staged, refit) = IvfIndex.stageRebuild(spark, a.root, snap,
+          a.name, "doc_id", a.vec, batchSeq)
+        IvfIndex.stage(txn, spark, a.root, a.name, staged)
+        txn.point(Point.BeforeAnnFamily)
+        txn.commit()
+        idx.copy(ann = Some(a.copy(centroids = refit)))
+      }
+    }
   }
 
   /** The committed ANN rows (audit/census reads — never the per-batch

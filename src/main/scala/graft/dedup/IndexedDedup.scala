@@ -44,23 +44,13 @@ import org.apache.spark.sql.types.StructType
   * batch resolves. Statuses as in `incrementalDedup`. The write phase
   * reads its deltas off the same pinned per-shingle frame.
   *
-  * ATOMIC VISIBILITY (VERDICT r11 #1 — closes the crash window the r11
-  * design documented): both indexes resolve through ONE
-  * [[IndexManifest]] snapshot naming their current bucket generations
-  * plus the last applied batch id. Index rewrites land in fresh
-  * generation directories that no reader can see; the batch becomes
-  * visible only when the single-file manifest rename commits BOTH new
-  * bucket sets and the batch id together. A crash anywhere between the
-  * first bucket write and the manifest rename leaves readers —
-  * including the replayed batch itself — on the previous consistent
-  * snapshot; the replay recomputes the same verdicts and re-writes the
-  * same fresh directories (processBatch is deterministic given
-  * manifest state + batch). A replay AFTER the manifest landed sees
-  * `batchSeq ≤ manifest.batchSeq`, recomputes verdicts read-only (the
-  * keep side of pair/df computation excludes the batch's doc ids, so
-  * state already extended yields the same verdicts), and skips the
-  * write path. The verdict sink stays outside the manifest and keeps
-  * its own idempotent version-gated MERGE, as before.
+  * Commit protocol: both indexes resolve through ONE [[IndexManifest]]
+  * snapshot and every write path is one [[IndexTxn]] (crash and replay
+  * contract there). A replay after the commit recomputes the verdicts
+  * read-only — the keep side of pair/df computation excludes the
+  * batch's doc ids, so state already extended yields the same verdicts.
+  * The verdict sink stays outside the manifest and keeps its own
+  * idempotent version-gated MERGE.
   */
 object IndexedDedup {
 
@@ -74,12 +64,6 @@ object IndexedDedup {
 
   val ShingleSchema = "s STRING, doc_id BIGINT"
   val DocSchema = "doc_id BIGINT, n_keep BIGINT, ver BIGINT"
-
-  /** Crash-injection points for the commit-protocol specs: between the
-    * two index rewrites, and after both rewrites but before the
-    * manifest rename. Production never sets these. */
-  private[graft] var testCrashBetweenIndexWrites: () => Unit = () => ()
-  private[graft] var testCrashBeforeManifestCommit: () => Unit = () => ()
 
   /** Attach to an existing on-disk index pair + manifest (a bootstrap
     * snapshot copied to a working directory, a restart after a crash).
@@ -146,25 +130,8 @@ object IndexedDedup {
   def processBatch(spark: SparkSession, idx: Indexes, batch: DataFrame,
                    batchSeq: Long, k: Int, threshold: Double,
                    maxShingleDf: Int,
-                   asOf: Option[IndexManifest.State] = None): DataFrame = {
-    val snap0 = idx.manifest.read().getOrElse(
-      sys.error(s"IndexedDedup: no committed manifest at ${idx.manifest.root}"))
-    val (verdicts, staged) = stageBatch(spark, idx, batch, batchSeq, k,
-      threshold, maxShingleDf, asOf, snapshot = Some(snap0))
-    staged.foreach { m =>
-      // THE commit point: both indexes + the batch id flip together.
-      // CAS against the staged-from version (VERDICT r13 #5): a zombie
-      // writer that lost the single-writer contract — the manifest
-      // moved since it staged — throws here and publishes nothing.
-      idx.manifest.commit(batchSeq, m,
-        expectedVersion = Some(snap0.version))
-      // gc keeps the union of the retained snapshots, so manifest time
-      // travel to every retained version stays readable
-      idx.shingle.gc(idx.manifest.retainedUnion(idx.shingleName))
-      idx.doc.gc(idx.manifest.retainedUnion(idx.docName))
-    }
-    verdicts
-  }
+                   asOf: Option[IndexManifest.State] = None): DataFrame =
+    ingest(spark, idx, batch, batchSeq, k, threshold, maxShingleDf, asOf, None)
 
   /** [[processBatch]] with a caller-supplied SINK run CONCURRENTLY with
     * the index-write phase (OPTIMIZATION r15, guide §2.6): the sink
@@ -179,69 +146,52 @@ object IndexedDedup {
   def processBatchOverlapping(spark: SparkSession, idx: Indexes,
                               batch: DataFrame, batchSeq: Long, k: Int,
                               threshold: Double, maxShingleDf: Int)
-                             (sink: DataFrame => Unit): DataFrame = {
-    val snap0 = idx.manifest.read().getOrElse(
-      sys.error(s"IndexedDedup: no committed manifest at ${idx.manifest.root}"))
-    val (verdicts, _, thunk) = stageBatchDeferred(spark, idx, batch,
-      batchSeq, k, threshold, maxShingleDf, snapshot = Some(snap0))
-    val fSink = graft.ops.Exec.fork(sink(verdicts))
-    try thunk.foreach { t =>
-      val m = t()
-      idx.manifest.commit(batchSeq, m, expectedVersion = Some(snap0.version))
-      idx.shingle.gc(idx.manifest.retainedUnion(idx.shingleName))
-      idx.doc.gc(idx.manifest.retainedUnion(idx.docName))
-    } catch { case t: Throwable => graft.ops.Exec.quiesce(fSink); throw t }
-    graft.ops.Exec.await(fSink)
-    verdicts
-  }
+                             (sink: DataFrame => Unit): DataFrame =
+    ingest(spark, idx, batch, batchSeq, k, threshold, maxShingleDf, None,
+      Some(sink))
 
-  /** [[processBatch]] with the manifest commit LEFT TO THE CALLER:
-    * returns the verdicts plus, when the batch extends the indexes,
-    * this family's new bucket sets to include in the caller's single
-    * manifest commit (None = read-only replay/time-travel — nothing to
-    * commit). The caller must gc each index against
-    * `manifest.retainedUnion` after its commit lands. */
-  private[graft] def stageBatch(spark: SparkSession, idx: Indexes,
-                                batch: DataFrame, batchSeq: Long, k: Int,
-                                threshold: Double, maxShingleDf: Int,
-                                asOf: Option[IndexManifest.State] = None,
-                                snapshot: Option[IndexManifest.State] = None)
-      : (DataFrame, Option[Map[String, Set[String]]]) = {
-    val (verdicts, _, thunk) = stageBatchDeferred(spark, idx, batch,
-      batchSeq, k, threshold, maxShingleDf, asOf, snapshot)
-    (verdicts, thunk.map(_.apply()))
-  }
+  /** The one standalone ingest: verdicts, the sink (if any) forked over
+    * them, the index writes, the commit, then the sink awaited. */
+  private def ingest(spark: SparkSession, idx: Indexes, batch: DataFrame,
+                     batchSeq: Long, k: Int, threshold: Double,
+                     maxShingleDf: Int, asOf: Option[IndexManifest.State],
+                     sink: Option[DataFrame => Unit]): DataFrame =
+    IndexTxn.run(idx.manifest, batchSeq) { txn =>
+      val (verdicts, _, write) = stageBatchDeferred(spark, txn, idx, batch,
+        k, threshold, maxShingleDf, asOf)
+      val fSink = sink.map(s => txn.fork(s(verdicts)))
+      write.foreach(_())
+      txn.commit()
+      fSink.foreach(txn.await)
+      verdicts
+    }
 
-  /** [[stageBatch]] with the INDEX-WRITE phase deferred behind a thunk
-    * (OPTIMIZATION r15): the verdicts and every frame the rewrites need
-    * are computed (and pinned) eagerly; invoking the returned thunk
-    * runs the two staged rewrites (internally overlapped) and releases
-    * the pinned batch-sized frames. A cross-family caller forks the
-    * thunk so the dedup rewrites overlap the OTHER families' stagings —
-    * all of them write disjoint fresh-generation directories and
-    * nothing is visible before the caller's single manifest rename.
-    * The thunk must be invoked exactly once (None = read-only replay,
-    * already released). The middle element is the batch's kept doc
-    * ids, driver-held, so a caller can restrict its own staging to
-    * them without another Spark job. */
-  private[graft] def stageBatchDeferred(spark: SparkSession, idx: Indexes,
-                                batch: DataFrame, batchSeq: Long, k: Int,
-                                threshold: Double, maxShingleDf: Int,
-                                asOf: Option[IndexManifest.State] = None,
-                                snapshot: Option[IndexManifest.State] = None)
-      : (DataFrame, Array[Long], Option[() => Map[String, Set[String]]]) = {
-    // `snapshot` = the committed state the CALLER already read (so its
-    // CAS commit is against exactly the version staged from); `asOf`
-    // still wins — a time-travel read is always read-only
-    val snap = asOf.orElse(snapshot).getOrElse(idx.manifest.read().getOrElse(
-      sys.error(s"IndexedDedup: no committed manifest at ${idx.manifest.root}")))
+  /** The verdict phase of a batch in `txn`, with the INDEX-WRITE phase
+    * deferred behind a thunk (OPTIMIZATION r15): the verdicts and every
+    * frame the rewrites need are computed (and pinned) eagerly;
+    * invoking the returned thunk runs the two rewrites (internally
+    * overlapped) and stages their bucket sets in `txn`. A cross-family
+    * caller forks the thunk so the dedup rewrites overlap the OTHER
+    * families' stagings. The thunk must be invoked at most once (None
+    * = read-only replay or time travel). The middle element is the
+    * batch's kept doc ids, driver-held, so a caller can restrict its own
+    * staging to them without another Spark job. */
+  private[graft] def stageBatchDeferred(spark: SparkSession, txn: IndexTxn,
+                                        idx: Indexes, batch: DataFrame,
+                                        k: Int, threshold: Double,
+                                        maxShingleDf: Int,
+                                        asOf: Option[IndexManifest.State] = None)
+      : (DataFrame, Array[Long], Option[() => Unit]) = {
+    // a time-travel read (`asOf`) is always read-only
+    val snap = asOf.getOrElse(txn.snap)
+    val batchSeq = txn.batchSeq
     val liveS = snap.buckets(idx.shingleName)
     val liveD = snap.buckets(idx.docName)
     // (doc_id, s); a doc shorter than k tokens keeps one (doc_id, null)
     // row, so the pinned frame also carries every batch doc id
-    val bEx = batch.select(col("doc_id"),
+    val bEx = txn.pinned(batch.select(col("doc_id"),
         explode_outer(Dedup.shingles(col("text"), k)).as("s"))
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val bSh = bEx.where(col("s").isNotNull)
     // ---- one shingle-keyed pass over batch shingles ∪ probed postings
     // ∪ tombstones: per batch shingle, its batch docs `b`, its keep
@@ -253,7 +203,7 @@ object IndexedDedup {
     // removing `b` from each posting list removes all of them). `hot` is
     // incrementalDedup's cap over keep ∪ batch, or a tombstone.
     val pRows = idx.shingle.probe(bSh.select("s"), liveS)
-    val perS = bSh.select(col("s"), col("doc_id"), lit(true).as("__b"))
+    val perS = txn.pinned(bSh.select(col("s"), col("doc_id"), lit(true).as("__b"))
       .unionByName(pRows.select(col("s"), col("doc_id"), lit(false).as("__b")))
       .groupBy("s")
       .agg(array_sort(collect_set(when(col("__b"), col("doc_id")))).as("b"),
@@ -264,7 +214,7 @@ object IndexedDedup {
         array_contains(col("__p"), -1L).as("tomb"))
       .withColumn("hot",
         col("tomb") || size(col("k")) + size(col("b")) > maxShingleDf)
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     // ---- Jaccard over surviving shingles: per pair the shared count;
     // per batch doc its surviving shingles (0 when all are hot or it has
     // none); per matched keep doc its doc-index count less the postings
@@ -301,7 +251,6 @@ object IndexedDedup {
     val links = edges.unionByName(nB.select(col("doc_id").as("doc_a"),
         lit(null).cast("long").as("doc_b")))
       .collect()
-    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(bEx)
     // ---- components by the driver union-find (min-label connected
     // components, no round limit)
     val uf = new Dedup.MinUnionFind
@@ -317,24 +266,15 @@ object IndexedDedup {
       Row(d, if (rep == d) "kept" else if (batchIds(rep)) "dup_in_drop"
         else "dup_of_keep", rep)
     }
-    val verdicts = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        StructType.fromDDL("doc_id BIGINT, status STRING, rep_id BIGINT"))
-      .localCheckpoint(true)
+    val verdicts = txn.pinnedResult(spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType.fromDDL("doc_id BIGINT, status STRING, rep_id BIGINT"))
+      .localCheckpoint(true))
     val kept = rows.collect { case Row(d: Long, "kept", _) => d }.toArray
-    // ---- extend the indexes with the batch's kept docs — skipped when
-    // the committed manifest already includes this batch (a replay
-    // after the commit landed): the snapshot is complete, the verdict
-    // recomputation above is read-only against it. A time-travel read
-    // (asOf) is ALWAYS read-only.
-    // releases the pinned per-shingle frame (the returned verdicts are
-    // the caller's to release — the q274 contract); runs at the end of
-    // the write thunk, which reads it, or immediately on the read-only
-    // path
-    def release(): Unit =
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(perS)
-    val staged: Option[() => Map[String, Set[String]]] =
-      if (asOf.isEmpty && snap.batchSeq < batchSeq) Some { () =>
-      try {
+    // ---- extend the indexes with the batch's kept docs — skipped on a
+    // committed replay (the verdict recomputation above is read-only
+    // against the complete snapshot) and on a time-travel read
+    val write = Option.when(asOf.isEmpty && txn.writes) { () =>
       // the deltas, read off the pinned per-shingle frame: `kb` = its
       // kept batch docs. Keep-side df is monotone: a shingle crossing
       // the cap once the kept docs land is tombstoned for good
@@ -356,18 +296,13 @@ object IndexedDedup {
         .select(col("doc_id"), coalesce(col("nk"), lit(0L)).as("ins_n"))
       val decPerm = newPerm.select(explode(col("k")).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("dec"))
-      // both rewrites land in fresh bucket generations invisible to
-      // readers; the version gates stay (they also shield a crashed
-      // PRE-manifest attempt whose directories this retry overwrites).
-      // The two rewrites touch DISJOINT indexes and nothing is visible
-      // before the single manifest rename, so they OVERLAP on the
-      // shared stage pool (guide §2.6 — the per-batch path is
-      // job-latency-bound, OPTIMIZATION r15); the crash hook keeps its
-      // "doc staging launched, shingle staging not yet" position, and
-      // every exception path quiesces in-flight futures so a failed
-      // batch never races its own replay's overwrite.
+      // the version gates stay (they also shield a crashed PRE-manifest
+      // attempt whose directories this retry overwrites). The two
+      // rewrites touch DISJOINT indexes, so they OVERLAP on the shared
+      // stage pool (guide §2.6 — the per-batch path is
+      // job-latency-bound, OPTIMIZATION r15)
       val diKeys = keptIds.unionByName(decPerm.select("doc_id"))
-      val fDoc = graft.ops.Exec.fork(idx.doc.rewrite(diKeys, liveD) { old =>
+      val fDoc = txn.fork(idx.doc.rewrite(diKeys, liveD) { old =>
         old.join(keptN, Seq("doc_id"), "full_outer")
           .join(decPerm, Seq("doc_id"), "left")
           .select(col("doc_id"),
@@ -379,24 +314,21 @@ object IndexedDedup {
                 || (col("ver") < batchSeq && col("dec").isNotNull),
               lit(batchSeq)).otherwise(col("ver")).as("ver"))
       })
-      try testCrashBetweenIndexWrites()
-      catch { case t: Throwable => graft.ops.Exec.quiesce(fDoc); throw t }
-      val fShingle = graft.ops.Exec.fork(
+      txn.point(IndexTxn.Point.DedupBetweenWrites)
+      val fShingle = txn.fork(
         idx.shingle.rewrite(keptEx.select("s"), liveS) { old =>
         old.join(broadcast(newPerm.select("s")), Seq("s"), "left_anti")
           .unionByName(keptEx.where(!col("after")).select("s", "doc_id"))
           .unionByName(newPerm.select(col("s"), lit(-1L).as("doc_id")))
           .distinct()
       })
-      val newLiveD =
-        try graft.ops.Exec.await(fDoc)
-        catch { case t: Throwable => graft.ops.Exec.quiesce(fShingle); throw t }
-      val newLiveS = graft.ops.Exec.await(fShingle)
-      testCrashBeforeManifestCommit()
-      Map(idx.shingleName -> newLiveS, idx.docName -> newLiveD)
-      } finally release()
-    } else { release(); None }
-    (verdicts, kept, staged)
+      val newLiveD = txn.await(fDoc)
+      val newLiveS = txn.await(fShingle)
+      txn.point(IndexTxn.Point.DedupStaged)
+      txn.stage(idx.shingleName, idx.shingle, newLiveS)
+      txn.stage(idx.docName, idx.doc, newLiveD)
+    }
+    (verdicts, kept, write)
   }
 
   /** RETRACTION (VERDICT r12 #1 — takedown/GDPR/corpus-refresh): remove
@@ -424,10 +356,8 @@ object IndexedDedup {
     * Cost shape: probe IO tracks the retract batch's key sets; the
     * only remaining-corpus scan is the tombstone re-audit, restricted
     * to the touched tombstoned shingles (skipped entirely when none).
-    * Replay of a committed retract is a no-op (batchSeq gate); a crash
-    * before the manifest rename leaves readers on the previous
-    * snapshot and the deterministic retry overwrites the same fresh
-    * generations.
+    * Replay of a committed retract is a no-op; crash contract as
+    * [[IndexTxn]].
     *
     * History note: a retraction REWRITES KEEP-SET HISTORY by design —
     * replaying a pre-retraction merge batch afterwards is not
@@ -436,50 +366,45 @@ object IndexedDedup {
     * per-snapshot, which is what the manifest gate enforces. */
   def retractBatch(spark: SparkSession, idx: Indexes, retract: DataFrame,
                    batchSeq: Long, k: Int, maxShingleDf: Int,
-                   retained: Option[DataFrame]): Unit = {
-    val snap = idx.manifest.read().getOrElse(
-      sys.error(s"IndexedDedup: no committed manifest at ${idx.manifest.root}"))
-    if (snap.batchSeq >= batchSeq) return // committed replay: no-op
-    stageRetract(spark, idx, retract, batchSeq, k, maxShingleDf, retained,
-      snap).foreach { m =>
-      idx.manifest.commit(batchSeq, m, expectedVersion = Some(snap.version))
-      idx.shingle.gc(idx.manifest.retainedUnion(idx.shingleName))
-      idx.doc.gc(idx.manifest.retainedUnion(idx.docName))
+                   retained: Option[DataFrame]): Unit =
+    IndexTxn.run(idx.manifest, batchSeq) { txn =>
+      if (txn.writes) {
+        stageRetract(spark, txn, idx, retract, k, maxShingleDf, retained)
+        txn.commit()
+      }
     }
-  }
 
-  /** [[retractBatch]] with the commit left to the caller (None = the
-    * batch was already committed or nothing to do). */
-  private[graft] def stageRetract(spark: SparkSession, idx: Indexes,
-                                  retract: DataFrame, batchSeq: Long, k: Int,
+  /** Stage [[retractBatch]]'s rewrites in `txn` (which writes). */
+  private[graft] def stageRetract(spark: SparkSession, txn: IndexTxn,
+                                  idx: Indexes, retract: DataFrame, k: Int,
                                   maxShingleDf: Int,
-                                  retained: Option[DataFrame],
-                                  snap: IndexManifest.State)
-      : Option[Map[String, Set[String]]] = {
-    if (snap.batchSeq >= batchSeq) return None
+                                  retained: Option[DataFrame]): Unit = {
+    val snap = txn.snap
+    val batchSeq = txn.batchSeq
     val liveS = snap.buckets(idx.shingleName)
     val liveD = snap.buckets(idx.docName)
     val rIds = retract.select("doc_id").distinct()
     // docs actually in the keep-set — retracting a non-member is a no-op
-    val present = idx.doc.probe(rIds, liveD)
+    val present = txn.pinned(idx.doc.probe(rIds, liveD)
       .join(broadcast(rIds), Seq("doc_id"), "left_semi")
-      .select("doc_id").localCheckpoint(true)
-    val rEx = retract.join(broadcast(present), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), explode(Dedup.shingles(col("text"), k)).as("s"))
-      .localCheckpoint(true)
+      .select("doc_id").localCheckpoint(true))
+    val rEx = txn.pinned(
+      retract.join(broadcast(present), Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), explode(Dedup.shingles(col("text"), k)).as("s"))
+        .localCheckpoint(true))
     val sKeys = rEx.select("s").distinct()
     val pm = idx.shingle.probe(sKeys, liveS)
       .join(broadcast(sKeys), Seq("s"))
-    val tombTouched = pm.where(col("doc_id") === -1L).select("s")
-      .localCheckpoint(true)
+    val tombTouched = txn.pinned(pm.where(col("doc_id") === -1L).select("s")
+      .localCheckpoint(true))
     // tombstone re-audit: df over the REMAINING corpus, restricted to
     // the touched tombstoned shingles (only they can have lost df)
     val restored = retained match {
-      case Some(rem) if !tombTouched.isEmpty =>
+      case Some(rem) if !tombTouched.isEmpty => txn.pinned(
         rem.select(col("doc_id"), explode(Dedup.shingles(col("text"), k)).as("s"))
           .join(broadcast(tombTouched), Seq("s"))
-          .localCheckpoint(true)
-      case _ => rEx.select("s", "doc_id").limit(0).localCheckpoint(true)
+          .localCheckpoint(true))
+      case _ => rEx.select("s", "doc_id").limit(0) // empty: nothing to pin
     }
     // un-tombstone = touched tombstoned shingles whose remaining-corpus
     // df fell back <= cap, INCLUDING df = 0 (every containing doc
@@ -487,34 +412,30 @@ object IndexedDedup {
     // keep the tombstone a fresh bootstrap wouldn't have; ADVICE r13)
     val overCap = restored.groupBy("s").agg(count(lit(1)).as("dfr"))
       .where(col("dfr") > maxShingleDf).select("s")
-    val unTomb = (if (retained.isDefined)
+    val unTomb = txn.pinned((if (retained.isDefined)
         tombTouched.join(broadcast(overCap), Seq("s"), "left_anti")
       else tombTouched.limit(0)) // one-way cap policy: never un-tombstone
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val restoredLive = restored
       .join(broadcast(unTomb), Seq("s"), "left_semi")
       .select("s", "doc_id")
     // disjoint-index rewrites overlap (guide §2.6) — same protocol
     // shape as the merge path's staged rewrites above
-    val fShingle = graft.ops.Exec.fork(
-      idx.shingle.rewrite(sKeys, liveS) { old =>
-        // drop the retracted docs' postings and the un-tombstoned
-        // tombstone rows (a tombstoned shingle has ONLY its tombstone
-        // row, so the anti-join on s removes nothing else), then restore
-        // the re-derived posting lists
-        old.join(broadcast(present), Seq("doc_id"), "left_anti")
-          .join(broadcast(unTomb), Seq("s"), "left_anti")
-          .unionByName(restoredLive)
-          .distinct()
-      })
-    try testCrashBetweenIndexWrites()
-    catch { case t: Throwable => graft.ops.Exec.quiesce(fShingle); throw t }
-    val incRem =
-      try restoredLive.groupBy("doc_id").agg(count(lit(1)).as("inc"))
-        .localCheckpoint(true)
-      catch { case t: Throwable => graft.ops.Exec.quiesce(fShingle); throw t }
+    val fShingle = txn.fork(idx.shingle.rewrite(sKeys, liveS) { old =>
+      // drop the retracted docs' postings and the un-tombstoned
+      // tombstone rows (a tombstoned shingle has ONLY its tombstone row,
+      // so the anti-join on s removes nothing else), then restore the
+      // re-derived posting lists
+      old.join(broadcast(present), Seq("doc_id"), "left_anti")
+        .join(broadcast(unTomb), Seq("s"), "left_anti")
+        .unionByName(restoredLive)
+        .distinct()
+    })
+    txn.point(IndexTxn.Point.DedupBetweenWrites)
+    val incRem = txn.pinned(restoredLive.groupBy("doc_id")
+      .agg(count(lit(1)).as("inc")).localCheckpoint(true))
     val dKeys = present.unionByName(incRem.select("doc_id"))
-    val fDoc = graft.ops.Exec.fork(idx.doc.rewrite(dKeys, liveD) { old =>
+    val fDoc = txn.fork(idx.doc.rewrite(dKeys, liveD) { old =>
       old.join(broadcast(present), Seq("doc_id"), "left_anti")
         .join(incRem, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -522,13 +443,10 @@ object IndexedDedup {
           when(col("inc").isNotNull, lit(batchSeq)).otherwise(col("ver"))
             .as("ver"))
     })
-    val newLiveS =
-      try graft.ops.Exec.await(fShingle)
-      catch { case t: Throwable => graft.ops.Exec.quiesce(fDoc); throw t }
-    val newLiveD = graft.ops.Exec.await(fDoc)
-    testCrashBeforeManifestCommit()
-    Seq(present, rEx, tombTouched, restored, unTomb, incRem).foreach(
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint)
-    Some(Map(idx.shingleName -> newLiveS, idx.docName -> newLiveD))
+    val newLiveS = txn.await(fShingle)
+    val newLiveD = txn.await(fDoc)
+    txn.point(IndexTxn.Point.DedupStaged)
+    txn.stage(idx.shingleName, idx.shingle, newLiveS)
+    txn.stage(idx.docName, idx.doc, newLiveD)
   }
 }

@@ -15,13 +15,9 @@ import scala.concurrent.duration.Duration
   * one Spark action; Spark's scheduler (FIFO) interleaves the jobs'
   * tasks across the executor cores.
   *
-  * Determinism/commit safety: the overlapped actions write DISJOINT
-  * fresh-generation directories and nothing becomes visible before the
-  * caller's single manifest rename, so overlap cannot reorder anything
-  * observable. Callers must AWAIT every launched future before
-  * throwing past it (a crash-injection hook, a staging error), so a
-  * failed batch never leaves a write racing a replay's overwrite of
-  * the same staged directories within one JVM. */
+  * The index families fork only through [[graft.dedup.IndexTxn]],
+  * which owns the commit-safety rules (disjoint staged directories,
+  * every future quiesced before a failure leaves the batch). */
 object Exec {
   private val pool = Executors.newCachedThreadPool(r => {
     val t = new Thread(r, "graft-stage")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.dedup.IndexManifest
+import graft.dedup.{IndexManifest, IndexTxn}
 
 /** A PERSISTED IVF-flat index maintained incrementally from a vector
   * stream (VERDICT r10 #3) — the similarity-side twin of the dedup
@@ -21,18 +21,11 @@ import graft.dedup.IndexManifest
   *     (the write repartitions by cell — per-batch small-file
   *     accretion is gone at the protocol level);
   *   - a batch (merge, delete, or rebuild) stages fresh generation
-  *     directories for the cells it touches — invisible to readers —
-  *     and ONE single-file [[graft.dedup.IndexManifest]] rename flips
-  *     the live (cell → directory) map plus the batch id atomically.
-  *     A crash anywhere mid-batch leaves every reader on the previous
-  *     fully-consistent snapshot (a half-applied takedown can never be
-  *     observed — the GDPR-delete guarantee the in-place overwrite
-  *     could not give); the deterministic retry overwrites the same
-  *     staged directories and a replay of a committed batch is a no-op
-  *     (batchSeq gate). Aged-out generations are gc'd against the
-  *     manifest's retained-snapshot union, so index TIME TRAVEL over
-  *     retained versions stays readable — the linear-hash families'
-  *     contract verbatim.
+  *     directories for the cells it touches and ONE
+  *     [[graft.dedup.IndexTxn]] publishes the live (cell → directory)
+  *     map plus the batch id (crash, replay and gc contract there) — a
+  *     half-applied takedown can never be observed, the GDPR-delete
+  *     guarantee an in-place overwrite could not give.
   *
   * Centroids are the DETERMINISTIC seed set (first-k by id — the
   * q114/q117 discipline) and are NEVER refit per batch: arriving
@@ -63,12 +56,6 @@ object IvfIndex {
 
   /** Manifest index name for a standalone (self-committed) index. */
   private[graft] val IvfIx = "ivf"
-
-  /** Crash-injection point for the commit-protocol specs: after the
-    * fresh generations are fully staged, before the manifest rename —
-    * armed for merge, delete, and rebuild alike. Production never sets
-    * this. */
-  private[graft] var testCrashBeforeCommit: () => Unit = () => ()
 
   private def manifestOf(spark: SparkSession, root: String) =
     new IndexManifest(spark, s"$root/_mf")
@@ -145,6 +132,12 @@ object IvfIndex {
     names
   }
 
+  /** Record `dirs` as index `name`'s staged cell set in `txn`, gc'd
+    * under `root` after the commit. */
+  private[graft] def stage(txn: IndexTxn, spark: SparkSession, root: String,
+                           name: String, dirs: Set[String]): Unit =
+    txn.stage(name, dirs)(gc(spark, root, _))
+
   /** Delete every generation directory (and stage leftover) outside
     * `keep` — call with the manifest's retained-snapshot union AFTER a
     * commit lands, so every retained version stays fully readable. */
@@ -165,9 +158,8 @@ object IvfIndex {
 
   /** Assign one batch against frozen centroids and merge it into the
     * index under ONE manifest commit. Touched-cell read-back only;
-    * latest-wins by (version, id) — replay of a committed batch is a
-    * no-op, a crash before the commit leaves readers on the previous
-    * snapshot. With `encodeWith`, the SAME assignment scan also
+    * latest-wins by (version, id); a replay of a committed batch is a
+    * no-op. With `encodeWith`, the SAME assignment scan also
     * PQ-encodes the vector (m codebook cells per row, [[Pq.encode]]
     * against codebooks as frozen as the centroids) and persists the
     * codes in the index rows — the compressed leg [[probeAdc]] scores
@@ -177,18 +169,14 @@ object IvfIndex {
                  batchSeq: Long,
                  encodeWith: Option[Pq.Codebooks] = None): Unit = {
     val spark = batch.sparkSession
-    val mf = manifestOf(spark, root)
-    val snap = mf.read()
-    if (snap.exists(_.batchSeq >= batchSeq)) return // committed replay
-    val bs = finishMerge(prepareMerge(batch, id, vec, centroids, batchSeq,
-      encodeWith), None, root, batchSeq, snap, IvfIx)
-    testCrashBeforeCommit()
-    // THE commit point — CAS against the snapshot this batch staged
-    // from (a zombie writer that lost the single-writer contract
-    // publishes nothing)
-    mf.commit(batchSeq, Map(IvfIx -> bs),
-      expectedVersion = Some(snap.map(_.version).getOrElse(0L)))
-    gc(spark, root, mf.retainedUnion(IvfIx))
+    IndexTxn.run(manifestOf(spark, root), batchSeq) { txn =>
+      if (txn.writes) {
+        stage(txn, spark, root, IvfIx, finishMerge(prepareMerge(batch, id,
+          vec, centroids, batchSeq, encodeWith), None, root, batchSeq,
+          txn.snapshot, IvfIx))
+        txn.commit()
+      }
+    }
   }
 
   /** What [[prepareMerge]] learned about a batch: its assigned rows
@@ -221,9 +209,8 @@ object IvfIndex {
 
   /** The WRITE half of a merge: stage the touched cells for the `kept`
     * ids of a [[prepareMerge]] (None = every id) and return the full new
-    * directory set for `name` — the caller owns the manifest commit and
-    * must gc against `manifest.retainedUnion(name)` after it lands. The
-    * touched cells come off the driver-held assignment, so the write is
+    * directory set for `name`, for the caller's commit. The touched
+    * cells come off the driver-held assignment, so the write is
     * the only job. */
   private[graft] def finishMerge(prep: MergePrep, kept: Option[Array[Long]],
                                  root: String, batchSeq: Long,
@@ -259,30 +246,25 @@ object IvfIndex {
     * cells, anti-joins the ids out, and stages the survivors as fresh
     * generations — a cell emptied by the deletion stages nothing and
     * drops from the new bucket set, so probes of a vanished cell read
-    * nothing. A reader concurrent with the delete, or between a crash
-    * and its retry, holds the complete PRE-takedown snapshot — never a
-    * torn half-applied one (VERDICT r13 #1; the retry converges and a
-    * committed replay is a no-op). The post-delete index is
+    * nothing; never half-visible ([[graft.dedup.IndexTxn]], VERDICT r13
+    * #1). The post-delete index is
     * content-equal to one built without the deleted rows (codes
     * column included). */
   def deleteBatch(batch: DataFrame, id: String, vec: String,
                   centroids: Seq[(Int, Array[Double])],
                   root: String, batchSeq: Long): Unit = {
     val spark = batch.sparkSession
-    val mf = manifestOf(spark, root)
-    val snap = mf.read()
-    stageDelete(batch, id, vec, centroids, root, batchSeq, snap, IvfIx)
-      .foreach { bs =>
-        testCrashBeforeCommit()
-        mf.commit(batchSeq, Map(IvfIx -> bs),
-          expectedVersion = Some(snap.map(_.version).getOrElse(0L)))
-        gc(spark, root, mf.retainedUnion(IvfIx))
+    IndexTxn.run(manifestOf(spark, root), batchSeq) { txn =>
+      stageDelete(batch, id, vec, centroids, root, batchSeq, txn.snapshot,
+        IvfIx).foreach { dirs =>
+        stage(txn, spark, root, IvfIx, dirs)
+        txn.commit()
       }
+    }
   }
 
-  /** [[deleteBatch]] with the commit left to the caller (cross-family
-    * pipelines) — None for a committed replay or a never-committed
-    * index. */
+  /** [[deleteBatch]]'s new directory set for `name`, for the caller's
+    * commit — None for a committed replay or a never-committed index. */
   private[graft] def stageDelete(batch: DataFrame, id: String, vec: String,
                                  centroids: Seq[(Int, Array[Double])],
                                  root: String, batchSeq: Long,
@@ -459,32 +441,22 @@ object IvfIndex {
     * monthly-job cost shape, never the per-batch path. Raw-vector
     * (IVF-flat) indexes only — the rebuild drops PQ code columns.
     *
-    * A crash anywhere mid-rebuild leaves the index fully readable on
-    * the previous snapshot; the deterministic retry overwrites the same
-    * staged directories; gc after the commit keeps the retained
-    * snapshots readable (time travel over full index states). */
+    * Commit protocol as [[graft.dedup.IndexTxn]]. */
   def rebuild(spark: SparkSession, root: String, id: String, vec: String,
-              batchSeq: Long): Seq[(Int, Array[Double])] = {
-    val mf = manifestOf(spark, root)
-    val snap = mf.read().getOrElse(
-      sys.error(s"IvfIndex: rebuild needs a committed index at $root"))
-    val (stagedDirs, refit) =
-      stageRebuild(spark, root, snap, IvfIx, id, vec, batchSeq)
-    testCrashBeforeCommit()
-    // THE commit point: readers flip to the rebuilt layout atomically
-    mf.commit(batchSeq, Map(IvfIx -> stagedDirs),
-      expectedVersion = Some(snap.version))
-    gc(spark, root, mf.retainedUnion(IvfIx))
-    refit
-  }
+              batchSeq: Long): Seq[(Int, Array[Double])] =
+    IndexTxn.run(manifestOf(spark, root), batchSeq) { txn =>
+      val (dirs, refit) =
+        stageRebuild(spark, root, txn.snap, IvfIx, id, vec, batchSeq)
+      stage(txn, spark, root, IvfIx, dirs)
+      txn.commit()
+      refit
+    }
 
-  /** [[rebuild]] with the manifest commit LEFT TO THE CALLER
-    * (cross-family single-manifest pipelines — the curated tier's ANN
-    * rebuild, VERDICT r14 #3): refit centroids over the snapshot's
-    * CURRENT membership, reassign every row, stage every cell as a
-    * fresh generation, and return (staged directory set, refit
-    * centroids) for the caller's single commit. The caller must gc
-    * against its manifest's retained union after the commit lands. */
+  /** [[rebuild]]'s staging (also the curated tier's ANN rebuild,
+    * VERDICT r14 #3): refit centroids over the snapshot's CURRENT
+    * membership, reassign every row, stage every cell as a fresh
+    * generation, and return (staged directory set, refit centroids)
+    * for the caller's commit. */
   private[graft] def stageRebuild(spark: SparkSession, root: String,
                                   snap: IndexManifest.State, name: String,
                                   id: String, vec: String, batchSeq: Long)

@@ -1,10 +1,12 @@
 package graft.text
 
+import scala.concurrent.Future
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.dedup.{IndexManifest, LinearHashIndex}
+import graft.dedup.{IndexManifest, IndexTxn, LinearHashIndex}
 
 /** Persisted streaming BM25 inverted index — the retrieval-side member
   * of the index layer (dedup: [[graft.dedup.IndexedDedup]]; similarity:
@@ -49,11 +51,9 @@ import graft.dedup.{IndexManifest, LinearHashIndex}
   * while its dedup verdicts are still being computed; [[mergeBatch]]
   * runs both back to back with every doc kept.
   *
-  * Crash safety: rewrites land in fresh bucket generations; the batch
-  * becomes visible only when the single-file manifest rename commits
-  * all three indexes + the batch id together, and a replay of an
-  * already-committed batch is a no-op (batchSeq gate) — the
-  * [[graft.dedup.IndexedDedup]] protocol verbatim.
+  * Commit protocol: every write path is one [[graft.dedup.IndexTxn]]
+  * (crash and replay contract there); a replay of a committed batch is
+  * a no-op.
   *
   * Reference corpus context: the reference scores/retrieves nothing —
   * this is the 100 TB-scale retrieval tier above q92's one-shot BM25
@@ -77,13 +77,6 @@ object Bm25Index {
 
   /** Posting shards per term (the tk sub-key fan-out). */
   val Shards = 16
-
-  /** Crash-injection points for the commit-protocol specs (the
-    * [[graft.dedup.IndexedDedup]] discipline): after the term-index
-    * rewrite, and after all rewrites but before the manifest rename.
-    * Production never sets these. */
-  private[graft] var testCrashBetweenIndexWrites: () => Unit = () => ()
-  private[graft] var testCrashBeforeManifestCommit: () => Unit = () => ()
 
   private def unpersist(df: DataFrame): Unit =
     org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(df)
@@ -169,23 +162,14 @@ object Bm25Index {
     * both converge): [[prepareMerge]] then [[finishMerge]] with every
     * doc kept. */
   def mergeBatch(spark: SparkSession, idx: Indexes, batch: DataFrame,
-                 batchSeq: Long, maxTermDf: Long): Unit = {
-    val snap = idx.manifest.read().getOrElse(
-      sys.error(s"Bm25Index: no committed manifest at ${idx.manifest.root}"))
-    if (snap.batchSeq >= batchSeq) return // committed replay
-    val perT = prepareMerge(spark, idx, batch, snap)
-    val m =
-      try finishMerge(spark, idx, perT, None, maxTermDf, snap)
-      finally unpersist(perT)
-    // THE commit point: all three indexes + the batch id flip together,
-    // CAS'd against the staged-from version (a zombie writer publishes
-    // nothing); gc keeps the retained-snapshot union (time travel stays
-    // readable)
-    idx.manifest.commit(batchSeq, m, expectedVersion = Some(snap.version))
-    idx.term.gc(idx.manifest.retainedUnion(idx.termName))
-    idx.doc.gc(idx.manifest.retainedUnion(idx.docName))
-    idx.stats.gc(idx.manifest.retainedUnion(idx.statsName))
-  }
+                 batchSeq: Long, maxTermDf: Long): Unit =
+    IndexTxn.run(idx.manifest, batchSeq) { txn =>
+      if (txn.writes) {
+        finishMerge(spark, txn, idx, prepareMerge(spark, txn, idx, batch),
+          None, maxTermDf)
+        txn.commit()
+      }
+    }
 
   /** The READ-ONLY half of a merge, over the whole batch: ONE pinned
     * term-keyed pass over the batch's doc terms ∪ the probed postings.
@@ -195,11 +179,12 @@ object Bm25Index {
     * with no distinct); `dfk`, its count of live postings; and `tomb`.
     * Groups without a batch entry are the co-bucketed rows the probe
     * reads along, dropped before the pin. Writes nothing, so a caller
-    * may run it before it knows which docs it keeps; the caller
-    * releases the returned frame once [[finishMerge]] has returned. */
-  private[graft] def prepareMerge(spark: SparkSession, idx: Indexes,
-                                  batch: DataFrame,
-                                  snap: IndexManifest.State): DataFrame = {
+    * may run it before it knows which docs it keeps; the frame stays
+    * pinned until `txn` exits. */
+  private[graft] def prepareMerge(spark: SparkSession, txn: IndexTxn,
+                                  idx: Indexes,
+                                  batch: DataFrame): DataFrame = {
+    val snap = txn.snap
     val bIds = batch.select("doc_id").distinct()
     val already = idx.doc.probe(bIds, snap.buckets(idx.docName))
       .join(bIds, Seq("doc_id"), "left_semi").select("doc_id")
@@ -209,7 +194,7 @@ object Bm25Index {
     val entries = nt.select(col("term"),
       struct("doc_id", "tf", "dl", "first").as("__e"),
       lit(null).cast("long").as("__p"))
-    entries
+    txn.pinned(entries
       .unionByName(posts.select(col("term"),
         lit(null).cast(entries.schema("__e").dataType).as("__e"),
         col("doc_id").as("__p")))
@@ -218,22 +203,21 @@ object Bm25Index {
         count(when(col("__p") >= 0L, 1)).as("dfk"),
         coalesce(max(col("__p") === -1L), lit(false)).as("tomb"))
       .where(size(col("e")) > 0)
-      .localCheckpoint(true)
+      .localCheckpoint(true))
   }
 
   /** The WRITE half of a merge: stage the rewrites for the `kept` docs
-    * of a [[prepareMerge]] frame (None = every doc) and return the
-    * bucket sets for the caller's single manifest commit; the caller
-    * gcs each index against `manifest.retainedUnion` after it lands.
+    * of a [[prepareMerge]] frame (None = every doc) in `txn`.
     * Everything is read off the pinned frame with no new shuffle: df
     * counts KEPT docs only — batch-relative df is current postings +
     * kept entries, monotone, so crossing the cap tombstones the term
     * for good — and the term rewrite's key set is the kept terms, so it
     * touches the same buckets a merge of the kept docs alone would. */
-  private[graft] def finishMerge(spark: SparkSession, idx: Indexes,
-                                 perT: DataFrame, kept: Option[Array[Long]],
-                                 maxTermDf: Long, snap: IndexManifest.State)
-      : Map[String, Set[String]] = {
+  private[graft] def finishMerge(spark: SparkSession, txn: IndexTxn,
+                                 idx: Indexes, perT: DataFrame,
+                                 kept: Option[Array[Long]],
+                                 maxTermDf: Long): Unit = {
+    val snap = txn.snap
     val liveT = snap.buckets(idx.termName)
     val liveD = snap.buckets(idx.docName)
     val liveG = snap.buckets(idx.statsName)
@@ -246,11 +230,10 @@ object Bm25Index {
     val newPerm = perK.where(col("after") && !col("tomb")).select("term")
     val keptEx = perK.select(col("term"), col("after"),
       explode(col("ke")).as("x"))
-    // the three rewrites touch DISJOINT indexes and nothing is visible
-    // before the single manifest rename, so they OVERLAP on the shared
-    // stage pool (guide §2.6, OPTIMIZATION r15 — the per-batch path is
-    // job-latency-bound); exception paths quiesce in-flight futures
-    val fTerm = graft.ops.Exec.fork(
+    // the three rewrites touch DISJOINT indexes, so they OVERLAP on the
+    // shared stage pool (guide §2.6, OPTIMIZATION r15 — the per-batch
+    // path is job-latency-bound)
+    val fTerm = txn.fork(
       idx.term.rewrite(shardKeys(spark, perK.select("term")), liveT) { old =>
         old.join(broadcast(newPerm), Seq("term"), "left_anti")
           .unionByName(keptEx.where(!col("after"))
@@ -258,39 +241,40 @@ object Bm25Index {
               col("term"), col("x.doc_id").as("doc_id"), col("x.tf").as("tf")))
           .unionByName(tombRows(newPerm))
       })
-    try {
-      testCrashBetweenIndexWrites()
-    } catch { case t: Throwable => graft.ops.Exec.quiesce(fTerm); throw t }
+    txn.point(IndexTxn.Point.Bm25BetweenWrites)
     val newDl = keptEx.where(col("x.first"))
       .select(col("x.doc_id").as("doc_id"), col("x.dl").as("dl"))
-    val (newLiveT, newLiveD, newLiveG) = try {
-      val fDoc = graft.ops.Exec.fork(
-        idx.doc.rewrite(newDl.select("doc_id"), liveD) { old =>
-          old.unionByName(newDl)
-        })
-      val fStats = graft.ops.Exec.fork {
-        val inc = newDl.agg(count(lit(1)).as("dn"),
-          coalesce(sum("dl"), lit(0L)).as("ddl"))
-        val gKeys = idx.stats.allRows(liveG).select("k") // 1 row
-        idx.stats.rewrite(gKeys, liveG) { old =>
-          old.crossJoin(broadcast(inc)).select(col("k"),
-            (col("n_docs") + col("dn")).as("n_docs"),
-            (col("total_dl") + col("ddl")).as("total_dl"))
-        }
-      }
-      val t0 =
-        try graft.ops.Exec.await(fTerm)
-        catch { case t: Throwable =>
-          graft.ops.Exec.quiesce(fDoc); graft.ops.Exec.quiesce(fStats); throw t
-        }
-      val d0 =
-        try graft.ops.Exec.await(fDoc)
-        catch { case t: Throwable => graft.ops.Exec.quiesce(fStats); throw t }
-      (t0, d0, graft.ops.Exec.await(fStats))
-    } catch { case t: Throwable => graft.ops.Exec.quiesce(fTerm); throw t }
-    testCrashBeforeManifestCommit()
-    Map(idx.termName -> newLiveT, idx.docName -> newLiveD,
-      idx.statsName -> newLiveG)
+    val fDoc = txn.fork(
+      idx.doc.rewrite(newDl.select("doc_id"), liveD) { old =>
+        old.unionByName(newDl)
+      })
+    val fStats = txn.fork(restat(idx, liveG,
+      newDl.agg(count(lit(1)).as("dn"), coalesce(sum("dl"), lit(0L)).as("ddl")),
+      sign = 1L))
+    stageRewrites(txn, idx, fTerm, fDoc, fStats)
+  }
+
+  /** The stats rewrite: `delta`'s one row (dn, ddl) added `sign` times. */
+  private def restat(idx: Indexes, liveG: Set[String], delta: DataFrame,
+                     sign: Long): Set[String] = {
+    val gKeys = idx.stats.allRows(liveG).select("k") // 1 row
+    idx.stats.rewrite(gKeys, liveG) { old =>
+      old.crossJoin(broadcast(delta)).select(col("k"),
+        (col("n_docs") + col("dn") * sign).as("n_docs"),
+        (col("total_dl") + col("ddl") * sign).as("total_dl"))
+    }
+  }
+
+  /** Await the three rewrites (term, doc, stats) and stage them. */
+  private def stageRewrites(txn: IndexTxn, idx: Indexes,
+                            fTerm: Future[Set[String]],
+                            fDoc: Future[Set[String]],
+                            fStats: Future[Set[String]]): Unit = {
+    val (t, d, g) = (txn.await(fTerm), txn.await(fDoc), txn.await(fStats))
+    txn.point(IndexTxn.Point.Bm25Staged)
+    txn.stage(idx.termName, idx.term, t)
+    txn.stage(idx.docName, idx.doc, d)
+    txn.stage(idx.statsName, idx.stats, g)
   }
 
   /** RETRACTION (VERDICT r12 #1): remove `retract`'s docs (doc_id,
@@ -307,57 +291,49 @@ object Bm25Index {
     * BIT-EQUIVALENT to one bootstrapped from scratch on the remaining
     * corpus (Bm25IndexSpec proves per-index content equality), so
     * every query result equals a one-shot scorer over the remaining
-    * corpus. Replay of a committed retract is a no-op (batchSeq gate);
-    * crash protocol as [[mergeBatch]]. */
+    * corpus. Replay of a committed retract is a no-op. */
   def retractBatch(spark: SparkSession, idx: Indexes, retract: DataFrame,
                    batchSeq: Long, maxTermDf: Long,
-                   retained: Option[DataFrame]): Unit = {
-    val snap = idx.manifest.read().getOrElse(
-      sys.error(s"Bm25Index: no committed manifest at ${idx.manifest.root}"))
-    stageRetract(spark, idx, retract, batchSeq, maxTermDf, retained, snap)
-      .foreach { m =>
-        idx.manifest.commit(batchSeq, m,
-          expectedVersion = Some(snap.version))
-        idx.term.gc(idx.manifest.retainedUnion(idx.termName))
-        idx.doc.gc(idx.manifest.retainedUnion(idx.docName))
-        idx.stats.gc(idx.manifest.retainedUnion(idx.statsName))
+                   retained: Option[DataFrame]): Unit =
+    IndexTxn.run(idx.manifest, batchSeq) { txn =>
+      if (txn.writes) {
+        stageRetract(spark, txn, idx, retract, maxTermDf, retained)
+        txn.commit()
       }
-  }
+    }
 
-  /** [[retractBatch]] with the commit left to the caller. */
-  private[graft] def stageRetract(spark: SparkSession, idx: Indexes,
-                                  retract: DataFrame, batchSeq: Long,
+  /** Stage [[retractBatch]]'s rewrites in `txn` (which writes). */
+  private[graft] def stageRetract(spark: SparkSession, txn: IndexTxn,
+                                  idx: Indexes, retract: DataFrame,
                                   maxTermDf: Long,
-                                  retained: Option[DataFrame],
-                                  snap: IndexManifest.State)
-      : Option[Map[String, Set[String]]] = {
-    if (snap.batchSeq >= batchSeq) return None // committed replay
+                                  retained: Option[DataFrame]): Unit = {
+    val snap = txn.snap
     val liveT = snap.buckets(idx.termName)
     val liveD = snap.buckets(idx.docName)
     val liveG = snap.buckets(idx.statsName)
     val rIds = retract.select("doc_id").distinct()
     // docs actually indexed (retracting a non-member is a no-op), with
     // their indexed lengths for the exact stats decrement
-    val present = idx.doc.probe(rIds, liveD)
+    val present = txn.pinned(idx.doc.probe(rIds, liveD)
       .join(broadcast(rIds), Seq("doc_id"), "left_semi")
-      .select("doc_id", "dl").localCheckpoint(true)
+      .select("doc_id", "dl").localCheckpoint(true))
     val presentIds = present.select("doc_id")
-    val rt = docTerms(retract)
+    val rt = txn.pinned(docTerms(retract)
       .join(broadcast(presentIds), Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val terms = rt.select("term").distinct()
     val probeKeys = shardKeys(spark, terms)
     val pm = idx.term.probe(probeKeys, liveT)
       .join(broadcast(terms), Seq("term"))
-    val tombTouched = pm.where(col("doc_id") === -1L).select("term")
-      .localCheckpoint(true)
+    val tombTouched = txn.pinned(pm.where(col("doc_id") === -1L).select("term")
+      .localCheckpoint(true))
     // tombstone re-audit over the REMAINING corpus, restricted to the
     // touched tombstoned terms (only they can have lost df)
     val restored = retained match {
-      case Some(rem) if !tombTouched.isEmpty => docTerms(rem)
-        .join(broadcast(tombTouched), Seq("term"))
-        .localCheckpoint(true)
-      case _ => rt.limit(0).localCheckpoint(true)
+      case Some(rem) if !tombTouched.isEmpty =>
+        txn.pinned(docTerms(rem).join(broadcast(tombTouched), Seq("term"))
+          .localCheckpoint(true))
+      case _ => rt.limit(0) // empty: nothing to pin
     }
     // un-tombstone = touched tombstoned terms whose remaining-corpus df
     // fell back <= cap, INCLUDING df = 0 (every containing doc
@@ -367,17 +343,17 @@ object Bm25Index {
     // the touched set against the still-over-cap terms instead.
     val overCap = restored.groupBy("term").agg(count(lit(1)).as("dfr"))
       .where(col("dfr") > maxTermDf).select("term")
-    val unTomb = (if (retained.isDefined)
+    val unTomb = txn.pinned((if (retained.isDefined)
         tombTouched.join(broadcast(overCap), Seq("term"), "left_anti")
       else tombTouched.limit(0)) // one-way cap policy: never un-tombstone
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val restoredLive = restored
       .join(broadcast(unTomb), Seq("term"), "left_semi")
       .select(tkCol(col("term"), col("doc_id")).as("tk"),
         col("term"), col("doc_id"), col("tf"))
-    // disjoint-index rewrites overlap (guide §2.6) — same protocol
-    // shape as finishMerge's staged rewrites above
-    val fTerm = graft.ops.Exec.fork(idx.term.rewrite(probeKeys, liveT) { old =>
+    // disjoint-index rewrites overlap (guide §2.6) — same shape as
+    // finishMerge's above
+    val fTerm = txn.fork(idx.term.rewrite(probeKeys, liveT) { old =>
       // drop the retracted docs' postings and the un-tombstoned
       // tombstone rows (a tombstoned term has ONLY its tombstone row),
       // then restore the re-derived posting lists
@@ -385,38 +361,14 @@ object Bm25Index {
         .join(broadcast(unTomb), Seq("term"), "left_anti")
         .unionByName(restoredLive)
     })
-    try {
-      testCrashBetweenIndexWrites()
-    } catch { case t: Throwable => graft.ops.Exec.quiesce(fTerm); throw t }
-    val (newLiveT, newLiveD, newLiveG) = try {
-      val fDoc = graft.ops.Exec.fork(
-        idx.doc.rewrite(presentIds, liveD) { old =>
-          old.join(broadcast(presentIds), Seq("doc_id"), "left_anti")
-        })
-      val fStats = graft.ops.Exec.fork {
-        val dec = present.agg(count(lit(1)).as("dn"),
-          coalesce(sum("dl"), lit(0L)).as("ddl"))
-        val gKeys = idx.stats.allRows(liveG).select("k") // 1 row
-        idx.stats.rewrite(gKeys, liveG) { old =>
-          old.crossJoin(broadcast(dec)).select(col("k"),
-            (col("n_docs") - col("dn")).as("n_docs"),
-            (col("total_dl") - col("ddl")).as("total_dl"))
-        }
-      }
-      val t0 =
-        try graft.ops.Exec.await(fTerm)
-        catch { case t: Throwable =>
-          graft.ops.Exec.quiesce(fDoc); graft.ops.Exec.quiesce(fStats); throw t
-        }
-      val d0 =
-        try graft.ops.Exec.await(fDoc)
-        catch { case t: Throwable => graft.ops.Exec.quiesce(fStats); throw t }
-      (t0, d0, graft.ops.Exec.await(fStats))
-    } catch { case t: Throwable => graft.ops.Exec.quiesce(fTerm); throw t }
-    testCrashBeforeManifestCommit()
-    Seq(present, rt, tombTouched, restored, unTomb).foreach(unpersist)
-    Some(Map(idx.termName -> newLiveT, idx.docName -> newLiveD,
-      idx.statsName -> newLiveG))
+    txn.point(IndexTxn.Point.Bm25BetweenWrites)
+    val fDoc = txn.fork(idx.doc.rewrite(presentIds, liveD) { old =>
+      old.join(broadcast(presentIds), Seq("doc_id"), "left_anti")
+    })
+    val fStats = txn.fork(restat(idx, liveG,
+      present.agg(count(lit(1)).as("dn"), coalesce(sum("dl"), lit(0L)).as("ddl")),
+      sign = -1L))
+    stageRewrites(txn, idx, fTerm, fDoc, fStats)
   }
 
   /** Top-k docs for the fixed `terms` against the committed snapshot —

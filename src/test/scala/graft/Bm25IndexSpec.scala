@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.Bm25Index
+import graft.dedup.IndexTxn.Point
 
 /** Commit-protocol and probe-IO pins for the persisted BM25 index —
   * the same bar IndexedDedupSpec holds the dedup indexes to:
@@ -85,15 +86,15 @@ class Bm25IndexSpec extends AnyFunSuite {
     "holds the pre-batch snapshot of all three indexes, replay " +
     "converges bit-identically") {
     crashCase(
-      hook => Bm25Index.testCrashBetweenIndexWrites = hook,
-      () => Bm25Index.testCrashBetweenIndexWrites = () => ())
+      hook => CrashPoints.arm(Point.Bm25BetweenWrites)(hook),
+      () => CrashPoints.disarm())
   }
 
   test("Bm25Index: crash AFTER all rewrites, BEFORE the manifest " +
     "rename — same guarantee (the rename is the only commit point)") {
     crashCase(
-      hook => Bm25Index.testCrashBeforeManifestCommit = hook,
-      () => Bm25Index.testCrashBeforeManifestCommit = () => ())
+      hook => CrashPoints.arm(Point.Bm25Staged)(hook),
+      () => CrashPoints.disarm())
   }
 
   test("CuratedIndexes: df counts KEPT docs only — a batch whose " +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{Dedup, IndexManifest, IndexedDedup, LinearHashIndex}
+import graft.dedup.IndexTxn.Point
 
 /** Pins for the persistent-dedup-index work (VERDICT r10 #1, r11 #1):
   * linear-hash bucket splitting under generational directories,
@@ -388,15 +389,15 @@ class IndexedDedupSpec extends AnyFunSuite {
   test("IndexedDedup: crash BETWEEN the two index rewrites — manifest " +
     "holds the pre-batch snapshot, replay converges bit-identically") {
     crashCase(
-      hook => IndexedDedup.testCrashBetweenIndexWrites = hook,
-      () => IndexedDedup.testCrashBetweenIndexWrites = () => ())
+      hook => CrashPoints.arm(Point.DedupBetweenWrites)(hook),
+      () => CrashPoints.disarm())
   }
 
   test("IndexedDedup: crash AFTER both rewrites, BEFORE the manifest " +
     "rename — same guarantee (the rename is the only commit point)") {
     crashCase(
-      hook => IndexedDedup.testCrashBeforeManifestCommit = hook,
-      () => IndexedDedup.testCrashBeforeManifestCommit = () => ())
+      hook => CrashPoints.arm(Point.DedupStaged)(hook),
+      () => CrashPoints.disarm())
   }
 
   test("IndexedDedup: keep-side IO tracks the batch — a 2-doc batch " +

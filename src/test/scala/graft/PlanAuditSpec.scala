@@ -831,4 +831,26 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters") && plan.contains("event_type"),
       plan.take(2000))
   }
+
+  test("index families keep one commit path: in dedup/, text/, " +
+    "similarity/ and curation/ only IndexTxn.scala commits a manifest " +
+    "(bootstraps apart), forks or awaits stagings, or names testCrash") {
+    val banned = Seq(
+      """\.commit\((?!\)|0L,)""".r, // a manifest commit; txn.commit() is fine
+      """Exec\.(fork|await|quiesce)""".r,
+      """testCrash""".r)
+    val files = Seq("dedup", "text", "similarity", "curation").flatMap { p =>
+      val d = new java.io.File(s"src/main/scala/graft/$p")
+      assert(d.isDirectory, s"missing source directory $d")
+      d.listFiles.filter(_.getName.endsWith(".scala")).toSeq
+    }
+    assert(files.exists(_.getName == "IndexTxn.scala"))
+    val offenders = for {
+      f <- files if f.getName != "IndexTxn.scala"
+      (ln, i) <- java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).zipWithIndex
+      if banned.exists(_.findFirstIn(ln).isDefined)
+    } yield s"${f.getName}:${i + 1}: ${ln.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

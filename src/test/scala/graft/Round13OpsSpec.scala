@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{Dedup, IndexManifest, IndexedDedup}
+import graft.dedup.IndexTxn.Point
 import graft.text.Bm25Index
 
 /** Round-13 pins: RETRACTION batches for the persisted index layer
@@ -145,15 +146,15 @@ class Round13OpsSpec extends AnyFunSuite {
   test("IndexedDedup.retractBatch: crash BETWEEN the two index rewrites " +
     "— readers hold the pre-retract snapshot, replay converges") {
     dedupCrashCase(
-      hook => IndexedDedup.testCrashBetweenIndexWrites = hook,
-      () => IndexedDedup.testCrashBetweenIndexWrites = () => ())
+      hook => CrashPoints.arm(Point.DedupBetweenWrites)(hook),
+      () => CrashPoints.disarm())
   }
 
   test("IndexedDedup.retractBatch: crash AFTER both rewrites BEFORE the " +
     "manifest rename — same guarantee") {
     dedupCrashCase(
-      hook => IndexedDedup.testCrashBeforeManifestCommit = hook,
-      () => IndexedDedup.testCrashBeforeManifestCommit = () => ())
+      hook => CrashPoints.arm(Point.DedupStaged)(hook),
+      () => CrashPoints.disarm())
   }
 
   // ------------------------------------------------ Bm25Index retract
@@ -242,15 +243,15 @@ class Round13OpsSpec extends AnyFunSuite {
   test("Bm25Index.retractBatch: crash BETWEEN index rewrites — readers " +
     "hold the pre-retract snapshot, replay converges") {
     bm25CrashCase(
-      hook => Bm25Index.testCrashBetweenIndexWrites = hook,
-      () => Bm25Index.testCrashBetweenIndexWrites = () => ())
+      hook => CrashPoints.arm(Point.Bm25BetweenWrites)(hook),
+      () => CrashPoints.disarm())
   }
 
   test("Bm25Index.retractBatch: crash BEFORE the manifest rename — " +
     "same guarantee") {
     bm25CrashCase(
-      hook => Bm25Index.testCrashBeforeManifestCommit = hook,
-      () => Bm25Index.testCrashBeforeManifestCommit = () => ())
+      hook => CrashPoints.arm(Point.Bm25Staged)(hook),
+      () => CrashPoints.disarm())
   }
 
   // ------------------------------------------------ queryTable
@@ -358,10 +359,10 @@ class Round13OpsSpec extends AnyFunSuite {
     val crashed = curatedBoot(mkDocs(DedupKeep))
     val pre = curatedState(crashed)
     final class InjectedCrash extends RuntimeException("injected")
-    CuratedIndexes.testCrashBetweenFamilies = () => throw new InjectedCrash
+    CrashPoints.arm(Point.BetweenFamilies)(() => throw new InjectedCrash)
     try {
       intercept[InjectedCrash] { run(crashed); () }
-    } finally CuratedIndexes.testCrashBetweenFamilies = () => ()
+    } finally CrashPoints.disarm()
     assert(curatedState(crashed) == pre,
       "a crash between families leaked into the committed snapshot")
     assert(run(crashed) == ctrlVerdicts,
@@ -388,10 +389,10 @@ class Round13OpsSpec extends AnyFunSuite {
     val crashed = curatedBoot(mkDocs(DedupKeep))
     val pre = curatedState(crashed)
     final class InjectedCrash extends RuntimeException("injected")
-    CuratedIndexes.testCrashBetweenFamilies = () => throw new InjectedCrash
+    CrashPoints.arm(Point.BetweenFamilies)(() => throw new InjectedCrash)
     try {
       intercept[InjectedCrash] { doRetract(crashed) }
-    } finally CuratedIndexes.testCrashBetweenFamilies = () => ()
+    } finally CrashPoints.disarm()
     assert(curatedState(crashed) == pre,
       "a crashed cross-family retract leaked into the committed snapshot")
     doRetract(crashed)
@@ -435,12 +436,12 @@ class Round13OpsSpec extends AnyFunSuite {
     val pre = ids(crashed)
     val preDirs = IvfIndex.liveDirs(spark, crashed)
     final class InjectedCrash extends RuntimeException("injected")
-    IvfIndex.testCrashBeforeCommit = () => throw new InjectedCrash
+    CrashPoints.arm(Point.BeforeCommit)(() => throw new InjectedCrash)
     try {
       intercept[InjectedCrash] {
         IvfIndex.rebuild(spark, crashed, "vec_id", "embedding", batchSeq = 3L)
       }
-    } finally IvfIndex.testCrashBeforeCommit = () => ()
+    } finally CrashPoints.disarm()
     // no manifest landed: readers still resolve the pre-rebuild layout
     assert(IvfIndex.liveDirs(spark, crashed) == preDirs,
       "a crashed rebuild flipped readers to the half-committed generation")

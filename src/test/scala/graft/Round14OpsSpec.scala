@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{IndexManifest, IndexedDedup}
+import graft.dedup.IndexTxn.Point
 import graft.text.Bm25Index
 
 /** Round-14 pins: the ADVICE r13 fixes (zero-df tombstone re-audit in
@@ -168,12 +169,12 @@ class Round14OpsSpec extends AnyFunSuite {
     val pre = ivfRows(crashed)
     val preDirs = IvfIndex.liveDirs(spark, crashed)
     final class InjectedCrash extends RuntimeException("injected")
-    IvfIndex.testCrashBeforeCommit = () => throw new InjectedCrash
+    CrashPoints.arm(Point.BeforeCommit)(() => throw new InjectedCrash)
     try {
       intercept[InjectedCrash] {
         IvfIndex.mergeBatch(b2, "vec_id", "embedding", seeds, crashed, 2L)
       }
-    } finally IvfIndex.testCrashBeforeCommit = () => ()
+    } finally CrashPoints.disarm()
     assert(IvfIndex.liveDirs(spark, crashed) == preDirs
       && ivfRows(crashed) == pre,
       "a crashed merge leaked into the committed snapshot")
@@ -202,12 +203,12 @@ class Round14OpsSpec extends AnyFunSuite {
     val crashed = build()
     val pre = ivfRows(crashed)
     final class InjectedCrash extends RuntimeException("injected")
-    IvfIndex.testCrashBeforeCommit = () => throw new InjectedCrash
+    CrashPoints.arm(Point.BeforeCommit)(() => throw new InjectedCrash)
     try {
       intercept[InjectedCrash] {
         IvfIndex.deleteBatch(del, "vec_id", "embedding", seeds, crashed, 2L)
       }
-    } finally IvfIndex.testCrashBeforeCommit = () => ()
+    } finally CrashPoints.disarm()
     // the pre-takedown snapshot is COMPLETE — not a torn half-delete
     assert(ivfRows(crashed) == pre,
       "a crashed delete left a half-applied takedown visible")
@@ -318,10 +319,10 @@ class Round14OpsSpec extends AnyFunSuite {
     val crashed = curatedAnnBoot()
     val pre = curState(crashed)
     final class InjectedCrash extends RuntimeException("injected")
-    CuratedIndexes.testCrashBeforeAnnFamily = () => throw new InjectedCrash
+    CrashPoints.arm(Point.BeforeAnnFamily)(() => throw new InjectedCrash)
     try {
       intercept[InjectedCrash] { step(crashed) }
-    } finally CuratedIndexes.testCrashBeforeAnnFamily = () => ()
+    } finally CrashPoints.disarm()
     assert(curState(crashed) == pre,
       "a crash before the ann family leaked into the committed snapshot")
     step(crashed)
@@ -355,23 +356,17 @@ class Round14OpsSpec extends AnyFunSuite {
         maxShingleDf = 4, maxTermDf = 64L,
         annVecs = Some(curVecs(Seq(22L, 23L))))
     final class InjectedCrash extends RuntimeException("injected")
-    val hooks: Seq[(() => Unit) => Unit] = Seq(
-      h => CuratedIndexes.testCrashBetweenFamilies = h,
-      h => CuratedIndexes.testCrashBeforeAnnFamily = h)
-    hooks.foreach { arm =>
-      val idx = curatedAnnBoot()
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      arm(() => throw new InjectedCrash)
-      try intercept[InjectedCrash] { step(idx) }
-      finally arm(() => ())
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty, s"a crashed batch left $leaked pinned")
-      val v = step(idx)
-      assert(v.where(col("status") === "kept").select("doc_id").as[Long]
-        .collect().toSet == Set(22L))
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(v)
-      assert(curState(idx) == ((Set(1L, 2L, 3L, 4L, 22L),
-        Set(1L, 2L, 3L, 4L, 22L), Set(1L, 2L, 3L, 22L))))
+    // a crash at each point in turn must leave nothing pinned
+    def crashAtEach(points: Seq[Point])(run: => Unit): Unit =
+      points.foreach { p =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        CrashPoints.arm(p)(() => throw new InjectedCrash)
+        try intercept[InjectedCrash](run)
+        finally CrashPoints.disarm()
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"a crash at $p left $leaked pinned")
+      }
+    def noStrayDirs(idx: CuratedIndexes.Indexes): Unit = {
       val mf = idx.dedup.manifest
       def dirs(root: String): Set[String] =
         new java.io.File(root).listFiles.filter(_.isDirectory)
@@ -384,6 +379,102 @@ class Round14OpsSpec extends AnyFunSuite {
         assert(stray.isEmpty, s"$nm: uncommitted directories survive gc: $stray")
       }
     }
+    val curatedPoints = Seq(Point.BeforeDedupFamily, Point.BetweenFamilies,
+      Point.BeforeAnnFamily, Point.DedupBetweenWrites, Point.DedupStaged,
+      Point.Bm25BetweenWrites, Point.Bm25Staged, Point.BeforeCommit)
+    // ingest
+    val idx = curatedAnnBoot()
+    crashAtEach(curatedPoints) { step(idx); () }
+    val v = step(idx)
+    assert(v.where(col("status") === "kept").select("doc_id").as[Long]
+      .collect().toSet == Set(22L))
+    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(v)
+    assert(curState(idx) == ((Set(1L, 2L, 3L, 4L, 22L),
+      Set(1L, 2L, 3L, 4L, 22L), Set(1L, 2L, 3L, 22L))))
+    noStrayDirs(idx)
+    // takedown of doc 2
+    val taken = mkDocs(Seq(2L -> "e f g h"))
+    val rest = mkDocs(CurKeep.filterNot(_._1 == 2L))
+    val tIdx = curatedAnnBoot()
+    def takedown(): Unit =
+      CuratedIndexes.retractBatch(spark, tIdx, taken, 1L, k = 2,
+        maxShingleDf = 4, maxTermDf = 64L, retained = Some(rest),
+        retractVecs = Some(curVecs(Seq(2L))))
+    crashAtEach(curatedPoints)(takedown())
+    takedown()
+    assert(curState(tIdx) == ((Set(1L, 3L, 4L), Set(1L, 3L, 4L),
+      Set(1L, 3L))))
+    noStrayDirs(tIdx)
+    // the standalone takedowns
+    val dIdx = dedupBoot(mkDocs(CurKeep))
+    def dTakedown(): Unit = IndexedDedup.retractBatch(spark, dIdx, taken,
+      1L, k = 2, maxShingleDf = 4, retained = Some(rest))
+    crashAtEach(Seq(Point.DedupBetweenWrites, Point.DedupStaged,
+      Point.BeforeCommit))(dTakedown())
+    dTakedown()
+    assert(dedupState(dIdx)._2.map(_._1) == Set(1L, 3L, 4L))
+    val bIdx = bm25Boot(mkDocs(CurKeep))
+    def bTakedown(): Unit = Bm25Index.retractBatch(spark, bIdx, taken, 1L,
+      maxTermDf = 64L, retained = Some(rest))
+    crashAtEach(Seq(Point.Bm25BetweenWrites, Point.Bm25Staged,
+      Point.BeforeCommit))(bTakedown())
+    bTakedown()
+    assert(bm25State(bIdx)._2.map(_._1) == Set(1L, 3L, 4L))
+  }
+
+  test("CuratedIndexes: ingest, takedown and ANN rebuild pass the " +
+    "IndexTxn points in their documented launch order; a committed " +
+    "replay passes none") {
+    import scala.jdk.CollectionConverters._
+    import graft.curation.CuratedIndexes
+    val caller = Thread.currentThread
+    // (point, fired on the calling thread), in firing order
+    def record(f: => Unit): Seq[(Point, Boolean)] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Point, Boolean)]
+      graft.dedup.IndexTxn.testCrashHook =
+        p => seen.add(p -> (Thread.currentThread eq caller))
+      try f finally CrashPoints.disarm()
+      seen.asScala.toSeq
+    }
+    def onCaller(r: Seq[(Point, Boolean)]): Seq[Point] =
+      r.collect { case (p, true) => p }
+    def before(r: Seq[(Point, Boolean)], a: Point, b: Point): Boolean = {
+      val ps = r.map(_._1)
+      ps.contains(a) && ps.contains(b) && ps.indexOf(a) < ps.indexOf(b)
+    }
+    // the crossed families' inner points: each family's pair in order,
+    // after its launch, before the commit
+    def familiesInOrder(r: Seq[(Point, Boolean)]): Unit = {
+      assert(before(r, Point.BeforeDedupFamily, Point.DedupBetweenWrites)
+        && before(r, Point.DedupBetweenWrites, Point.DedupStaged)
+        && before(r, Point.DedupStaged, Point.BeforeCommit), r)
+      assert(before(r, Point.BetweenFamilies, Point.Bm25BetweenWrites)
+        && before(r, Point.Bm25BetweenWrites, Point.Bm25Staged)
+        && before(r, Point.Bm25Staged, Point.BeforeCommit), r)
+    }
+    val crossFamily = Seq(Point.BeforeDedupFamily, Point.BetweenFamilies,
+      Point.BeforeAnnFamily, Point.BeforeCommit)
+    val idx = curatedAnnBoot()
+    def ingest(): Unit = {
+      val v = CuratedIndexes.processBatch(spark, idx,
+        mkDocs(Seq(22L -> "q r s t")), 1L, k = 2, threshold = 0.3,
+        maxShingleDf = 4, maxTermDf = 64L, annVecs = Some(curVecs(Seq(22L))))
+      v.collect()
+      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(v)
+    }
+    val in = record(ingest())
+    assert(onCaller(in) == crossFamily, in)
+    familiesInOrder(in)
+    assert(record(ingest()).isEmpty, "a committed replay staged")
+    val out = record(CuratedIndexes.retractBatch(spark, idx,
+      mkDocs(Seq(2L -> "e f g h")), 2L, k = 2, maxShingleDf = 4,
+      maxTermDf = 64L, retained = Some(mkDocs(CurKeep.filterNot(_._1 == 2L)
+        ++ Seq(22L -> "q r s t"))), retractVecs = Some(curVecs(Seq(2L)))))
+    assert(onCaller(out) == crossFamily, out)
+    familiesInOrder(out)
+    val rebuilt = record(CuratedIndexes.rebuildAnn(spark, idx, 3L))
+    assert(rebuilt == Seq(Point.BeforeAnnFamily -> true,
+      Point.BeforeCommit -> true), rebuilt)
   }
 
   // ---------------------------------------- q307 hybrid fusion
@@ -521,10 +612,10 @@ class Round14OpsSpec extends AnyFunSuite {
     merge(xi, xs, b1, 1L)
     // crash BEFORE the retract commit, then restart-replay
     final class InjectedCrash extends RuntimeException("injected")
-    IndexedDedup.testCrashBeforeManifestCommit = () => throw new InjectedCrash
+    CrashPoints.arm(Point.DedupStaged)(() => throw new InjectedCrash)
     try {
       intercept[InjectedCrash] { takedown(xi, xs, 2L) }
-    } finally IndexedDedup.testCrashBeforeManifestCommit = () => ()
+    } finally CrashPoints.disarm()
     takedown(xi, xs, 2L)
     // and a second redelivery of the now-committed takedown
     takedown(xi, xs, 2L)
@@ -541,8 +632,8 @@ class Round14OpsSpec extends AnyFunSuite {
     val zombie = mkDocs(Seq(51L -> "z1 z2 z3"))
     // the winner's commit lands while the zombie sits between staging
     // and its manifest rename — simulated inside the crash hook
-    IndexedDedup.testCrashBeforeManifestCommit = () => {
-      IndexedDedup.testCrashBeforeManifestCommit = () => ()
+    CrashPoints.arm(Point.DedupStaged) { () =>
+      CrashPoints.disarm()
       IndexedDedup.processBatch(spark, idx, winner, 2L, k = 2,
         threshold = 0.3, maxShingleDf = 4).collect()
       ()
@@ -552,7 +643,7 @@ class Round14OpsSpec extends AnyFunSuite {
         IndexedDedup.processBatch(spark, idx, zombie, 2L, k = 2,
           threshold = 0.3, maxShingleDf = 4).collect()
       }
-    } finally IndexedDedup.testCrashBeforeManifestCommit = () => ()
+    } finally CrashPoints.disarm()
     val st = idx.manifest.read().get
     assert(st.version == 2L && st.batchSeq == 2L)
     val docs = idx.doc.allRows(st.buckets(idx.docName))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.IndexManifest
+import graft.dedup.IndexTxn.Point
 
 /** Round-15 pins: the ADVICE r14 fixes (pre-r14 IVF layouts fail
   * loudly instead of reading as empty; q308's census anchors by
@@ -231,12 +232,12 @@ class Round15OpsSpec extends AnyFunSuite {
     val preState = curState(crashed)
     val preSnap = crashed.dedup.manifest.read().get
     final class InjectedCrash extends RuntimeException("injected")
-    CuratedIndexes.testCrashBeforeAnnFamily = () => throw new InjectedCrash
+    CrashPoints.arm(Point.BeforeAnnFamily)(() => throw new InjectedCrash)
     try {
       intercept[InjectedCrash] {
         CuratedIndexes.rebuildAnn(spark, crashed, batchSeq = 2L)
       }
-    } finally CuratedIndexes.testCrashBeforeAnnFamily = () => ()
+    } finally CrashPoints.disarm()
     assert(crashed.dedup.manifest.read().get.version == preSnap.version
       && curState(crashed) == preState,
       "a crashed rebuild leaked into the committed snapshot")
