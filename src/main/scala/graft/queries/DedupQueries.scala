@@ -176,16 +176,26 @@ object DedupQueries extends QueryPack {
     * drop and labels components with a recursive CTE. */
   private def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
+    val (b1, b2) = lifecycleBatches(docs)
+    Dedup.incrementalDedup(docs, b1.unionByName(b2), "doc_id", "text",
+        k = 3, threshold = 0.3, maxShingleDf = 20)
+      .orderBy("doc_id")
+  }
+
+  /** q111's drop split into the two batches the index-lifecycle queries
+    * stream (q274, q283, q293, q297, q304, q306; q301/q308 take b1):
+    * b1 = exact copies of every 10th doc (+1M) ∪ token-reversed copies
+    * of every 15th (+3M); b2 = a second reversed copy of every 30th
+    * (+4M, an exact dup of its +3M sibling). */
+  private[queries] def lifecycleBatches(docs: DataFrame): (DataFrame, DataFrame) = {
     val rev = concat_ws(" ", reverse(split(trim(col("text")), "\\s+")))
-    val drop = docs.where(col("doc_id") % 10 === 0)
+    val b1 = docs.where(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
       .unionByName(docs.where(col("doc_id") % 15 === 0)
         .select((col("doc_id") + 3000000L).as("doc_id"), rev.as("text")))
-      .unionByName(docs.where(col("doc_id") % 30 === 0)
-        .select((col("doc_id") + 4000000L).as("doc_id"), rev.as("text")))
-    Dedup.incrementalDedup(docs, drop, "doc_id", "text",
-        k = 3, threshold = 0.3, maxShingleDf = 20)
-      .orderBy("doc_id")
+    val b2 = docs.where(col("doc_id") % 30 === 0)
+      .select((col("doc_id") + 4000000L).as("doc_id"), rev.as("text"))
+    (b1, b2)
   }
 
   /** q122: cross-document repeated spans — the distributed form of

@@ -735,28 +735,22 @@ object EngineQueries extends QueryPack {
     * each file is one row, no driver materialization; the aggregate is
     * the only exchange. Oracle replays payload generation in SQL.
     */
-  /** q209's fixture dir, staged ONCE per session per sf dir (the
-    * staging — a dimension-bounded driver loop writing 25 files — is
-    * test scaffolding, not the operator; caching it keeps repeated
-    * bench invocations measuring the binaryFile scan, not file
-    * creation, and stops temp dirs accumulating per call). */
-  private val binFixtureByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def binaryIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.HashFunctions.poly_hash
-    val binDir = binFixtureByDir.computeIfAbsent(dir, _ => {
-      val d = MlQueries.tempDirDeletedOnExit("graft_bin_")
+    // the payload files are a session fixture: staging them (a
+    // dimension-bounded driver loop writing 25 files) is test
+    // scaffolding, not the operator, so repeated bench invocations
+    // measure the binaryFile scan, not file creation
+    val Seq(binDir) = SessionFixtures.shared("bin", dir, Seq("blobs")) { ds =>
       Tables.nation(spark, dir).select("n_nationkey").collect()
         .map(_.getAs[Number](0).longValue).foreach { id =>
           val unit = f"blob-$id%010d;"
           val payload = unit * (id % 7 + 1).toInt
           java.nio.file.Files.write(
-            java.nio.file.Paths.get(d, f"blob_$id%010d.bin"),
+            java.nio.file.Paths.get(ds(0), f"blob_$id%010d.bin"),
             payload.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
         }
-      d
-    })
+    }
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.bin")
       .load(binDir)
@@ -833,15 +827,6 @@ object EngineQueries extends QueryPack {
     "q243_page_pruning" -> pagePruning
   )
 
-  /** q243's staged table: events sorted GLOBALLY by user_id into ONE
-    * file (one row group at these SFs) with 200-row data pages
-    * (`parquet.page.row.count.limit`), so the page index carries many
-    * disjoint [min,max] ranges INSIDE a single row group — the layout
-    * where q232's row-group tier can prune nothing and only the page
-    * tier can. */
-  private val pageFixtureByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q243: PAGE-GRANULARITY data skipping driver-visible — one tier
     * below q232: that query proves row-group min/max pruning; this one
     * proves the scan skips DATA PAGES inside a row group using the
@@ -865,8 +850,13 @@ object EngineQueries extends QueryPack {
   private def pagePruning(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Layout
     val probeKey = 7L
-    val staged = pageFixtureByDir.computeIfAbsent(dir, _ => {
-      val d = MlQueries.tempDirDeletedOnExit("graft_page_")
+    // the staged table, a session fixture: events sorted GLOBALLY by
+    // user_id into ONE file (one row group at these SFs) with 200-row
+    // data pages (`parquet.page.row.count.limit`), so the page index
+    // carries many disjoint [min,max] ranges INSIDE a single row group —
+    // the layout where q232's row-group tier can prune nothing and only
+    // the page tier can
+    val Seq(staged) = SessionFixtures.shared("page", dir, Seq("events")) { ds =>
       Tables.events(spark, dir)
         .select(col("user_id"), col("event_id"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -874,9 +864,8 @@ object EngineQueries extends QueryPack {
         .sortWithinPartitions("user_id")
         .write
         .option("parquet.page.row.count.limit", "200")
-        .mode("overwrite").parquet(d)
-      d
-    })
+        .mode("overwrite").parquet(ds(0))
+    }
     val (_, colIdxPresent, totalRows) =
       Layout.skippingStructures(spark, staged, "user_id")
     val (totalPages, _, pageExcludableRows) =
@@ -894,14 +883,6 @@ object EngineQueries extends QueryPack {
       .toDF("probe_user_id", "n_rows", "sum_cents",
         "page_index_present", "multi_page", "page_pruned")
   }
-
-  /** q232's staged table, written ONCE per session per sf dir (the q209
-    * staging-cache discipline): events re-laid-out as 8 user_id range
-    * files, sorted within, with SPLIT BLOOM FILTERS opted in on user_id
-    * (`parquet.bloom.filter.enabled#user_id`) — column indexes are
-    * written by default since parquet-mr 1.11. */
-  private val skipFixtureByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q232: PARQUET-NATIVE DATA SKIPPING driver-visible — the format
     * layer's pruning story beyond q118's z-order/min-max: the staged
@@ -929,8 +910,11 @@ object EngineQueries extends QueryPack {
   private def parquetSkipping(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Layout
     val probeKey = 7L
-    val staged = skipFixtureByDir.computeIfAbsent(dir, _ => {
-      val d = MlQueries.tempDirDeletedOnExit("graft_skip_")
+    // the staged table, a session fixture: events re-laid-out as 8
+    // user_id range files, sorted within, with SPLIT BLOOM FILTERS opted
+    // in on user_id (`parquet.bloom.filter.enabled#user_id`) — column
+    // indexes are written by default since parquet-mr 1.11
+    val Seq(staged) = SessionFixtures.shared("skip", dir, Seq("events")) { ds =>
       Tables.events(spark, dir)
         .select(col("user_id"), col("event_id"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -944,9 +928,8 @@ object EngineQueries extends QueryPack {
         // plain-encode the key column so the bloom actually writes —
         // at real NDV (200k+ keys) dictionaries fall back anyway
         .option("parquet.enable.dictionary#user_id", "false")
-        .mode("overwrite").parquet(d)
-      d
-    })
+        .mode("overwrite").parquet(ds(0))
+    }
     val (bloomPresent, colIdxPresent, totalRows) =
       Layout.skippingStructures(spark, staged, "user_id")
     val excludable = Layout.excludableRows(spark, staged, "user_id", probeKey)

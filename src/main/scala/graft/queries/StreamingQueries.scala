@@ -646,13 +646,7 @@ object StreamingQueries extends QueryPack {
   private def streamingIncDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Dedup
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val rev = concat_ws(" ", reverse(split(trim(col("text")), "\\s+")))
-    val b1 = docs.where(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      .unionByName(docs.where(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), rev.as("text")))
-    val b2 = docs.where(col("doc_id") % 30 === 0)
-      .select((col("doc_id") + 4000000L).as("doc_id"), rev.as("text"))
+    val (b1, b2) = DedupQueries.lifecycleBatches(docs)
     val keepDir = MlQueries.tempDirDeletedOnExit("graft_sdedup_keep_")
     val outDir = MlQueries.tempDirDeletedOnExit("graft_sdedup_out_")
     def mergeKeep(d: DataFrame): Unit =
@@ -692,44 +686,22 @@ object StreamingQueries extends QueryPack {
       .orderBy("batch_seq", "doc_id")
   }
 
-  /** q283's bootstrapped index snapshot, built ONCE per session per sf
-    * dir (the q209 staging-cache discipline, applied per VERDICT r11
-    * #3): the O(corpus) bootstrap is setup, not the operator — each
-    * query run copies the snapshot to fresh working directories and
-    * streams against the COPY, so bench reps time the steady-state
-    * per-batch path (index probes + fresh-generation rewrites + the
-    * manifest commit), which is the cost shape the
-    * IndexedDedupSpec contract is about. */
-  private val xdedupSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
-  /** q293/q297's session-cached bootstrap snapshots (one O(corpus)
-    * build per sf dir each — the q283/q301 discipline, OPTIMIZATION
-    * r15: both queries re-bootstrapped per rep, the only lifecycle
-    * queries still paying the corpus scan inside the measured rep). */
-  private val driftSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-  private val ttSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  /** Copy `src`'s contents under the existing dir `dst` (local-FS
-    * snapshot clone; bounded by the index size at fixture SF). */
-  private def copyDirContents(spark: SparkSession, src: String, dst: String): Unit = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sp = new Path(src)
-    val fs = sp.getFileSystem(conf)
-    // One entry per bucket/cell generation directory — dozens of small
-    // independent copies. Serial FileUtil.copy left the copy latency on
-    // the lifecycle queries' critical path (OPTIMIZATION r15: the reps
-    // are driver/latency-bound, not bandwidth-bound); copy entries
-    // concurrently instead. FileUtil.copy streams are per-call state,
-    // so concurrent calls on disjoint entries are safe.
-    java.util.Arrays.stream(fs.listStatus(sp)).parallel().forEach { st =>
-      FileUtil.copy(fs, st.getPath, fs,
-        new Path(new Path(dst), st.getPath.getName), false, conf)
-      ()
+  /** A fresh clone of `recipe`'s [[graft.dedup.IndexedDedup]] bootstrap
+    * of `corpus` (k = 3, df cap 20), attached. The O(corpus) bootstrap
+    * is setup, not the operator: [[SessionFixtures]] builds it once per
+    * session per sf dir, so each run's merges and retractions mutate a
+    * private copy and bench reps time the steady-state per-batch path
+    * (index probes + fresh-generation rewrites + the manifest commit). */
+  private def dedupWorkingCopy(spark: SparkSession, recipe: String,
+                               dir: String, corpus: DataFrame)
+      : graft.dedup.IndexedDedup.Indexes = {
+    import graft.dedup.IndexedDedup
+    val Seq(si, di, mf) = SessionFixtures.cloned(spark, recipe, dir,
+        Seq("si", "di", "mf")) { ds =>
+      IndexedDedup.bootstrap(spark, corpus, k = 3, maxShingleDf = 20,
+        ds(0), ds(1), ds(2), rowCap = 65536L)
     }
+    IndexedDedup.attach(spark, si, di, mf, rowCap = 65536L)
   }
 
   /** q283: q274 against PERSISTED keep-side indexes — the round-10
@@ -749,29 +721,9 @@ object StreamingQueries extends QueryPack {
   private def streamingIndexedDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.dedup.IndexedDedup
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val rev = concat_ws(" ", reverse(split(trim(col("text")), "\\s+")))
-    val b1 = docs.where(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      .unionByName(docs.where(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), rev.as("text")))
-    val b2 = docs.where(col("doc_id") % 30 === 0)
-      .select((col("doc_id") + 4000000L).as("doc_id"), rev.as("text"))
+    val (b1, b2) = DedupQueries.lifecycleBatches(docs)
     val outDir = MlQueries.tempDirDeletedOnExit("graft_xdedup_out_")
-    val (snapSi, snapDi, snapMf) = xdedupSnapByDir.computeIfAbsent(dir, _ => {
-      val si = MlQueries.tempDirDeletedOnExit("graft_xdedup_snap_si_")
-      val di = MlQueries.tempDirDeletedOnExit("graft_xdedup_snap_di_")
-      val mf = MlQueries.tempDirDeletedOnExit("graft_xdedup_snap_mf_")
-      IndexedDedup.bootstrap(spark, docs, k = 3, maxShingleDf = 20,
-        si, di, mf, rowCap = 65536L)
-      (si, di, mf)
-    })
-    val siDir = MlQueries.tempDirDeletedOnExit("graft_xdedup_si_")
-    val diDir = MlQueries.tempDirDeletedOnExit("graft_xdedup_di_")
-    val mfDir = MlQueries.tempDirDeletedOnExit("graft_xdedup_mf_")
-    copyDirContents(spark, snapSi, siDir)
-    copyDirContents(spark, snapDi, diDir)
-    copyDirContents(spark, snapMf, mfDir)
-    val idx = IndexedDedup.attach(spark, siDir, diDir, mfDir, rowCap = 65536L)
+    val idx = dedupWorkingCopy(spark, "xdedup", dir, docs)
     val watch = stageBatches("graft_xdedup_", Seq(b1, b2))
     val stream = spark.readStream
       .schema("doc_id BIGINT, text STRING")
@@ -827,30 +779,8 @@ object StreamingQueries extends QueryPack {
     import graft.dedup.{Dedup, IndexedDedup}
     val sample = Tables.documents(spark, dir).select("doc_id", "text")
       .where(col("doc_id") % 8 === 0)
-    val rev = concat_ws(" ", reverse(split(trim(col("text")), "\\s+")))
-    val b1 = sample.where(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      .unionByName(sample.where(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), rev.as("text")))
-    val b2 = sample.where(col("doc_id") % 30 === 0)
-      .select((col("doc_id") + 4000000L).as("doc_id"), rev.as("text"))
-    // the O(corpus) bootstrap is setup, not the audited operator (the
-    // q283/q301 snapshot discipline, OPTIMIZATION r15): built once per
-    // session per sf dir, cloned to fresh working dirs so each run's
-    // merges mutate a copy — the drift audit itself (indexed leg vs
-    // recompute leg) is unchanged
-    val snap3 = driftSnapByDir.computeIfAbsent(dir, _ => {
-      val ds = Seq("si", "di", "mf").map(s =>
-        MlQueries.tempDirDeletedOnExit(s"graft_xda_snap_${s}_"))
-      IndexedDedup.bootstrap(spark, sample, k = 3, maxShingleDf = 20,
-        ds(0), ds(1), ds(2), rowCap = 65536L)
-      ds
-    })
-    val work = Seq("si", "di", "mf").map(s =>
-      MlQueries.tempDirDeletedOnExit(s"graft_xda_${s}_"))
-    snap3.zip(work).foreach { case (s, w) => copyDirContents(spark, s, w) }
-    val idx = IndexedDedup.attach(spark, work(0), work(1), work(2),
-      rowCap = 65536L)
+    val (b1, b2) = DedupQueries.lifecycleBatches(sample)
+    val idx = dedupWorkingCopy(spark, "xda", dir, sample)
     val a1 = IndexedDedup.processBatch(spark, idx, b1, 1L, k = 3,
       threshold = 0.3, maxShingleDf = 20)
     val a2 = IndexedDedup.processBatch(spark, idx, b2, 2L, k = 3,
@@ -916,29 +846,10 @@ object StreamingQueries extends QueryPack {
     import graft.dedup.IndexedDedup
     val sample = Tables.documents(spark, dir).select("doc_id", "text")
       .where(col("doc_id") % 7 === 0)
-    val rev = concat_ws(" ", reverse(split(trim(col("text")), "\\s+")))
-    val b1 = sample.where(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      .unionByName(sample.where(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), rev.as("text")))
-    val b2 = sample.where(col("doc_id") % 30 === 0)
-      .select((col("doc_id") + 4000000L).as("doc_id"), rev.as("text"))
-    // the O(corpus) bootstrap is setup, not the time-travel operator
-    // (the q283/q301 snapshot discipline, OPTIMIZATION r15): built once
-    // per session per sf dir, cloned per run — every retained-version
-    // census and the asOf replay run against the clone's own commits
-    val snap3 = ttSnapByDir.computeIfAbsent(dir, _ => {
-      val ds = Seq("si", "di", "mf").map(s =>
-        MlQueries.tempDirDeletedOnExit(s"graft_xtt_snap_${s}_"))
-      IndexedDedup.bootstrap(spark, sample, k = 3, maxShingleDf = 20,
-        ds(0), ds(1), ds(2), rowCap = 65536L)
-      ds
-    })
-    val work = Seq("si", "di", "mf").map(s =>
-      MlQueries.tempDirDeletedOnExit(s"graft_xtt_${s}_"))
-    snap3.zip(work).foreach { case (s, w) => copyDirContents(spark, s, w) }
-    val idx = IndexedDedup.attach(spark, work(0), work(1), work(2),
-      rowCap = 65536L)
+    val (b1, b2) = DedupQueries.lifecycleBatches(sample)
+    // every retained-version census and the asOf replay run against the
+    // clone's own commits
+    val idx = dedupWorkingCopy(spark, "xtt", dir, sample)
     val v1 = IndexedDedup.processBatch(spark, idx, b1, 1L, k = 3,
       threshold = 0.3, maxShingleDf = 20)
     val live2 = IndexedDedup.processBatch(spark, idx, b2, 2L, k = 3,
@@ -993,51 +904,13 @@ object StreamingQueries extends QueryPack {
     * oracle replays plain global BM25 over the FINAL corpus (with the
     * same df ≤ 65536 near-stopword gate, inert at fixture SFs) and the
     * top-10 hash-matches bit for bit. */
-  /** q300's bootstrapped index snapshot, built ONCE per session per sf
-    * dir (the q283 discipline, per VERDICT r11 #3): the O(corpus)
-    * bootstrap is setup; each run copies the snapshot and streams the
-    * two merge batches + the query against the COPY, so bench reps time
-    * the steady-state per-batch path. */
-  private val bm25SnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, String, String, String)]()
-
-  /** The seed-half BM25 bootstrap snapshot for `dir`, built once per
-    * session (q300/q302 share it — identical corpus and parameters),
-    * then CLONED to fresh working directories so each run's merges /
-    * retractions mutate a private copy. Returns the attached copy. */
-  private def bm25WorkingCopy(spark: SparkSession, dir: String)
-      : graft.text.Bm25Index.Indexes = {
-    import graft.text.Bm25Index
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val seed = docs.where(col("doc_id") % 2 === 0)
-    val (snapT, snapD, snapG, snapM) =
-      bm25SnapByDir.computeIfAbsent(dir, _ => {
-        val t = MlQueries.tempDirDeletedOnExit("graft_bm25_snap_t_")
-        val d = MlQueries.tempDirDeletedOnExit("graft_bm25_snap_d_")
-        val g = MlQueries.tempDirDeletedOnExit("graft_bm25_snap_g_")
-        val m = MlQueries.tempDirDeletedOnExit("graft_bm25_snap_m_")
-        Bm25Index.bootstrap(spark, seed, maxTermDf = 65536L, t, d, g, m,
-          rowCap = 65536L)
-        (t, d, g, m)
-      })
-    val tDir = MlQueries.tempDirDeletedOnExit("graft_bm25_t_")
-    val dDir = MlQueries.tempDirDeletedOnExit("graft_bm25_d_")
-    val gDir = MlQueries.tempDirDeletedOnExit("graft_bm25_g_")
-    val mDir = MlQueries.tempDirDeletedOnExit("graft_bm25_m_")
-    copyDirContents(spark, snapT, tDir)
-    copyDirContents(spark, snapD, dDir)
-    copyDirContents(spark, snapG, gDir)
-    copyDirContents(spark, snapM, mDir)
-    Bm25Index.attach(spark, tDir, dDir, gDir, mDir, rowCap = 65536L)
-  }
-
   private def persistedBm25TopK(spark: SparkSession, dir: String): DataFrame = {
     import graft.text.Bm25Index
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val batches = Seq(docs.where(col("doc_id") % 4 === 1),
       docs.where(col("doc_id") % 4 === 3))
-    val idx = bm25WorkingCopy(spark, dir)
+    val idx = bm25Attach(spark, SessionFixtures.cloned(spark, "bm25", dir,
+      Bm25Parts)(bm25Build(spark, docs.where(col("doc_id") % 2 === 0))))
     val watch = stageBatches("graft_bm25_", batches)
     val stream = spark.readStream
       .schema("doc_id BIGINT, text STRING")
@@ -1060,6 +933,23 @@ object StreamingQueries extends QueryPack {
 
   private[queries] val Bm25Terms =
     Seq("table", "join", "hash", "dup", "vector", "stream")
+
+  /** The BM25 session fixtures' parts — (term, doc, stats, manifest)
+    * roots — and their build: a bootstrap of `corpus` with df cap
+    * 65536. Recipe `bm25` is the seed half (even doc_id) that q300 and
+    * q302 clone and mutate; `bm25f` is the full corpus that q303, q307
+    * and q311 probe read-only. */
+  private val Bm25Parts = Seq("t", "d", "g", "m")
+
+  private def bm25Build(spark: SparkSession, corpus: DataFrame)
+                       (ds: Seq[String]): Unit =
+    graft.text.Bm25Index.bootstrap(spark, corpus, maxTermDf = 65536L,
+      ds(0), ds(1), ds(2), ds(3), rowCap = 65536L)
+
+  private def bm25Attach(spark: SparkSession, ds: Seq[String])
+      : graft.text.Bm25Index.Indexes =
+    graft.text.Bm25Index.attach(spark, ds(0), ds(1), ds(2), ds(3),
+      rowCap = 65536L)
 
   /** q301: INDEXED-DEDUP RETRACTION (VERDICT r12 #1 — takedown/GDPR
     * over the persisted keep-set): bootstrap a doc_id % 6 sample, merge
@@ -1121,15 +1011,6 @@ object StreamingQueries extends QueryPack {
       .orderBy("query_id", "rank")
   }
 
-  private val retractSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  /** q308's session-cached seeded corpus store (the bootstrap-corpus
-    * merge is per-rep setup shaped exactly like the index bootstraps —
-    * OPTIMIZATION r15). */
-  private val stkKeepSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q308: STREAMING TAKEDOWN (VERDICT r13 #4) — q301 retracts in batch
     * mode; the production shape is a takedown STREAM interleaved with
     * merge batches through ONE foreachBatch pipeline. The q301 batch
@@ -1160,43 +1041,24 @@ object StreamingQueries extends QueryPack {
     import graft.dedup.IndexedDedup
     val sample = Tables.documents(spark, dir).select("doc_id", "text")
       .where(col("doc_id") % 6 === 0)
-    val rev = concat_ws(" ", reverse(split(trim(col("text")), "\\s+")))
-    val b1 = sample.where(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      .unionByName(sample.where(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), rev.as("text")))
+    val (b1, _) = DedupQueries.lifecycleBatches(sample)
     val retractDocs = sample.where(col("doc_id") % 10 === 0)
     val b2 = sample.where(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
-    // q301's session-cached bootstrap snapshot (same sample + params),
-    // cloned to fresh working dirs per run
-    val snap3 = retractSnapByDir.computeIfAbsent(dir, _ => {
-      val ds = Seq("si", "di", "mf").map(s =>
-        MlQueries.tempDirDeletedOnExit(s"graft_xrt_snap_${s}_"))
-      IndexedDedup.bootstrap(spark, sample, k = 3, maxShingleDf = 20,
-        ds(0), ds(1), ds(2), rowCap = 65536L)
-      ds
-    })
-    val work = Seq("si", "di", "mf").map(s =>
-      MlQueries.tempDirDeletedOnExit(s"graft_stk_${s}_"))
-    snap3.zip(work).foreach { case (s, w) => copyDirContents(spark, s, w) }
-    val idx = IndexedDedup.attach(spark, work(0), work(1), work(2),
-      rowCap = 65536L)
+    // q301's bootstrap snapshot (same sample + params)
+    val idx = dedupWorkingCopy(spark, "xrt", dir, sample)
     val outDir = MlQueries.tempDirDeletedOnExit("graft_stk_out_")
-    val keepDir = MlQueries.tempDirDeletedOnExit("graft_stk_keep_")
-    // seed the durable corpus store with the bootstrap corpus — like
+    // the durable corpus store, seeded with the bootstrap corpus — like
     // the index bootstrap, the seed is O(corpus) setup, not the
-    // streamed operator (OPTIMIZATION r15): built once per session per
-    // sf dir and cloned, so the rep pays touched-bucket merges only
-    val keepSnap = stkKeepSnapByDir.computeIfAbsent(dir, _ => {
-      val d = MlQueries.tempDirDeletedOnExit("graft_stk_keep_snap_")
+    // streamed operator (OPTIMIZATION r15), so the rep pays
+    // touched-bucket merges only
+    val Seq(keepDir) = SessionFixtures.cloned(spark, "stk_keep", dir,
+        Seq("store")) { ds =>
       Pipelines.mergeIntoParquetWithDeletes(
         sample.withColumn("rev", lit(0L)).withColumn("op", lit("")),
-        d, key = "doc_id", version = "rev", tiebreak = "doc_id",
+        ds(0), key = "doc_id", version = "rev", tiebreak = "doc_id",
         opCol = "op", nBuckets = 16)
-      d
-    })
-    copyDirContents(spark, keepSnap, keepDir)
+    }
     val typed = Seq(
       b1.withColumn("op", lit("M")),
       retractDocs.withColumn("op", lit("D")),
@@ -1336,29 +1198,11 @@ object StreamingQueries extends QueryPack {
     import graft.dedup.IndexedDedup
     val sample = Tables.documents(spark, dir).select("doc_id", "text")
       .where(col("doc_id") % 6 === 0)
-    val rev = concat_ws(" ", reverse(split(trim(col("text")), "\\s+")))
-    val b1 = sample.where(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      .unionByName(sample.where(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), rev.as("text")))
+    val (b1, _) = DedupQueries.lifecycleBatches(sample)
     val retractDocs = sample.where(col("doc_id") % 10 === 0)
     val b2 = sample.where(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
-    // the O(corpus) bootstrap is setup, not the operator (the q283/q300
-    // snapshot discipline): built once per session per sf dir, cloned to
-    // fresh working dirs so each run's merges/retraction mutate a copy
-    val snap3 = retractSnapByDir.computeIfAbsent(dir, _ => {
-      val ds = Seq("si", "di", "mf").map(s =>
-        MlQueries.tempDirDeletedOnExit(s"graft_xrt_snap_${s}_"))
-      IndexedDedup.bootstrap(spark, sample, k = 3, maxShingleDf = 20,
-        ds(0), ds(1), ds(2), rowCap = 65536L)
-      ds
-    })
-    val work = Seq("si", "di", "mf").map(s =>
-      MlQueries.tempDirDeletedOnExit(s"graft_xrt_${s}_"))
-    snap3.zip(work).foreach { case (s, w) => copyDirContents(spark, s, w) }
-    val idx = IndexedDedup.attach(spark, work(0), work(1), work(2),
-      rowCap = 65536L)
+    val idx = dedupWorkingCopy(spark, "xrt", dir, sample)
     val v1 = IndexedDedup.processBatch(spark, idx, b1, 1L, k = 3,
       threshold = 0.3, maxShingleDf = 20)
     val kept1 = b1.join(v1.where(col("status") === "kept").select("doc_id"),
@@ -1409,7 +1253,8 @@ object StreamingQueries extends QueryPack {
   private def bm25IndexRetract(spark: SparkSession, dir: String): DataFrame = {
     import graft.text.Bm25Index
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val idx = bm25WorkingCopy(spark, dir)
+    val idx = bm25Attach(spark, SessionFixtures.cloned(spark, "bm25", dir,
+      Bm25Parts)(bm25Build(spark, docs.where(col("doc_id") % 2 === 0))))
     Bm25Index.mergeBatch(spark, idx, docs.where(col("doc_id") % 4 === 1),
       batchSeq = 1L, maxTermDf = 65536L)
     val retractDocs = docs.where(
@@ -1440,36 +1285,17 @@ object StreamingQueries extends QueryPack {
     * Scale shape: query IO ∝ |distinct workload terms| · 16 shards +
     * matched doc-length buckets + 1 stats bucket — independent of both
     * corpus size and query count growth in matched docs aside. */
-  /** The q303/q307/q311 shared session-cached full-corpus BM25 index
-    * (one O(corpus) bootstrap per sf dir; the queries run read-only
-    * probes against it). */
-  private def bm25FullSnap(spark: SparkSession, dir: String,
-                           docs: DataFrame): (String, String, String, String) =
-    bm25FullSnapByDir.computeIfAbsent(dir, _ => {
-      val t0 = MlQueries.tempDirDeletedOnExit("graft_bm25f_t_")
-      val d0 = MlQueries.tempDirDeletedOnExit("graft_bm25f_d_")
-      val g0 = MlQueries.tempDirDeletedOnExit("graft_bm25f_g_")
-      val m0 = MlQueries.tempDirDeletedOnExit("graft_bm25f_m_")
-      graft.text.Bm25Index.bootstrap(spark, docs, maxTermDf = 65536L,
-        t0, d0, g0, m0, rowCap = 65536L)
-      (t0, d0, g0, m0)
-    })
-
   private def bm25QueryTableTopK(spark: SparkSession, dir: String): DataFrame = {
     import graft.text.Bm25Index
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val (t, d, g, m) = bm25FullSnap(spark, dir, docs)
-    val idx = Bm25Index.attach(spark, t, d, g, m, rowCap = 65536L)
+    val idx = bm25Attach(spark,
+      SessionFixtures.shared("bm25f", dir, Bm25Parts)(bm25Build(spark, docs)))
     val queries = Bm25QueryTable.flatMap { case (qid, ts) => ts.map((qid, _)) }
       .toDF("query_id", "term")
     Bm25Index.queryTable(spark, idx, queries, k = 5)
       .orderBy("query_id", "rank")
   }
-
-  private val bm25FullSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, String, String, String)]()
 
   /** q307: HYBRID RETRIEVAL OVER THE PERSISTED TIER (VERDICT r13 #3) —
     * production RAG scores BM25 ∪ ANN and fuses; both persisted indexes
@@ -1499,8 +1325,8 @@ object StreamingQueries extends QueryPack {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val emb = Tables.embeddings(spark, dir)
     // lexical leg: q303's session-cached full-corpus BM25 index
-    val (t, d, g, m) = bm25FullSnap(spark, dir, docs)
-    val bmIdx = Bm25Index.attach(spark, t, d, g, m, rowCap = 65536L)
+    val bmIdx = bm25Attach(spark,
+      SessionFixtures.shared("bm25f", dir, Bm25Parts)(bm25Build(spark, docs)))
     val workload = Bm25QueryTable.flatMap { case (qid, ts) =>
       ts.map((qid, _))
     }.toDF("query_id", "term")
@@ -1509,12 +1335,10 @@ object StreamingQueries extends QueryPack {
         col("rank").cast("long").as("rank_lex"))
     // semantic leg: session-cached manifest-committed IVF index
     val centroids = Clustering.seedCentroids(emb, "vec_id", "embedding", 16)
-    val ivfRoot = ivfFullSnapByDir.computeIfAbsent(dir, _ => {
-      val r = MlQueries.tempDirDeletedOnExit("graft_ivff_")
+    val Seq(ivfRoot) = SessionFixtures.shared("ivff", dir, Seq("ivf")) { ds =>
       IvfIndex.mergeBatch(emb.select("vec_id", "embedding"), "vec_id",
-        "embedding", centroids, r, batchSeq = 1L)
-      r
-    })
+        "embedding", centroids, ds(0), batchSeq = 1L)
+    }
     val qVecs = emb.where(col("vec_id") < 6)
       .select((col("vec_id") + 10L).as("vec_id"), col("embedding"))
     val sem = IvfIndex.probe(spark, ivfRoot, qVecs, "vec_id", "embedding",
@@ -1534,12 +1358,6 @@ object StreamingQueries extends QueryPack {
         "rank_lex", "rank_sem")
       .orderBy("query_id", "fused_rank")
   }
-
-  private val ivfFullSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val ivfCodedSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q311: COMPRESSED HYBRID RETRIEVAL (VERDICT r14 #4) — q307 with
     * the semantic leg on the PRODUCTION 100 TB shape: the persisted
@@ -1570,8 +1388,8 @@ object StreamingQueries extends QueryPack {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val emb = Tables.embeddings(spark, dir)
     // lexical leg: the shared session-cached full-corpus BM25 index
-    val (t, d, g, m) = bm25FullSnap(spark, dir, docs)
-    val bmIdx = Bm25Index.attach(spark, t, d, g, m, rowCap = 65536L)
+    val bmIdx = bm25Attach(spark,
+      SessionFixtures.shared("bm25f", dir, Bm25Parts)(bm25Build(spark, docs)))
     val workload = Bm25QueryTable.flatMap { case (qid, ts) =>
       ts.map((qid, _))
     }.toDF("query_id", "term")
@@ -1582,12 +1400,10 @@ object StreamingQueries extends QueryPack {
     // probed compressed
     val coarse = Clustering.seedCentroids(emb, "vec_id", "embedding", 8)
     val cb = Pq.fit(emb, "vec_id", "embedding", m = 8, sub = 8, k = 64)
-    val codedRoot = ivfCodedSnapByDir.computeIfAbsent(dir, _ => {
-      val r = MlQueries.tempDirDeletedOnExit("graft_ivfcf_")
+    val Seq(codedRoot) = SessionFixtures.shared("ivfcf", dir, Seq("ivf")) { ds =>
       IvfIndex.mergeBatch(emb.select("vec_id", "embedding"), "vec_id",
-        "embedding", coarse, r, batchSeq = 1L, encodeWith = Some(cb))
-      r
-    })
+        "embedding", coarse, ds(0), batchSeq = 1L, encodeWith = Some(cb))
+    }
     val qVecs = emb.where(col("vec_id") < 6)
       .select((col("vec_id") + 10L).as("vec_id"), col("embedding"))
     val sem = IvfIndex.probeAdc(spark, codedRoot, qVecs, "vec_id",
@@ -1635,26 +1451,8 @@ object StreamingQueries extends QueryPack {
     import graft.text.Bm25Index
     val sample = Tables.documents(spark, dir).select("doc_id", "text")
       .where(col("doc_id") % 5 === 0)
-    val rev = concat_ws(" ", reverse(split(trim(col("text")), "\\s+")))
-    val b1 = sample.where(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      .unionByName(sample.where(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), rev.as("text")))
-    val b2 = sample.where(col("doc_id") % 30 === 0)
-      .select((col("doc_id") + 4000000L).as("doc_id"), rev.as("text"))
-    val snap6 = curatedSnapByDir.computeIfAbsent(dir, _ => {
-      val ds = Seq("si", "di", "t", "d", "g", "m").map(s =>
-        MlQueries.tempDirDeletedOnExit(s"graft_cur_snap_${s}_"))
-      CuratedIndexes.bootstrap(spark, sample, k = 3, maxShingleDf = 20,
-        maxTermDf = 65536L, ds(0), ds(1), ds(2), ds(3), ds(4), ds(5),
-        rowCap = 65536L)
-      ds
-    })
-    val work = Seq("si", "di", "t", "d", "g", "m").map(s =>
-      MlQueries.tempDirDeletedOnExit(s"graft_cur_${s}_"))
-    snap6.zip(work).foreach { case (s, w) => copyDirContents(spark, s, w) }
-    val idx = CuratedIndexes.attach(spark, work(0), work(1), work(2),
-      work(3), work(4), work(5), rowCap = 65536L)
+    val (b1, b2) = DedupQueries.lifecycleBatches(sample)
+    val idx = curatedWorkingCopy(spark, "cur", dir, sample)
     val v1 = CuratedIndexes.processBatch(spark, idx, b1, 1L, k = 3,
       threshold = 0.3, maxShingleDf = 20, maxTermDf = 65536L)
     val kept1 = b1.join(v1.where(col("status") === "kept").select("doc_id"),
@@ -1686,8 +1484,27 @@ object StreamingQueries extends QueryPack {
     out
   }
 
-  private val curatedSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  /** A fresh clone of `recipe`'s [[graft.curation.CuratedIndexes]]
+    * bootstrap of `corpus` (k = 3, df caps 20 and 65536), attached: the
+    * dedup and BM25 families, plus the IVF family when `ann` gives its
+    * centroids and the corpus vectors. Built once per session per sf
+    * dir, as for [[dedupWorkingCopy]]. */
+  private def curatedWorkingCopy(
+      spark: SparkSession, recipe: String, dir: String, corpus: DataFrame,
+      ann: Option[(Seq[(Int, Array[Double])], DataFrame)] = None)
+      : graft.curation.CuratedIndexes.Indexes = {
+    import graft.curation.CuratedIndexes
+    def annAt(ds: Seq[String]) =
+      ann.map { case (centroids, _) => CuratedIndexes.Ann(ds(6), centroids) }
+    val w = SessionFixtures.cloned(spark, recipe, dir,
+        Seq("si", "di", "t", "d", "g", "m") ++ ann.map(_ => "a")) { ds =>
+      CuratedIndexes.bootstrap(spark, corpus, k = 3, maxShingleDf = 20,
+        maxTermDf = 65536L, ds(0), ds(1), ds(2), ds(3), ds(4), ds(5),
+        rowCap = 65536L, ann = annAt(ds), annVecs = ann.map(_._2))
+    }
+    CuratedIndexes.attach(spark, w(0), w(1), w(2), w(3), w(4), w(5),
+      rowCap = 65536L, ann = annAt(w))
+  }
 
   /** q306: ANN FAMILY IN THE CROSS-FAMILY COMMIT (VERDICT r13 #2) —
     * the curation invariant at full strength is "kept ⟺ searchable ⟺
@@ -1717,8 +1534,10 @@ object StreamingQueries extends QueryPack {
     * cross-family re-read. */
   /** The q306/q310 shared fixture: the doc_id % 5 corpus, its
     * (doc_id, vector) lookup against the embedding store (vec_id =
-    * doc_id % 1e6 — batch copies share their original's vector), and
-    * the frozen 16-seed centroids. */
+    * doc_id % 1e6 — batch copies share their original's vector), and a
+    * clone of the corpus's seven-index bootstrap with the frozen
+    * 16-seed centroids (one O(corpus) build per sf dir shared by both
+    * queries — VERDICT r14 #1's bootstrap-sharing). */
   private def curatedAnnFixture(spark: SparkSession, dir: String) = {
     import graft.similarity.Clustering
     val emb = Tables.embeddings(spark, dir)
@@ -1730,43 +1549,15 @@ object StreamingQueries extends QueryPack {
           Seq("__vid"))
         .select("doc_id", "embedding")
     val centroids = Clustering.seedCentroids(emb, "vec_id", "embedding", 16)
-    (emb, sample, vecsOf, centroids)
+    val idx = curatedWorkingCopy(spark, "cura", dir, sample,
+      Some((centroids, vecsOf(sample))))
+    (emb, sample, vecsOf, idx)
   }
-
-  /** The q306/q310 shared session-cached seven-index bootstrap (one
-    * O(corpus) build per sf dir — VERDICT r14 #1's bootstrap-sharing),
-    * cloned to fresh working dirs by each run. */
-  private def curatedAnnSnap(spark: SparkSession, dir: String,
-                             sample: DataFrame, vecsOf: DataFrame => DataFrame,
-                             annOf: String => Option[graft.curation.CuratedIndexes.Ann])
-      : Seq[String] =
-    curatedAnnSnapByDir.computeIfAbsent(dir, _ => {
-      val ds = Seq("si", "di", "t", "d", "g", "m", "a").map(s =>
-        MlQueries.tempDirDeletedOnExit(s"graft_cura_snap_${s}_"))
-      graft.curation.CuratedIndexes.bootstrap(spark, sample, k = 3,
-        maxShingleDf = 20, maxTermDf = 65536L, ds(0), ds(1), ds(2), ds(3),
-        ds(4), ds(5), rowCap = 65536L, ann = annOf(ds(6)),
-        annVecs = Some(vecsOf(sample)))
-      ds
-    })
 
   private def curatedAnnCommit(spark: SparkSession, dir: String): DataFrame = {
     import graft.curation.CuratedIndexes
-    val (emb, sample, vecsOf, centroids) = curatedAnnFixture(spark, dir)
-    val rev = concat_ws(" ", reverse(split(trim(col("text")), "\\s+")))
-    val b1 = sample.where(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      .unionByName(sample.where(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), rev.as("text")))
-    val b2 = sample.where(col("doc_id") % 30 === 0)
-      .select((col("doc_id") + 4000000L).as("doc_id"), rev.as("text"))
-    def annOf(root: String) = Some(CuratedIndexes.Ann(root, centroids))
-    val snap7 = curatedAnnSnap(spark, dir, sample, vecsOf, annOf)
-    val work = Seq("si", "di", "t", "d", "g", "m", "a").map(s =>
-      MlQueries.tempDirDeletedOnExit(s"graft_cura_${s}_"))
-    snap7.zip(work).foreach { case (s, w) => copyDirContents(spark, s, w) }
-    val idx = CuratedIndexes.attach(spark, work(0), work(1), work(2),
-      work(3), work(4), work(5), rowCap = 65536L, ann = annOf(work(6)))
+    val (emb, sample, vecsOf, idx) = curatedAnnFixture(spark, dir)
+    val (b1, b2) = DedupQueries.lifecycleBatches(sample)
     val v1 = CuratedIndexes.processBatch(spark, idx, b1, 1L, k = 3,
       threshold = 0.3, maxShingleDf = 20, maxTermDf = 65536L,
       annVecs = Some(vecsOf(b1)))
@@ -1797,9 +1588,6 @@ object StreamingQueries extends QueryPack {
     out
   }
 
-  private val curatedAnnSnapByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
   /** q310: CURATED-ANN REBUILD UNDER THE SHARED MANIFEST (VERDICT r14
     * #3) — the lifecycle job that un-freezes the curated tier's
     * centroids without breaking "kept ∧ embedded ⟺ ANN-retrievable":
@@ -1827,14 +1615,7 @@ object StreamingQueries extends QueryPack {
     * rebuild commit (their bucket sets are carried by name). */
   private def curatedAnnRebuild(spark: SparkSession, dir: String): DataFrame = {
     import graft.curation.CuratedIndexes
-    val (emb, sample, vecsOf, centroids) = curatedAnnFixture(spark, dir)
-    def annOf(root: String) = Some(CuratedIndexes.Ann(root, centroids))
-    val snap7 = curatedAnnSnap(spark, dir, sample, vecsOf, annOf)
-    val work = Seq("si", "di", "t", "d", "g", "m", "a").map(s =>
-      MlQueries.tempDirDeletedOnExit(s"graft_curb_${s}_"))
-    snap7.zip(work).foreach { case (s, w) => copyDirContents(spark, s, w) }
-    val idx = CuratedIndexes.attach(spark, work(0), work(1), work(2),
-      work(3), work(4), work(5), rowCap = 65536L, ann = annOf(work(6)))
+    val (emb, sample, vecsOf, idx) = curatedAnnFixture(spark, dir)
     val retractDocs = sample.where(col("doc_id") % 10 === 0)
     val retained = sample
       .join(retractDocs.select("doc_id"), Seq("doc_id"), "left_anti")

@@ -7,13 +7,15 @@ import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
-/** Per-SQL-EXECUTION job census (OPTIMIZATION r15): [[JobSites]] groups
-  * by result-stage call site, which collapses every AQE query-stage job
-  * into one `withThreadLocalCaptured` row; this groups by the SQL
-  * execution (one per ACTION), attributing each execution's job count,
-  * summed job wall, and the static Exchange/BroadcastExchange census of
-  * its physical plan — so "which action pays how many query stages" is
-  * readable directly. Runs each named query once after one warmup. */
+/** Per-SQL-EXECUTION job census (OPTIMIZATION r15): grouping jobs by
+  * result-stage call site collapses every AQE query-stage job into one
+  * `withThreadLocalCaptured` row, so this groups by the SQL execution
+  * (one per ACTION), attributing each execution's job count, summed job
+  * wall, and the static Exchange/BroadcastExchange census of its
+  * physical plan — "which action pays how many query stages" is
+  * readable directly. A footer totals executions, jobs and job wall per
+  * call site, most expensive first. Runs each named query once after
+  * one warmup. */
 object ExecSites {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -70,12 +72,19 @@ object ExecSites {
       Thread.sleep(500)
       spark.sparkContext.removeSparkListener(probe)
       println(f"==== $name wall=$wall%.2fs ====")
-      probe.jobs.toSeq.sortBy(t => t._1.toLongOption.getOrElse(-1L)).foreach {
-        case (eid, (n, ms)) =>
-          val (site, ex, bx) = eid.toLongOption.flatMap(probe.descs.get)
-            .getOrElse(("?", -1, -1))
-          println(
-            f"exec $eid%-5s $n%3d jobs $ms%6d ms  exch=$ex%-3d bcast=$bx%-3d $site")
+      val execs = probe.jobs.toSeq
+        .sortBy(t => t._1.toLongOption.getOrElse(-1L)).map {
+          case (eid, (n, ms)) =>
+            val (site, ex, bx) = eid.toLongOption.flatMap(probe.descs.get)
+              .getOrElse(("?", -1, -1))
+            println(
+              f"exec $eid%-5s $n%3d jobs $ms%6d ms  exch=$ex%-3d bcast=$bx%-3d $site")
+            (site, n, ms)
+        }
+      execs.groupBy(_._1).toSeq.map { case (site, es) =>
+        (site, es.size, es.map(_._2).sum, es.map(_._3).sum)
+      }.sortBy(-_._4).foreach { case (site, ne, n, ms) =>
+        println(f"site $ne%3d execs $n%4d jobs $ms%6d ms  $site")
       }
       println(s"TOTAL ${probe.jobs.valuesIterator.map(_._1).sum} jobs over " +
         s"${probe.jobs.size} executions")

@@ -853,4 +853,21 @@ class PlanAuditSpec extends AnyFunSuite {
     } yield s"${f.getName}:${i + 1}: ${ln.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("queries keep one session-fixture facility: in queries/ only " +
+    "SessionFixtures.scala holds a ConcurrentHashMap, calls " +
+    "computeIfAbsent or copies files with FileUtil.copy") {
+    val banned = Seq("ConcurrentHashMap", "computeIfAbsent", "FileUtil.copy")
+    val d = new java.io.File("src/main/scala/graft/queries")
+    assert(d.isDirectory, s"missing source directory $d")
+    val files = d.listFiles.filter(_.getName.endsWith(".scala")).toSeq
+    assert(files.exists(_.getName == "SessionFixtures.scala"))
+    val offenders = for {
+      f <- files if f.getName != "SessionFixtures.scala"
+      (ln, i) <- java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).zipWithIndex
+      if banned.exists(ln.contains)
+    } yield s"${f.getName}:${i + 1}: ${ln.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
