@@ -28,10 +28,8 @@ import graft.text.Bm25Index
   * [[graft.dedup.IndexManifest]]; every family handle shares the same
   * manifest root.
   *
-  * Retraction rides the same protocol: a takedown batch leaves the
-  * keep-set, the search index AND the vector index in the same commit,
-  * the text families re-auditing their df-cap tombstones against the
-  * retained corpus.
+  * Retraction rides the same protocol and the same staging shape: a
+  * takedown leaves all three families in one commit.
   *
   * The ANN feed is the batch's (doc_id, vector) rows — typically an
   * inner join against the embedding store, so only embedded docs are
@@ -99,11 +97,11 @@ object CuratedIndexes {
     * read-only and skips the write path entirely.
     *
     * Launch order. The BM25 and IVF merges split into a read-only
-    * prepare step over the whole batch ([[Bm25Index.prepareMerge]],
+    * prepare step over the whole batch ([[Bm25Index.prepare]],
     * [[IvfIndex.prepareMerge]]) and a finish step that stages the kept
     * docs' rewrites. The prepare steps need no verdicts and write
     * nothing, so both are forked BEFORE the dedup verdict phase and
-    * overlap it; the stagings then launch in [[IndexTxn.Point]] order. */
+    * overlap it; the stagings then launch as [[stageFamilies]] says. */
   def processBatch(spark: SparkSession, idx: Indexes, batch: DataFrame,
                    batchSeq: Long, k: Int, threshold: Double,
                    maxShingleDf: Int, maxTermDf: Long,
@@ -113,7 +111,7 @@ object CuratedIndexes {
     IndexTxn.run(idx.dedup.manifest, batchSeq) { txn =>
       val snap = txn.snap
       val fPrepB = Option.when(txn.writes)(txn.fork(
-        Bm25Index.prepareMerge(spark, txn, idx.bm25, batch)))
+        Bm25Index.prepare(spark, txn, idx.bm25, batch)))
       val fPrepA = idx.ann.filter(_ => txn.writes).map(a => txn.fork(
         IvfIndex.prepareMerge(annVecs.get, "doc_id", a.vec, a.centroids,
           batchSeq)))
@@ -121,20 +119,12 @@ object CuratedIndexes {
       // the other families' finish steps
       val (verdicts, kept, dedupWrite) = IndexedDedup.stageBatchDeferred(
         spark, txn, idx.dedup, batch, k, threshold, maxShingleDf)
-      dedupWrite.foreach { write =>
-        txn.point(Point.BeforeDedupFamily)
-        val fMd = txn.fork(write())
-        txn.point(Point.BetweenFamilies)
-        val fMb = txn.fork(Bm25Index.finishMerge(spark, txn, idx.bm25,
-          txn.await(fPrepB.get), Some(kept), maxTermDf))
-        txn.point(Point.BeforeAnnFamily)
+      dedupWrite.foreach(write => stageFamilies(txn)(write())(
+        Bm25Index.finishMerge(spark, txn, idx.bm25, txn.await(fPrepB.get),
+          Some(kept), maxTermDf))(
         idx.ann.foreach(a => IvfIndex.stage(txn, spark, a.root, a.name,
           IvfIndex.finishMerge(txn.await(fPrepA.get), Some(kept), a.root,
-            batchSeq, Some(snap), a.name)))
-        txn.await(fMd)
-        txn.await(fMb)
-        txn.commit()
-      }
+            batchSeq, Some(snap), a.name)))))
       verdicts
     }
   }
@@ -145,7 +135,12 @@ object CuratedIndexes {
     * including the text families' tombstone re-audit against
     * `retained`). `retractVecs` carries the takedown docs' (doc_id,
     * vector) rows — the vectors locate the touched IVF cells by the
-    * same assignment arithmetic as their inserts. */
+    * same assignment arithmetic as their inserts.
+    *
+    * Launch order, as [[processBatch]]'s: the text families' read-only
+    * prepare steps ([[IndexedDedup.prepareRetract]], [[Bm25Index.prepare]])
+    * are forked first and overlap each other; the finishes, each
+    * awaiting its own prepare, then launch as [[stageFamilies]] says. */
   def retractBatch(spark: SparkSession, idx: Indexes, retract: DataFrame,
                    batchSeq: Long, k: Int, maxShingleDf: Int,
                    maxTermDf: Long, retained: Option[DataFrame],
@@ -155,22 +150,34 @@ object CuratedIndexes {
     IndexTxn.run(idx.dedup.manifest, batchSeq) { txn =>
       val snap = txn.snap
       if (txn.writes) {
-        // ALL families' retraction stagings overlap (guide §2.6)
-        txn.point(Point.BeforeDedupFamily)
-        val fMd = txn.fork(IndexedDedup.stageRetract(spark, txn, idx.dedup,
-          retract, k, maxShingleDf, retained))
-        txn.point(Point.BetweenFamilies)
-        val fMb = txn.fork(Bm25Index.stageRetract(spark, txn, idx.bm25,
-          retract, maxTermDf, retained))
-        txn.point(Point.BeforeAnnFamily)
-        idx.ann.foreach(a => IvfIndex.stage(txn, spark, a.root, a.name,
-          IvfIndex.stageDelete(retractVecs.get, "doc_id", a.vec, a.centroids,
-            a.root, batchSeq, Some(snap), a.name).get))
-        txn.await(fMd)
-        txn.await(fMb)
-        txn.commit()
+        val fPrepD = txn.fork(IndexedDedup.prepareRetract(txn, idx.dedup,
+          retract, k))
+        val fPrepB = txn.fork(Bm25Index.prepare(spark, txn, idx.bm25, retract))
+        stageFamilies(txn)(IndexedDedup.finishRetract(spark, txn, idx.dedup,
+          txn.await(fPrepD), k, maxShingleDf, retained))(
+          Bm25Index.finishRetract(spark, txn, idx.bm25, txn.await(fPrepB),
+            maxTermDf, retained))(
+          idx.ann.foreach(a => IvfIndex.stage(txn, spark, a.root, a.name,
+            IvfIndex.stageDelete(retractVecs.get, "doc_id", a.vec, a.centroids,
+              a.root, batchSeq, Some(snap), a.name).get)))
       }
     }
+  }
+
+  /** The staging shape of an ingest and a takedown alike: the dedup and
+    * BM25 finish steps forked and the IVF one run here, in
+    * [[IndexTxn.Point]] order, then both forks awaited and one commit. */
+  private def stageFamilies(txn: IndexTxn)(dedup: => Unit)(bm25: => Unit)
+                           (ann: => Unit): Unit = {
+    txn.point(Point.BeforeDedupFamily)
+    val fMd = txn.fork(dedup)
+    txn.point(Point.BetweenFamilies)
+    val fMb = txn.fork(bm25)
+    txn.point(Point.BeforeAnnFamily)
+    ann
+    txn.await(fMd)
+    txn.await(fMb)
+    txn.commit()
   }
 
   /** ANN REBUILD UNDER THE SHARED MANIFEST (VERDICT r14 #3) — the

@@ -333,31 +333,19 @@ object IndexedDedup {
 
   /** RETRACTION (VERDICT r12 #1 — takedown/GDPR/corpus-refresh): remove
     * `retract`'s docs (doc_id, text) from the keep-set indexes under
-    * the SAME single-manifest commit protocol as [[processBatch]].
-    * Postings of the retracted docs are deleted, their doc-index rows
-    * dropped, and — because keep-side df is no longer monotone once
-    * docs can leave — df-cap tombstones touched by the retracted docs
-    * are RE-AUDITED: a tombstoned shingle whose df over the remaining
-    * corpus falls back ≤ maxShingleDf is UN-TOMBSTONED by re-deriving
-    * its posting list from `retained` (the remaining keep corpus —
-    * production's durable corpus store), and every remaining doc that
-    * contains it gets its surviving-shingle count incremented. The
-    * result is BIT-EQUIVALENT to an index bootstrapped from scratch on
-    * the remaining corpus (IndexedDedupSpec proves content equality
-    * per index): tombstones end exactly {s : df(remaining) > cap}
-    * because retraction only lowers df — a shingle over the cap on the
-    * remaining corpus was already tombstoned before.
+    * the SAME single-manifest commit protocol as [[processBatch]]:
+    * their postings and doc-index rows go, and the df-cap tombstones
+    * they touch are RE-AUDITED against `retained`, the remaining keep
+    * corpus ([[TombstoneAudit]]) — an un-tombstoned shingle gets its
+    * posting list back and each remaining doc containing it its
+    * surviving-shingle count — so the result is BIT-EQUIVALENT to a
+    * fresh bootstrap on the remaining corpus. With `retained = None` the
+    * cap is a ONE-WAY POLICY: tombstones stay, verdicts stay conservative.
     *
-    * With `retained = None` the cap is a ONE-WAY POLICY: tombstones
-    * stay permanent (no corpus re-scan), trading exact-rebuild
-    * equivalence for a cheaper retract — verdicts stay conservative
-    * (a tombstoned shingle never creates pairs).
-    *
-    * Cost shape: probe IO tracks the retract batch's key sets; the
-    * only remaining-corpus scan is the tombstone re-audit, restricted
-    * to the touched tombstoned shingles (skipped entirely when none).
-    * Replay of a committed retract is a no-op; crash contract as
-    * [[IndexTxn]].
+    * Cost shape, the ingest's: [[prepareRetract]] then [[finishRetract]].
+    * Probe IO tracks the retract batch's key sets; `retained` is read
+    * only for touched tombstoned shingles. Replay of a committed retract
+    * is a no-op; crash contract as [[IndexTxn]].
     *
     * History note: a retraction REWRITES KEEP-SET HISTORY by design —
     * replaying a pre-retraction merge batch afterwards is not
@@ -369,79 +357,72 @@ object IndexedDedup {
                    retained: Option[DataFrame]): Unit =
     IndexTxn.run(idx.manifest, batchSeq) { txn =>
       if (txn.writes) {
-        stageRetract(spark, txn, idx, retract, k, maxShingleDf, retained)
+        finishRetract(spark, txn, idx, prepareRetract(txn, idx, retract, k),
+          k, maxShingleDf, retained)
         txn.commit()
       }
     }
 
-  /** Stage [[retractBatch]]'s rewrites in `txn` (which writes). */
-  private[graft] def stageRetract(spark: SparkSession, txn: IndexTxn,
-                                  idx: Indexes, retract: DataFrame, k: Int,
-                                  maxShingleDf: Int,
-                                  retained: Option[DataFrame]): Unit = {
-    val snap = txn.snap
-    val batchSeq = txn.batchSeq
-    val liveS = snap.buckets(idx.shingleName)
-    val liveD = snap.buckets(idx.docName)
-    val rIds = retract.select("doc_id").distinct()
-    // docs actually in the keep-set — retracting a non-member is a no-op
-    val present = txn.pinned(idx.doc.probe(rIds, liveD)
-      .join(broadcast(rIds), Seq("doc_id"), "left_semi")
-      .select("doc_id").localCheckpoint(true))
-    val rEx = txn.pinned(
-      retract.join(broadcast(present), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), explode(Dedup.shingles(col("text"), k)).as("s"))
-        .localCheckpoint(true))
-    val sKeys = rEx.select("s").distinct()
-    val pm = idx.shingle.probe(sKeys, liveS)
-      .join(broadcast(sKeys), Seq("s"))
-    val tombTouched = txn.pinned(pm.where(col("doc_id") === -1L).select("s")
+  /** The READ-ONLY half of a retraction: ONE pinned pass over the
+    * retract docs' shingles ∪ the probed tombstone rows. Per shingle it
+    * holds `r`, its retract docs, and `tomb`; docs shorter than k tokens
+    * share the null-shingle group, so every retract doc id is there. */
+  private[graft] def prepareRetract(txn: IndexTxn, idx: Indexes,
+                                    retract: DataFrame, k: Int): DataFrame = {
+    val rEx = retract.select(col("doc_id"),
+      explode_outer(Dedup.shingles(col("text"), k)).as("s"))
+    val tombs = idx.shingle.probe(rEx.where(col("s").isNotNull).select("s"),
+      txn.snap.buckets(idx.shingleName)).where(col("doc_id") === -1L)
+    txn.pinned(rEx.select(col("s"), col("doc_id"), lit(true).as("__r"))
+      .unionByName(tombs.select(col("s"), col("doc_id"), lit(false).as("__r")))
+      .groupBy("s")
+      .agg(collect_set(when(col("__r"), col("doc_id"))).as("r"),
+        max(!col("__r")).as("tomb"))
+      .where(size(col("r")) > 0)
       .localCheckpoint(true))
-    // tombstone re-audit: df over the REMAINING corpus, restricted to
-    // the touched tombstoned shingles (only they can have lost df)
-    val restored = retained match {
-      case Some(rem) if !tombTouched.isEmpty => txn.pinned(
-        rem.select(col("doc_id"), explode(Dedup.shingles(col("text"), k)).as("s"))
-          .join(broadcast(tombTouched), Seq("s"))
-          .localCheckpoint(true))
-      case _ => rEx.select("s", "doc_id").limit(0) // empty: nothing to pin
-    }
-    // un-tombstone = touched tombstoned shingles whose remaining-corpus
-    // df fell back <= cap, INCLUDING df = 0 (every containing doc
-    // retracted — no restored row, so the restored groups alone would
-    // keep the tombstone a fresh bootstrap wouldn't have; ADVICE r13)
-    val overCap = restored.groupBy("s").agg(count(lit(1)).as("dfr"))
-      .where(col("dfr") > maxShingleDf).select("s")
-    val unTomb = txn.pinned((if (retained.isDefined)
-        tombTouched.join(broadcast(overCap), Seq("s"), "left_anti")
-      else tombTouched.limit(0)) // one-way cap policy: never un-tombstone
-      .localCheckpoint(true))
-    val restoredLive = restored
-      .join(broadcast(unTomb), Seq("s"), "left_semi")
-      .select("s", "doc_id")
-    // disjoint-index rewrites overlap (guide §2.6) — same protocol
-    // shape as the merge path's staged rewrites above
-    val fShingle = txn.fork(idx.shingle.rewrite(sKeys, liveS) { old =>
-      // drop the retracted docs' postings and the un-tombstoned
-      // tombstone rows (a tombstoned shingle has ONLY its tombstone row,
-      // so the anti-join on s removes nothing else), then restore the
-      // re-derived posting lists
-      old.join(broadcast(present), Seq("doc_id"), "left_anti")
-        .join(broadcast(unTomb), Seq("s"), "left_anti")
-        .unionByName(restoredLive)
-        .distinct()
+  }
+
+  /** The WRITE half: stage a [[prepareRetract]] frame's retraction in
+    * `txn` (which writes). ONE collect brings the retract docs the doc
+    * index holds (retracting a non-member is a no-op) and the tombstoned
+    * shingles with their docs; the rewrites read off the pinned frame. */
+  private[graft] def finishRetract(spark: SparkSession, txn: IndexTxn,
+                                   idx: Indexes, perS: DataFrame, k: Int,
+                                   maxShingleDf: Int,
+                                   retained: Option[DataFrame]): Unit = {
+    import spark.implicits._
+    val liveD = txn.snap.buckets(idx.docName)
+    val rIds = perS.select(explode(col("r")).as("doc_id")).distinct()
+    val facts = idx.doc.probe(rIds, liveD).join(rIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), lit(null).cast("string").as("s"),
+        lit(null).cast("array<bigint>").as("r"))
+      .unionByName(perS.where(col("tomb"))
+        .select(lit(null).cast("long").as("doc_id"), col("s"), col("r")))
+      .collect()
+    val present = facts.filter(!_.isNullAt(0)).map(_.getLong(0))
+    val isPresent = present.toSet
+    val audit = TombstoneAudit(retained.map(_.select(col("doc_id"),
+        explode(Dedup.shingles(col("text"), k)).as("s"))), "s",
+      facts.filter(f => f.isNullAt(0) && f.getSeq[Long](2).exists(isPresent))
+        .map(_.getString(1)).toSeq, maxShingleDf)(
+      df => txn.pinned(df.localCheckpoint(true)))
+    // disjoint-index rewrites overlap (guide §2.6)
+    val fShingle = txn.fork(idx.shingle.rewrite(perS.where(col("s").isNotNull
+        && arrays_overlap(col("r"), typedLit(present))).select("s"),
+        txn.snap.buckets(idx.shingleName)) { old =>
+      val rest = old.where(!col("doc_id").isin(present: _*))
+      audit.fold(rest)(_.patch(rest)(_.select("s", "doc_id"))).distinct()
     })
     txn.point(IndexTxn.Point.DedupBetweenWrites)
-    val incRem = txn.pinned(restoredLive.groupBy("doc_id")
-      .agg(count(lit(1)).as("inc")).localCheckpoint(true))
-    val dKeys = present.unionByName(incRem.select("doc_id"))
-    val fDoc = txn.fork(idx.doc.rewrite(dKeys, liveD) { old =>
-      old.join(broadcast(present), Seq("doc_id"), "left_anti")
-        .join(incRem, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          (col("n_keep") + coalesce(col("inc"), lit(0L))).as("n_keep"),
-          when(col("inc").isNotNull, lit(batchSeq)).otherwise(col("ver"))
-            .as("ver"))
+    // a remaining doc regains one surviving shingle per restored posting
+    val inc = audit.map(_.restored.groupBy("doc_id").agg(count(lit(1)).as("inc")))
+    val ids = present.toSeq.toDF("doc_id")
+    val fDoc = txn.fork(idx.doc.rewrite(
+        inc.fold(ids)(i => ids.unionByName(i.select("doc_id"))), liveD) { old =>
+      val rest = old.where(!col("doc_id").isin(present: _*))
+      inc.fold(rest)(i => rest.join(i, Seq("doc_id"), "left").select(
+        col("doc_id"), (col("n_keep") + coalesce(col("inc"), lit(0L))).as("n_keep"),
+        when(col("inc").isNotNull, lit(txn.batchSeq)).otherwise(col("ver")).as("ver")))
     })
     val newLiveS = txn.await(fShingle)
     val newLiveD = txn.await(fDoc)

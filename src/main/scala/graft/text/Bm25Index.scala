@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.dedup.{IndexManifest, IndexTxn, LinearHashIndex}
+import graft.dedup.{IndexManifest, IndexTxn, LinearHashIndex, TombstoneAudit}
 
 /** Persisted streaming BM25 inverted index — the retrieval-side member
   * of the index layer (dedup: [[graft.dedup.IndexedDedup]]; similarity:
@@ -42,14 +42,15 @@ import graft.dedup.{IndexManifest, IndexTxn, LinearHashIndex}
   * near-stopwords ever cross it (posting rows per term ≤ cap, per
   * shard ≤ cap/B ≪ rowCap).
   *
-  * Per-batch merge, in two steps: [[prepareMerge]] is read-only and
-  * pins ONE term-keyed frame over the whole batch (batch entries of
-  * docs not yet indexed, live-posting df, tombstone flag per term);
-  * [[finishMerge]] takes the kept doc ids and stages the term, doc and
-  * stats rewrites off that frame with no new shuffle. A cross-family
+  * Per-batch merge and takedown share one shape: [[prepare]] is
+  * read-only and pins ONE term-keyed frame over the whole batch (batch
+  * entries tagged with their indexed length, live-posting df,
+  * tombstone flag per term); [[finishMerge]] takes the kept docs not
+  * yet indexed and [[finishRetract]] the indexed ones, and each stages
+  * the term, doc and stats rewrites off that frame. A cross-family
   * caller ([[graft.curation.CuratedIndexes]]) runs the prepare step
-  * while its dedup verdicts are still being computed; [[mergeBatch]]
-  * runs both back to back with every doc kept.
+  * alongside its dedup work; [[mergeBatch]] and [[retractBatch]] run
+  * both steps back to back.
   *
   * Commit protocol: every write path is one [[graft.dedup.IndexTxn]]
   * (crash and replay contract there); a replay of a committed batch is
@@ -159,40 +160,41 @@ object Bm25Index {
   /** Extend the index with one micro-batch of NEW documents (one atomic
     * manifest commit; a replay of a committed batch is a no-op, and doc
     * ids already indexed are skipped, so retries and overlapping feeds
-    * both converge): [[prepareMerge]] then [[finishMerge]] with every
-    * doc kept. */
+    * both converge): [[prepare]] then [[finishMerge]] with every doc
+    * kept. */
   def mergeBatch(spark: SparkSession, idx: Indexes, batch: DataFrame,
                  batchSeq: Long, maxTermDf: Long): Unit =
     IndexTxn.run(idx.manifest, batchSeq) { txn =>
       if (txn.writes) {
-        finishMerge(spark, txn, idx, prepareMerge(spark, txn, idx, batch),
-          None, maxTermDf)
+        finishMerge(spark, txn, idx, prepare(spark, txn, idx, batch), None,
+          maxTermDf)
         txn.commit()
       }
     }
 
-  /** The READ-ONLY half of a merge, over the whole batch: ONE pinned
-    * term-keyed pass over the batch's doc terms ∪ the probed postings.
-    * Per batch term it holds `e`, the batch entries (doc_id, tf, dl,
-    * first) of docs not already in the doc index (`first` marks each
-    * doc's least term, so the doc-length rows come off the same frame
-    * with no distinct); `dfk`, its count of live postings; and `tomb`.
-    * Groups without a batch entry are the co-bucketed rows the probe
-    * reads along, dropped before the pin. Writes nothing, so a caller
-    * may run it before it knows which docs it keeps; the frame stays
-    * pinned until `txn` exits. */
-  private[graft] def prepareMerge(spark: SparkSession, txn: IndexTxn,
-                                  idx: Indexes,
-                                  batch: DataFrame): DataFrame = {
+  /** The READ-ONLY half of a merge or takedown, over the whole batch:
+    * ONE pinned term-keyed pass over the batch's doc terms ∪ the probed
+    * postings. Per batch term it holds `e`, the batch entries (doc_id,
+    * tf, dl, first, idl): `first` marks each doc's least term, so the
+    * per-doc rows come off the same frame with no distinct, and `idl`
+    * is the doc's indexed length (null for a doc not in the index);
+    * `dfk`, its count of live postings; and `tomb`. Groups without a
+    * batch entry are the co-bucketed rows the probe reads along,
+    * dropped before the pin. Writes nothing, so a caller may run it
+    * before it knows which docs it keeps; the frame stays pinned until
+    * `txn` exits. */
+  private[graft] def prepare(spark: SparkSession, txn: IndexTxn,
+                             idx: Indexes, batch: DataFrame): DataFrame = {
     val snap = txn.snap
     val bIds = batch.select("doc_id").distinct()
-    val already = idx.doc.probe(bIds, snap.buckets(idx.docName))
-      .join(bIds, Seq("doc_id"), "left_semi").select("doc_id")
-    val nt = docTerms(batch).join(broadcast(already), Seq("doc_id"), "left_anti")
-    val posts = idx.term.probe(shardKeys(spark, nt.select("term").distinct()),
+    val indexed = idx.doc.probe(bIds, snap.buckets(idx.docName))
+      .join(bIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), col("dl").as("idl"))
+    val dt = docTerms(batch).join(broadcast(indexed), Seq("doc_id"), "left")
+    val posts = idx.term.probe(shardKeys(spark, dt.select("term").distinct()),
       snap.buckets(idx.termName))
-    val entries = nt.select(col("term"),
-      struct("doc_id", "tf", "dl", "first").as("__e"),
+    val entries = dt.select(col("term"),
+      struct("doc_id", "tf", "dl", "first", "idl").as("__e"),
       lit(null).cast("long").as("__p"))
     txn.pinned(entries
       .unionByName(posts.select(col("term"),
@@ -207,12 +209,13 @@ object Bm25Index {
   }
 
   /** The WRITE half of a merge: stage the rewrites for the `kept` docs
-    * of a [[prepareMerge]] frame (None = every doc) in `txn`.
-    * Everything is read off the pinned frame with no new shuffle: df
-    * counts KEPT docs only — batch-relative df is current postings +
-    * kept entries, monotone, so crossing the cap tombstones the term
-    * for good — and the term rewrite's key set is the kept terms, so it
-    * touches the same buckets a merge of the kept docs alone would. */
+    * of a [[prepare]] frame (None = every doc) in `txn`, skipping docs
+    * already indexed. Everything is read off the pinned frame with no
+    * new shuffle: df counts KEPT docs only — batch-relative df is
+    * current postings + kept entries, monotone, so crossing the cap
+    * tombstones the term for good — and the term rewrite's key set is
+    * the kept terms, so it touches the same buckets a merge of the kept
+    * docs alone would. */
   private[graft] def finishMerge(spark: SparkSession, txn: IndexTxn,
                                  idx: Indexes, perT: DataFrame,
                                  kept: Option[Array[Long]],
@@ -221,8 +224,8 @@ object Bm25Index {
     val liveT = snap.buckets(idx.termName)
     val liveD = snap.buckets(idx.docName)
     val liveG = snap.buckets(idx.statsName)
-    val ke = kept.fold(col("e"))(ks =>
-      filter(col("e"), x => array_contains(typedLit(ks), x.getField("doc_id"))))
+    val ke = filter(col("e"), x => x.getField("idl").isNull
+      && kept.fold(lit(true))(ks => array_contains(typedLit(ks), x.getField("doc_id"))))
     // `after` = tombstoned once this batch commits
     val perK = perT.select(col("term"), col("tomb"), ke.as("ke"),
         (col("tomb") || col("dfk") + size(ke) > maxTermDf).as("after"))
@@ -280,95 +283,94 @@ object Bm25Index {
   /** RETRACTION (VERDICT r12 #1): remove `retract`'s docs (doc_id,
     * text) from the index under the same single-manifest commit.
     * Postings of the retracted docs are deleted, their doc-length rows
-    * dropped, and the global stats row is decremented exactly. Because
-    * df is no longer monotone once docs can leave, df-cap tombstones
-    * touched by the retracted docs are RE-AUDITED: a tombstoned term
-    * whose df over the remaining corpus falls back ≤ maxTermDf is
-    * un-tombstoned by re-deriving its postings from `retained` (the
-    * remaining corpus — production's durable store); with
-    * `retained = None` the cap stays a one-way policy (no corpus
-    * re-scan). With the re-audit, the post-retract index is
-    * BIT-EQUIVALENT to one bootstrapped from scratch on the remaining
-    * corpus (Bm25IndexSpec proves per-index content equality), so
-    * every query result equals a one-shot scorer over the remaining
-    * corpus. Replay of a committed retract is a no-op. */
+    * dropped, and the global stats row is decremented exactly; the df-cap
+    * tombstones they touch are RE-AUDITED against `retained`, the
+    * remaining corpus ([[graft.dedup.TombstoneAudit]]; `None` keeps the
+    * cap a one-way policy). With the re-audit the index is
+    * BIT-EQUIVALENT to a fresh bootstrap on the remaining corpus, so
+    * every query result equals a one-shot scorer over it.
+    *
+    * Cost shape, the merge's: [[prepare]] then [[finishRetract]];
+    * `retained` is read only for touched tombstoned terms. Replay of a
+    * committed retract is a no-op. */
   def retractBatch(spark: SparkSession, idx: Indexes, retract: DataFrame,
                    batchSeq: Long, maxTermDf: Long,
                    retained: Option[DataFrame]): Unit =
     IndexTxn.run(idx.manifest, batchSeq) { txn =>
       if (txn.writes) {
-        stageRetract(spark, txn, idx, retract, maxTermDf, retained)
+        finishRetract(spark, txn, idx, prepare(spark, txn, idx, retract),
+          maxTermDf, retained)
         txn.commit()
       }
     }
 
-  /** Stage [[retractBatch]]'s rewrites in `txn` (which writes). */
-  private[graft] def stageRetract(spark: SparkSession, txn: IndexTxn,
-                                  idx: Indexes, retract: DataFrame,
-                                  maxTermDf: Long,
-                                  retained: Option[DataFrame]): Unit = {
-    val snap = txn.snap
-    val liveT = snap.buckets(idx.termName)
-    val liveD = snap.buckets(idx.docName)
-    val liveG = snap.buckets(idx.statsName)
-    val rIds = retract.select("doc_id").distinct()
-    // docs actually indexed (retracting a non-member is a no-op), with
-    // their indexed lengths for the exact stats decrement
-    val present = txn.pinned(idx.doc.probe(rIds, liveD)
-      .join(broadcast(rIds), Seq("doc_id"), "left_semi")
-      .select("doc_id", "dl").localCheckpoint(true))
-    val presentIds = present.select("doc_id")
-    val rt = txn.pinned(docTerms(retract)
-      .join(broadcast(presentIds), Seq("doc_id"), "left_semi")
-      .localCheckpoint(true))
-    val terms = rt.select("term").distinct()
-    val probeKeys = shardKeys(spark, terms)
-    val pm = idx.term.probe(probeKeys, liveT)
-      .join(broadcast(terms), Seq("term"))
-    val tombTouched = txn.pinned(pm.where(col("doc_id") === -1L).select("term")
-      .localCheckpoint(true))
-    // tombstone re-audit over the REMAINING corpus, restricted to the
-    // touched tombstoned terms (only they can have lost df)
-    val restored = retained match {
-      case Some(rem) if !tombTouched.isEmpty =>
-        txn.pinned(docTerms(rem).join(broadcast(tombTouched), Seq("term"))
-          .localCheckpoint(true))
-      case _ => rt.limit(0) // empty: nothing to pin
-    }
-    // un-tombstone = touched tombstoned terms whose remaining-corpus df
-    // fell back <= cap, INCLUDING df = 0 (every containing doc
-    // retracted — such a term has NO restored row at all, so deriving
-    // unTomb from the restored groups alone would keep its tombstone
-    // forever and silently suppress the term; ADVICE r13). Anti-join
-    // the touched set against the still-over-cap terms instead.
-    val overCap = restored.groupBy("term").agg(count(lit(1)).as("dfr"))
-      .where(col("dfr") > maxTermDf).select("term")
-    val unTomb = txn.pinned((if (retained.isDefined)
-        tombTouched.join(broadcast(overCap), Seq("term"), "left_anti")
-      else tombTouched.limit(0)) // one-way cap policy: never un-tombstone
-      .localCheckpoint(true))
-    val restoredLive = restored
-      .join(broadcast(unTomb), Seq("term"), "left_semi")
-      .select(tkCol(col("term"), col("doc_id")).as("tk"),
-        col("term"), col("doc_id"), col("tf"))
-    // disjoint-index rewrites overlap (guide §2.6) — same shape as
-    // finishMerge's above
-    val fTerm = txn.fork(idx.term.rewrite(probeKeys, liveT) { old =>
-      // drop the retracted docs' postings and the un-tombstoned
-      // tombstone rows (a tombstoned term has ONLY its tombstone row),
-      // then restore the re-derived posting lists
-      old.join(broadcast(presentIds), Seq("doc_id"), "left_anti")
-        .join(broadcast(unTomb), Seq("term"), "left_anti")
-        .unionByName(restoredLive)
+  /** The WRITE half of a takedown: stage the removal of the indexed
+    * docs of a [[prepare]] frame in `txn` (retracting a non-member is a
+    * no-op). ONE collect brings the decisions to the driver — each
+    * indexed doc with its indexed length (the exact stats decrement)
+    * and the touched tombstoned terms — then the rewrites read off the
+    * pinned frame. */
+  private[graft] def finishRetract(spark: SparkSession, txn: IndexTxn,
+                                   idx: Indexes, perT: DataFrame,
+                                   maxTermDf: Long,
+                                   retained: Option[DataFrame]): Unit = {
+    import spark.implicits._
+    val perR = perT.select(col("term"), col("tomb"),
+        filter(col("e"), _.getField("idl").isNotNull).as("re"))
+      .where(size(col("re")) > 0)
+    val facts = perR.select(explode(col("re")).as("x")).where(col("x.first"))
+      .select(col("x.doc_id").as("doc_id"), col("x.idl").as("dl"),
+        lit(null).cast("string").as("term"))
+      .unionByName(perR.where(col("tomb")).select(lit(null).cast("long")
+        .as("doc_id"), lit(null).cast("long").as("dl"), col("term")))
+      .collect()
+    val present = facts.filter(!_.isNullAt(0))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ids = present.keys.toSeq
+    val audit = TombstoneAudit(retained.map(docTerms), "term",
+      facts.filter(_.isNullAt(0)).map(_.getString(2)).toSeq, maxTermDf)(
+      df => txn.pinned(df.localCheckpoint(true)))
+    // disjoint-index rewrites overlap, as finishMerge's
+    val fTerm = txn.fork(idx.term.rewrite(shardKeys(spark, perR.select("term")),
+        txn.snap.buckets(idx.termName)) { old =>
+      val rest = old.where(!col("doc_id").isin(ids: _*))
+      audit.fold(rest)(_.patch(rest)(_.select(tkCol(col("term"),
+        col("doc_id")).as("tk"), col("term"), col("doc_id"), col("tf"))))
     })
     txn.point(IndexTxn.Point.Bm25BetweenWrites)
-    val fDoc = txn.fork(idx.doc.rewrite(presentIds, liveD) { old =>
-      old.join(broadcast(presentIds), Seq("doc_id"), "left_anti")
-    })
-    val fStats = txn.fork(restat(idx, liveG,
-      present.agg(count(lit(1)).as("dn"), coalesce(sum("dl"), lit(0L)).as("ddl")),
-      sign = -1L))
+    val fDoc = txn.fork(idx.doc.rewrite(ids.toDF("doc_id"),
+      txn.snap.buckets(idx.docName))(_.where(!col("doc_id").isin(ids: _*))))
+    val fStats = txn.fork(restat(idx, txn.snap.buckets(idx.statsName),
+      Seq((ids.size.toLong, present.values.sum)).toDF("dn", "ddl"), sign = -1L))
     stageRewrites(txn, idx, fTerm, fDoc, fStats)
+  }
+
+  /** The scoring rows of `terms` (probed through `probeKeys`, their
+    * posting shards) against the committed snapshot: per live posting
+    * its BM25 contribution, [[Retrieval.bm25Term]]'s exact node tree.
+    * IO is probe-bounded: the terms' shards, the matched docs' length
+    * buckets and the stats bucket. Also returns the pinned postings,
+    * which the caller releases. */
+  private def scored(spark: SparkSession, idx: Indexes, terms: DataFrame,
+                     probeKeys: DataFrame): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val snap = idx.manifest.read().getOrElse(
+      sys.error(s"Bm25Index: no committed manifest at ${idx.manifest.root}"))
+    val posts = idx.term.probe(probeKeys, snap.buckets(idx.termName))
+      .join(broadcast(terms), Seq("term"))
+      .where(col("doc_id") >= 0L).localCheckpoint(true)
+    val dfT = posts.groupBy("term").agg(count(lit(1)).as("df"))
+    val matched = posts.select("doc_id").distinct()
+    val dls = idx.doc.probe(matched, snap.buckets(idx.docName))
+      .join(matched, Seq("doc_id"), "left_semi")
+    val g = idx.stats.probe(Seq("g").toDF("k"), snap.buckets(idx.statsName))
+      .where(col("k") === "g")
+    (posts, posts.join(broadcast(dfT), Seq("term"))
+      .join(dls, Seq("doc_id"))
+      .crossJoin(broadcast(g))
+      .withColumn("avgdl", col("total_dl").cast("double") / col("n_docs"))
+      .withColumn("contrib", Retrieval.bm25Term(col("tf"), col("df"),
+        col("dl"), col("n_docs"), col("avgdl"))))
   }
 
   /** Top-k docs for the fixed `terms` against the committed snapshot —
@@ -383,27 +385,8 @@ object Bm25Index {
     require(terms.distinct.size == terms.size,
       "duplicate query terms would double-count their contribution")
     import spark.implicits._
-    val snap = idx.manifest.read().getOrElse(
-      sys.error(s"Bm25Index: no committed manifest at ${idx.manifest.root}"))
-    val probeKeys = terms.flatMap(t => (0 until Shards).map(s => s"$t#$s"))
-      .toDF("tk")
-    val termsDf = terms.toDF("term")
-    val pm = idx.term.probe(probeKeys, snap.buckets(idx.termName))
-      .join(broadcast(termsDf), Seq("term"))
-    val posts = pm.where(col("doc_id") >= 0L).localCheckpoint(true)
-    val dfT = posts.groupBy("term").agg(count(lit(1)).as("df"))
-    val matched = posts.select("doc_id").distinct()
-    val dls = idx.doc.probe(matched, snap.buckets(idx.docName))
-      .join(matched, Seq("doc_id"), "left_semi")
-    val g = idx.stats.probe(Seq("g").toDF("k"), snap.buckets(idx.statsName))
-      .where(col("k") === "g")
-    val contrib = Retrieval.bm25Term(col("tf"), col("df"), col("dl"),
-      col("n_docs"), col("avgdl"))
-    val rows = posts.join(broadcast(dfT), Seq("term"))
-      .join(dls, Seq("doc_id"))
-      .crossJoin(broadcast(g))
-      .withColumn("avgdl", col("total_dl").cast("double") / col("n_docs"))
-      .withColumn("contrib", contrib)
+    val (posts, rows) = scored(spark, idx, terms.toDF("term"),
+      terms.flatMap(t => (0 until Shards).map(s => s"$t#$s")).toDF("tk"))
     val pivots = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, col("contrib")).otherwise(lit(0.0)))
         .as(s"c$i")
@@ -444,29 +427,11 @@ object Bm25Index {
     * variable term sets). Output: (query_id, rank, doc_id, score). */
   def queryTable(spark: SparkSession, idx: Indexes, queries: DataFrame,
                  k: Int): DataFrame = {
-    import spark.implicits._
-    val snap = idx.manifest.read().getOrElse(
-      sys.error(s"Bm25Index: no committed manifest at ${idx.manifest.root}"))
     val q = queries.select(col("query_id").cast("long").as("query_id"),
       col("term")).distinct().localCheckpoint(true)
     val terms = q.select("term").distinct()
-    val pm = idx.term.probe(shardKeys(spark, terms), snap.buckets(idx.termName))
-      .join(broadcast(terms), Seq("term"))
-    val posts = pm.where(col("doc_id") >= 0L).localCheckpoint(true)
-    val dfT = posts.groupBy("term").agg(count(lit(1)).as("df"))
-    val matched = posts.select("doc_id").distinct()
-    val dls = idx.doc.probe(matched, snap.buckets(idx.docName))
-      .join(matched, Seq("doc_id"), "left_semi")
-    val g = idx.stats.probe(Seq("g").toDF("k"), snap.buckets(idx.statsName))
-      .where(col("k") === "g")
-    val contrib = Retrieval.bm25Term(col("tf"), col("df"), col("dl"),
-      col("n_docs"), col("avgdl"))
-    val rows = posts.join(broadcast(dfT), Seq("term"))
-      .join(dls, Seq("doc_id"))
-      .crossJoin(broadcast(g))
-      .withColumn("avgdl", col("total_dl").cast("double") / col("n_docs"))
-      .withColumn("contrib", contrib)
-      .join(broadcast(q), Seq("term")) // fan out to the queries using t
+    val (posts, scoredRows) = scored(spark, idx, terms, shardKeys(spark, terms))
+    val rows = scoredRows.join(broadcast(q), Seq("term")) // fan out to the queries using t
     val w = Window.partitionBy("query_id")
       .orderBy(desc("score"), col("doc_id").asc)
     val out = rows.groupBy("query_id", "doc_id")

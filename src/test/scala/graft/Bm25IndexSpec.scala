@@ -130,27 +130,6 @@ class Bm25IndexSpec extends AnyFunSuite {
   }
 
   // ------------------------------------------------ probe IO
-  private def recordsRead(body: => Unit): Long = {
-    val recs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (t.taskMetrics != null)
-          recs.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1L
-      var waited = 0
-      while (recs.get() != last && waited < 50) {
-        last = recs.get(); Thread.sleep(100); waited += 1
-      }
-      recs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("Bm25Index: query IO is bucket-slack-bounded, not corpus-" +
     "tracking — records read PLATEAU as the index grows with " +
@@ -166,7 +145,7 @@ class Bm25IndexSpec extends AnyFunSuite {
           (i.toLong, s"u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f"))),
         seq, maxTermDf = 65536L)
     }
-    def q(): Long = recordsRead {
+    def q(): Long = SparkCounts.recordsRead(spark) {
       Bm25Index.query(spark, idx, Seq("alpha", "beta"), k = 5).count()
       ()
     }

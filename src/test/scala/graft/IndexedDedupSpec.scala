@@ -23,30 +23,6 @@ class IndexedDedupSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Sum of task input records (file-scan rows) while `body` runs;
-    * waits for the async listener bus to drain. */
-  private def recordsRead(body: => Unit): Long = {
-    val recs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (t.taskMetrics != null)
-          recs.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1L
-      var waited = 0
-      while (recs.get() != last && waited < 5000) {
-        last = recs.get(); Thread.sleep(200); waited += 200
-      }
-      recs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   // ------------------------------------------------ IndexManifest
   test("IndexManifest: empty read is None; commits version, batch id " +
     "and bucket sets atomically; cleans tmp leftovers and stale versions") {
@@ -142,7 +118,9 @@ class IndexedDedupSpec extends AnyFunSuite {
     val (big, liveBig) = build(8192)
     val keys = Seq("k3", "k77", "k401").toDF("s")
     def probed(ix: LinearHashIndex, live: Set[String]): Long =
-      recordsRead { ix.probe(keys, live).where(col("doc_id") >= 0).count(); () }
+      SparkCounts.recordsRead(spark) {
+        ix.probe(keys, live).where(col("doc_id") >= 0).count(); ()
+      }
     val rSmall = probed(small, liveSmall)
     val rBig = probed(big, liveBig)
     assert(rBig <= rSmall * 4 + 64,
@@ -414,14 +392,14 @@ class IndexedDedupSpec extends AnyFunSuite {
     val b = mkDocs(Seq(
       9001L -> "w5a w5b w5c w5d w5e w5f w5g w5h", // dup of keep doc 5
       9002L -> "x1 x2 x3 x4 x5 x6 x7 x8"))
-    val rIndexed = recordsRead {
+    val rIndexed = SparkCounts.recordsRead(spark) {
       val v = IndexedDedup.processBatch(spark, idx, b, 1L, k = 3,
         threshold = 0.3, maxShingleDf = 20)
       v.count()
       org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(v)
       ()
     }
-    val rRecompute = recordsRead {
+    val rRecompute = SparkCounts.recordsRead(spark) {
       Dedup.incrementalDedup(keep, b, "doc_id", "text", k = 3,
         threshold = 0.3, maxShingleDf = 20).count()
       ()

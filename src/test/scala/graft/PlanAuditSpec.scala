@@ -854,6 +854,23 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("index plumbing starts no Spark job: IndexTxn.scala and " +
+    "TombstoneAudit.scala build frames only, so every action keeps the " +
+    "calling family's call site") {
+    val actions = Seq("""\.localCheckpoint\b""".r, """\.collect\(\)""".r,
+      """\.count\(\)""".r, """\.isEmpty\b""".r, """\.write\b""".r)
+    val offenders = for {
+      nm <- Seq("IndexTxn.scala", "TombstoneAudit.scala")
+      (ln, i) <- java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get(s"src/main/scala/graft/dedup/$nm"))
+        .toArray(Array.empty[String]).zipWithIndex
+      code = ln.trim
+      if !code.startsWith("*") && !code.startsWith("/*") && !code.startsWith("//")
+      if actions.exists(_.findFirstIn(code).isDefined)
+    } yield s"$nm:${i + 1}: $code"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("queries keep one session-fixture facility: in queries/ only " +
     "SessionFixtures.scala holds a ConcurrentHashMap, calls " +
     "computeIfAbsent or copies files with FileUtil.copy") {

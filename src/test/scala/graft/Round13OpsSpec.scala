@@ -290,7 +290,7 @@ class Round13OpsSpec extends AnyFunSuite {
         mkDocs((from until from + n).map(i =>
           (i.toLong, s"u${i}a u${i}b u${i}c u${i}d"))),
         seq, maxTermDf = 2L)
-    def run(): Long = recordsRead {
+    def run(): Long = SparkCounts.recordsRead(spark) {
       Bm25Index.queryTable(spark, idx, qdf, k = 5).count(); ()
     }
     grow(1001, 600, 1L)
@@ -556,27 +556,5 @@ class Round13OpsSpec extends AnyFunSuite {
     val union = idx.manifest.retainedUnion(idx.docName)
     assert(Seq(2L, 3L, 4L).forall(v =>
       idx.manifest.read(v).get.buckets(idx.docName).subsetOf(union)))
-  }
-
-  private def recordsRead(body: => Unit): Long = {
-    val recs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (t.taskMetrics != null)
-          recs.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1L
-      var waited = 0
-      while (recs.get() != last && waited < 50) {
-        last = recs.get(); Thread.sleep(100); waited += 1
-      }
-      recs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

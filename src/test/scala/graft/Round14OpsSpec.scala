@@ -477,6 +477,57 @@ class Round14OpsSpec extends AnyFunSuite {
       Point.BeforeCommit -> true), rebuilt)
   }
 
+  test("CuratedIndexes: a takedown has the ingest's shape — one " +
+    "retractBatch runs no more SQL executions than one processBatch on " +
+    "the same store") {
+    import graft.curation.CuratedIndexes
+    val idx = curatedAnnBoot()
+    val ingest = SparkCounts(spark) {
+      val v = CuratedIndexes.processBatch(spark, idx,
+        mkDocs(Seq(22L -> "q r s t")), 1L, k = 2, threshold = 0.3,
+        maxShingleDf = 4, maxTermDf = 64L, annVecs = Some(curVecs(Seq(22L))))
+      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(v)
+    }
+    val takedown = SparkCounts(spark) {
+      CuratedIndexes.retractBatch(spark, idx, mkDocs(Seq(2L -> "e f g h")),
+        2L, k = 2, maxShingleDf = 4, maxTermDf = 64L,
+        retained = Some(mkDocs(CurKeep.filterNot(_._1 == 2L)
+          ++ Seq(22L -> "q r s t"))), retractVecs = Some(curVecs(Seq(2L))))
+    }
+    assert(curState(idx) == ((Set(1L, 3L, 4L, 22L), Set(1L, 3L, 4L, 22L),
+      Set(1L, 3L, 22L))))
+    assert(takedown.sqlExecs <= ingest.sqlExecs,
+      s"takedown ran ${takedown.sqlExecs} SQL executions, ingest " +
+        s"${ingest.sqlExecs}")
+  }
+
+  test("retractBatch reads `retained` only for a touched tombstone: a " +
+    "takedown touching none completes with a retained frame that throws " +
+    "when evaluated") {
+    import graft.curation.CuratedIndexes
+    val poison = udf((_: String) =>
+      (throw new IllegalStateException("retained was read")): String)
+    def poisoned(rows: Seq[(Long, String)]): DataFrame =
+      mkDocs(rows).withColumn("text", poison(col("text")))
+    // no shingle or term of doc 2 is tombstoned in the curated store
+    val idx = curatedAnnBoot()
+    CuratedIndexes.retractBatch(spark, idx, mkDocs(Seq(2L -> "e f g h")),
+      1L, k = 2, maxShingleDf = 4, maxTermDf = 64L,
+      retained = Some(poisoned(CurKeep.filterNot(_._1 == 2L))),
+      retractVecs = Some(curVecs(Seq(2L))))
+    assert(curState(idx) == ((Set(1L, 3L, 4L), Set(1L, 3L, 4L),
+      Set(1L, 3L))))
+    // control: doc 2 touches the tombstoned 'h h', so the re-audit reads
+    // `retained` and the poison fires
+    val dIdx = dedupBoot(mkDocs(ZKeep))
+    intercept[Exception] {
+      IndexedDedup.retractBatch(spark, dIdx, mkDocs(ZKeep.filter(_._1 == 2L)),
+        1L, k = 2, maxShingleDf = 2,
+        retained = Some(poisoned(ZKeep.filterNot(_._1 == 2L))))
+    }
+    assert(dIdx.manifest.read().get.batchSeq == 0L)
+  }
+
   // ---------------------------------------- q307 hybrid fusion
 
   test("q307: RRF fusion is integer-exact and consistent — rrf_micro " +
