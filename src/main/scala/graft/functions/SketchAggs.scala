@@ -1,7 +1,6 @@
 package graft.functions
 
 import scala.collection.mutable
-import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -38,60 +37,41 @@ import org.apache.spark.unsafe.types.UTF8String
   * estimator arithmetic is visible in the query and in its oracle. */
 case class KMinDistinctLongs(child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[ArrayBuffer[Long]] {
+    extends TypedImperativeAggregate[KMinBuffer] {
   require(k > 0 && k <= 4096, s"k must be in [1, 4096], got $k")
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def createAggregationBuffer(): ArrayBuffer[Long] =
-    new ArrayBuffer[Long](k)
+  override def createAggregationBuffer(): KMinBuffer = new KMinBuffer(k)
 
-  override def update(buf: ArrayBuffer[Long],
-                      input: InternalRow): ArrayBuffer[Long] = {
+  override def update(buf: KMinBuffer, input: InternalRow): KMinBuffer = {
     val v = child.eval(input)
-    if (v != null) insert(buf, v.asInstanceOf[Long])
+    if (v != null) buf.insert(v.asInstanceOf[Long])
     buf
   }
 
-  // O(k) linear membership + max scan: k is small by contract (≤ 4096)
-  // and the buffer is a primitive array — a tree/hash buys nothing until
-  // k is large enough that a different sketch (HLL) is the right tool
-  private def insert(buf: ArrayBuffer[Long], v: Long): Unit = {
-    var maxIdx = 0
-    var i = 0
-    while (i < buf.length) {
-      if (buf(i) == v) return // distinctness: already tracked
-      if (buf(i) > buf(maxIdx)) maxIdx = i
-      i += 1
-    }
-    if (buf.length < k) buf += v
-    else if (v < buf(maxIdx)) buf(maxIdx) = v
-  }
-
-  override def merge(a: ArrayBuffer[Long],
-                     b: ArrayBuffer[Long]): ArrayBuffer[Long] = {
-    b.foreach(insert(a, _))
+  override def merge(a: KMinBuffer, b: KMinBuffer): KMinBuffer = {
+    b.foreach(a.insert)
     a
   }
 
-  override def eval(buf: ArrayBuffer[Long]): Any =
-    new GenericArrayData(buf.toArray.sorted)
+  override def eval(buf: KMinBuffer): Any = new GenericArrayData(buf.sorted)
 
-  override def serialize(buf: ArrayBuffer[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 8 * buf.length)
-    bb.putInt(buf.length)
-    buf.foreach(bb.putLong)
+  override def serialize(buf: KMinBuffer): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4 + 8 * buf.size)
+    bb.putInt(buf.size)
+    buf.foreach(v => { bb.putLong(v); () })
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Long] = {
+  override def deserialize(bytes: Array[Byte]): KMinBuffer = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val n = bb.getInt()
-    val buf = new ArrayBuffer[Long](math.max(n, k))
+    val buf = new KMinBuffer(k)
     var i = 0
-    while (i < n) { buf += bb.getLong(); i += 1 }
+    while (i < n) { buf.insert(bb.getLong()); i += 1 }
     buf
   }
 
@@ -102,6 +82,53 @@ case class KMinDistinctLongs(child: Expression, k: Int,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KMinDistinctLongs =
     copy(child = newChildren.head)
+}
+
+/** [[KMinDistinctLongs]]' state: at most k distinct longs, unordered, in
+  * a primitive array, with the index of the largest held value cached.
+  * Once the buffer is full, a value at or above that maximum — almost
+  * every value of a long stream — is rejected in O(1). A value below it
+  * pays an O(k) membership scan and, when it is new, replaces the
+  * maximum and a rescan finds the next one. k is small by contract
+  * (≤ 4096); past that a different sketch (HLL) is the right tool. */
+final class KMinBuffer(val k: Int) {
+  private val vals = new Array[Long](k)
+  private var n = 0
+  private var maxIdx = 0
+
+  def size: Int = n
+
+  def foreach(f: Long => Unit): Unit = {
+    var i = 0
+    while (i < n) { f(vals(i)); i += 1 }
+  }
+
+  /** The held values, ascending. */
+  def sorted: Array[Long] = {
+    val out = java.util.Arrays.copyOf(vals, n)
+    java.util.Arrays.sort(out)
+    out
+  }
+
+  def insert(v: Long): Unit =
+    if (n < k || v < vals(maxIdx)) {
+      var i = 0
+      while (i < n) {
+        if (vals(i) == v) return // distinctness: already tracked
+        i += 1
+      }
+      if (n < k) {
+        if (n == 0 || v > vals(maxIdx)) maxIdx = n
+        vals(n) = v
+        n += 1
+      } else {
+        vals(maxIdx) = v
+        i = 1
+        var m = 0
+        while (i < k) { if (vals(i) > vals(m)) m = i; i += 1 }
+        maxIdx = m
+      }
+    }
 }
 
 /** Misra–Gries heavy-hitter summary over a string column (Misra & Gries

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -60,7 +61,8 @@ object TrendModel {
     * construction); each fit is a distributed MLlib job over that
     * symbol's bars. For unbounded key cardinality use [[trainGlobal]]
     * (single model, symbol as a feature) — the 100 TB path flagged in
-    * SURVEY.md §7. */
+    * SURVEY.md §7. The label contract is [[trainGlobal]]'s: `movement`
+    * ∈ {0, 1}. */
   def trainPerSymbol(bars: DataFrame, seed: Long = 42L,
                      numTrees: Int = 20): Map[String, PipelineModel] = {
     import scala.concurrent.{Await, Future}
@@ -68,12 +70,13 @@ object TrendModel {
     import scala.concurrent.ExecutionContext.Implicits.global
     val symbols = bars.select("symbol").distinct()
       .collect().map(_.getString(0)).sorted
+    val labelled = binaryLabel(bars)
     // Fits are independent → submit them as concurrent Spark jobs
     // (scheduler interleaves the small per-tree stages); wall-clock is
     // max(fit) rather than sum(fit). Each fit keeps its fixed seed, so
     // results are identical to sequential training.
     val fits = symbols.toSeq.map { s =>
-      Future(s -> pipeline(seed, numTrees).fit(bars.where(col("symbol") === s)))
+      Future(s -> pipeline(seed, numTrees).fit(labelled.where(col("symbol") === s)))
     }
     Await.result(Future.sequence(fits), Duration.Inf).toMap
   }
@@ -84,7 +87,8 @@ object TrendModel {
   def trainingAccuracy(models: Map[String, PipelineModel],
                        bars: DataFrame): DataFrame =
     // One lazy plan: per-symbol scored frames unioned, aggregated in a
-    // single job — not one collect per model.
+    // single job — not one collect per model. Unordered: one row per
+    // symbol, so a caller sorts the handful of rows itself.
     models.toSeq.sortBy(_._1).map { case (s, m) =>
       m.transform(bars.where(col("symbol") === s))
         .select(col("symbol"), col("movement"), col("prediction"))
@@ -92,12 +96,25 @@ object TrendModel {
       .groupBy("symbol")
       .agg(count(lit(1)).as("n_obs"),
         avg((col("prediction") === col("movement")).cast("double")).as("accuracy"))
-      .orderBy("symbol")
+
+  /** `movement` tagged as a two-valued nominal attribute: a classifier
+    * then reads its class count from the schema instead of running a
+    * job that scans the bars for the largest label. */
+  private def binaryLabel(bars: DataFrame): DataFrame =
+    bars.withColumn("movement", col("movement").as("movement",
+      NominalAttribute.defaultAttr.withName("movement")
+        .withValues("0", "1").toMetadata()))
 
   /** Scale path: one model over all symbols (hashed symbol as a feature) —
     * no per-key fit loop, no driver collect of the key set, any key
     * cardinality. The hashing lives INSIDE the pipeline (SQLTransformer)
-    * so the saved/loaded model scores raw bars directly. */
+    * so the saved/loaded model scores raw bars directly.
+    *
+    * Label contract: `movement` ∈ {0, 1}, as [[dailyBars]] builds it
+    * (`close > open` cast to a number). The fit declares the label a
+    * two-valued nominal attribute, so the forest always has two classes
+    * and starts no class-count scan; a bar set holding only one
+    * movement value still fits a two-class forest. */
   def trainGlobal(bars: DataFrame, seed: Long = 42L): PipelineModel = {
     val indexer = new org.apache.spark.ml.feature.SQLTransformer()
       .setStatement(
@@ -107,7 +124,7 @@ object TrendModel {
     val rf = new RandomForestClassifier()
       .setLabelCol("movement").setFeaturesCol("features")
       .setNumTrees(20).setSeed(seed)
-    new Pipeline().setStages(Array(indexer, assembler, rf)).fit(bars)
+    new Pipeline().setStages(Array(indexer, assembler, rf)).fit(binaryLabel(bars))
   }
 
   /** Streaming inference (E3's realtime leg): score each micro-batch,

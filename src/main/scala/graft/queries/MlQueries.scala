@@ -53,8 +53,18 @@ object MlQueries extends QueryPack {
       // 10 trees for the driver gate: same pipeline shape (assembler→RF),
       // half the fit cost; library default stays 20.
       val models = TrendModel.trainPerSymbol(bars, numTrees = 10)
-      TrendModel.trainingAccuracy(models, bars).orderBy("symbol")
+      scoredOnDriver[String](TrendModel.trainingAccuracy(models, bars), "symbol")
     } finally bars.unpersist()
+  }
+
+  /** A forest query's score table — a few rows — computed in one
+    * execution while its cached bars are still live, and returned as a
+    * driver-local frame sorted by `key`: the sort needs no range-sample
+    * job, and the result never re-derives the bars from `events` once
+    * the cache is released. */
+  private def scoredOnDriver[K: Ordering](scores: DataFrame, key: String): DataFrame = {
+    val rows = scores.collect().sortBy(_.getAs[K](key))
+    scores.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), scores.schema)
   }
 
   /** Per-symbol training-set shape: bar count + up-movement base rate.
@@ -106,16 +116,21 @@ object MlQueries extends QueryPack {
     * forest with the hashed symbol as a feature (no per-key fit loop, no
     * driver collect of the key set) — per-symbol training accuracy of
     * that single model. Rows-only (RF internals are not SQL-expressible);
-    * spec asserts it beats the majority baseline. */
+    * spec asserts it beats the majority baseline. The fit and the score
+    * share one materialization of the bars; the score table is one row
+    * per symbol and comes back to the driver (at unbounded symbol
+    * cardinality it would be pinned with `localCheckpoint` instead). */
   private def globalRf(spark: SparkSession, dir: String): DataFrame = {
     val bars = TrendModel.dailyBars(Tables.events(spark, dir)).coalesce(8).cache()
     try {
       val m = TrendModel.trainGlobal(bars)
-      m.transform(bars)
+      // one row per (symbol, user, day): scored in one partition, the
+      // aggregate needs no exchange and runs as one job
+      scoredOnDriver[String](m.transform(bars).coalesce(1)
         .groupBy("symbol")
         .agg(count(lit(1)).as("n_obs"),
-          avg((col("prediction") === col("movement")).cast("double")).as("accuracy"))
-        .orderBy("symbol")
+          avg((col("prediction") === col("movement")).cast("double")).as("accuracy")),
+        "symbol")
     } finally bars.unpersist()
   }
 
@@ -157,7 +172,7 @@ object MlQueries extends QueryPack {
     val bars = withFold(TrendModel.dailyBars(Tables.events(spark, dir)))
       .coalesce(8).cache()
     try {
-      (0L to 3L).map { f =>
+      scoredOnDriver[Long]((0L to 3L).map { f =>
         val m = TrendModel.trainGlobal(bars.where(col("fold") =!= f))
         m.transform(bars.where(col("fold") === f))
           .agg(count(lit(1)).as("n_test"),
@@ -165,8 +180,7 @@ object MlQueries extends QueryPack {
               .as("accuracy"))
           .withColumn("fold", lit(f))
       }.reduce(_ unionByName _)
-        .select("fold", "n_test", "accuracy")
-        .orderBy("fold")
+        .select("fold", "n_test", "accuracy"), "fold")
     } finally bars.unpersist()
   }
 

@@ -78,20 +78,31 @@ object SketchQueries extends QueryPack {
       poly_hash(concat(
         (col("l_orderkey") * 10 + col("l_linenumber")).cast("string"),
         lit(":k"))).as("h"))
-    val per = li.groupBy("flag").agg(
+    // ONE scan: dedup the (flag, h) pairs, then one rollup yields each
+    // flag's sketch and exact distinct count and, on its grand-total row,
+    // the direct global sketch. The global aggregate below reads the
+    // rollup's rows once for both global sketches, and both consumers
+    // share the dedup exchange, so `lineitem` is read once.
+    val sketches = li.distinct().rollup("flag").agg(
+      grouping("flag").as("total"),
       k_min_distinct(col("h"), k).as("kmv"),
-      countDistinct(col("h")).as("exact_d"))
-    val direct = li.agg(k_min_distinct(col("h"), k).as("g_direct"))
-    val merged = per.select(explode(col("kmv")).as("h"))
-      .agg(k_min_distinct(col("h"), k).as("g_merged"))
+      count(col("h")).as("exact_d"))
+    // g_direct: the grand-total row's sketch (the only non-null input of
+    // the max); g_merged: the per-flag sketches re-sketched from their
+    // exploded values, through the aggregate's partial and final merge.
     // try_element_at, not element_at: Spark 4 runs ANSI by default, and
     // a group with fewer than k distinct keys would otherwise throw on
     // the out-of-bounds index; the oracle's CASE/max form yields NULL
     // for the same case, and est_d's size<k branch handles it
-    val global = direct.crossJoin(merged)
+    val global = sketches
+      .select(col("total"), col("kmv"),
+        explode_outer(when(col("total") === 0, col("kmv"))).as("h"))
+      .agg(max(when(col("total") === 1, col("kmv"))).as("g_direct"),
+        k_min_distinct(col("h"), k).as("g_merged"))
       .select((col("g_direct") === col("g_merged")).as("merge_eq"),
         expr(s"try_element_at(g_direct, $k)").as("g_kth"))
-    per.crossJoin(broadcast(global))
+    // a few rows: one partition sorts them without a range-sample job
+    sketches.where(col("total") === 0).crossJoin(broadcast(global))
       .select(col("flag"), col("exact_d"),
         expr(s"try_element_at(kmv, $k)").as("kth_min"),
         when(size(col("kmv")) < k, size(col("kmv")).cast("long"))
@@ -99,7 +110,7 @@ object SketchQueries extends QueryPack {
           .as("est_d"),
         col("merge_eq"),
         expr(s"${(k - 1).toLong * M}L DIV g_kth").as("g_est_d"))
-      .orderBy("flag")
+      .coalesce(1).orderBy("flag")
   }
 
   /** q238: KMV SET ALGEBRA (Beyer et al. SIGMOD'07, "On synopses for

@@ -166,4 +166,46 @@ class Bm25IndexSpec extends AnyFunSuite {
     val hardCap = (2 * Bm25Index.Shards + 10) * 128L
     assert(r2 <= hardCap, s"probe read $r2 > slack bound $hardCap")
   }
+
+  // ------------------------------------------ zero-df tombstone re-audit
+
+  /** 'hot' in docs 1,2,3 — df 3 > cap 2; retract all three. */
+  private val ZBm25Keep = Seq(
+    1L -> "hot p q", 2L -> "hot r s", 3L -> "hot t u",
+    4L -> "alpha w x")
+  private val ZRetractIds = Set(1L, 2L, 3L)
+
+  private def bm25Boot(docs: DataFrame): Bm25Index.Indexes = boot(docs, 2L)
+
+  /** [[snapshot]] without the manifest's version and batch id. */
+  private def bm25State(idx: Bm25Index.Indexes) = {
+    val (_, _, term, doc, stats) = snapshot(idx)
+    (term, doc, stats)
+  }
+
+  test("Bm25Index.retractBatch: a tombstoned term whose remaining-corpus " +
+    "df drops to ZERO is un-tombstoned — no permanent retrieval " +
+    "suppression, retract == fresh bootstrap") {
+    val keep = mkDocs(ZBm25Keep)
+    val retract = mkDocs(ZBm25Keep.filter(r => ZRetractIds(r._1)))
+    val remaining = mkDocs(ZBm25Keep.filterNot(r => ZRetractIds(r._1)))
+    val idx = bm25Boot(keep)
+    val (t0, _, _) = bm25State(idx)
+    assert(t0.exists(r => r._2 == "hot" && r._3 == -1L),
+      "fixture must tombstone 'hot'")
+    Bm25Index.retractBatch(spark, idx, retract, 1L, maxTermDf = 2L,
+      retained = Some(remaining))
+    val st1 = bm25State(idx)
+    assert(!st1._1.exists(_._2 == "hot"),
+      s"zero-df term must vanish entirely (tombstone included): ${st1._1}")
+    assert(bm25State(bm25Boot(remaining)) == st1,
+      "retract(all containing docs) must equal a fresh bootstrap")
+    // future merges index the term again — retrieval is NOT suppressed
+    Bm25Index.mergeBatch(spark, idx,
+      mkDocs(Seq(201L -> "hot fresh doc")), 2L, maxTermDf = 2L)
+    val hits = Bm25Index.query(spark, idx, Seq("hot"), k = 3)
+      .select("doc_id").as[Long].collect().toSet
+    assert(hits == Set(201L),
+      s"'hot' must be retrievable after re-indexing: $hits")
+  }
 }

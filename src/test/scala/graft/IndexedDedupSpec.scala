@@ -407,4 +407,54 @@ class IndexedDedupSpec extends AnyFunSuite {
     assert(rIndexed * 2 < rRecompute,
       s"indexed path read $rIndexed records vs recompute $rRecompute")
   }
+
+  // ------------------------------------------ zero-df tombstone re-audit
+
+  /** 'h h' in docs 1,2,3 — df 3 > cap 2, tombstoned at bootstrap.
+    * Retracting ALL THREE drops its remaining-corpus df to ZERO: a
+    * fresh bootstrap on doc 4 alone has no 'h h' row of any kind, so
+    * the re-audit must un-tombstone a shingle with NO restored rows
+    * (deriving unTomb from the restored groups missed it). */
+  private val ZKeep = Seq(
+    1L -> "h h p q", 2L -> "h h r s", 3L -> "h h t u", 4L -> "v w x y")
+  private val ZRetractIds = Set(1L, 2L, 3L)
+
+  private def dedupBoot(docs: DataFrame): IndexedDedup.Indexes =
+    IndexedDedup.bootstrap(spark, docs, k = 2, maxShingleDf = 2,
+      tmp("zdf_s_"), tmp("zdf_d_"), tmp("zdf_m_"), rowCap = 64L)
+
+  private def dedupState(idx: IndexedDedup.Indexes) = {
+    val st = idx.manifest.read().get
+    (idx.shingle.allRows(st.buckets(idx.shingleName))
+        .as[(String, Long)].collect().toSet,
+      idx.doc.allRows(st.buckets(idx.docName))
+        .select("doc_id", "n_keep").as[(Long, Long)].collect().toSet)
+  }
+
+  test("IndexedDedup.retractBatch: a tombstoned shingle whose " +
+    "remaining-corpus df drops to ZERO is un-tombstoned (no stale " +
+    "tombstone row survives) — retract == fresh bootstrap") {
+    val keep = mkDocs(ZKeep)
+    val retract = mkDocs(ZKeep.filter(r => ZRetractIds(r._1)))
+    val remaining = mkDocs(ZKeep.filterNot(r => ZRetractIds(r._1)))
+    val idx = dedupBoot(keep)
+    val (s0, _) = dedupState(idx)
+    assert(s0.contains(("h h", -1L)), "fixture must tombstone 'h h'")
+    IndexedDedup.retractBatch(spark, idx, retract, 1L, k = 2,
+      maxShingleDf = 2, retained = Some(remaining))
+    val (s1, d1) = dedupState(idx)
+    assert(!s1.exists(_._1 == "h h"),
+      s"zero-df shingle must vanish entirely (tombstone included): $s1")
+    val fresh = dedupBoot(remaining)
+    assert((s1, d1) == dedupState(fresh),
+      "retract(all containing docs) must equal a fresh bootstrap")
+    // and the shingle participates in duplicate detection again: two
+    // new docs sharing ONLY 'h h'-adjacent content pair up
+    val b = mkDocs(Seq(101L -> "h h z1 z2", 102L -> "h h z1 z2"))
+    val got = IndexedDedup.processBatch(spark, idx, b, 2L, k = 2,
+      threshold = 0.3, maxShingleDf = 2)
+      .as[(Long, String, Long)].collect().toSet
+    assert(got == Set((101L, "kept", 101L), (102L, "dup_in_drop", 101L)),
+      s"un-tombstoned shingle must create pairs again: $got")
+  }
 }

@@ -87,6 +87,45 @@ class MlMultimodalSpec extends AnyFunSuite {
     assert(got.values.forall(_ > 0.5), s"accuracies: $got")
   }
 
+  // The forest pins below hold the models and their scores bit-for-bit:
+  // bootstrap sampling follows the bars' partitioning, so a change to
+  // how the forest queries cache, label or score their bars must leave
+  // every prediction, probability and accuracy identical.
+  private val pinDir = "/root/testdata/sf0.001"
+
+  private def pinnedRows(q: String): Seq[Seq[Any]] =
+    SparkEntry.queries(q)(spark, pinDir).collect().map(_.toSeq).toSeq
+
+  test("q71 forest: predictions on q71's own bars and q71's rows are pinned exactly") {
+    import org.apache.spark.ml.functions.vector_to_array
+    // q71's bars: coalesce(8) fixes the partitioning the bootstrap reads
+    val q71Bars = TrendModel.dailyBars(Tables.events(spark, pinDir))
+      .coalesce(8).cache()
+    val scored = try {
+      TrendModel.trainGlobal(q71Bars).transform(q71Bars)
+        .agg(count(lit(1)), bit_xor(xxhash64(col("symbol"), col("user_id"),
+          col("day"), col("prediction"), vector_to_array(col("probability")))))
+        .as[(Long, Long)].head()
+    } finally q71Bars.unpersist()
+    assert(scored == ((792L, 6181020260255482047L)),
+      s"(bars, prediction hash) = $scored")
+    val rows = pinnedRows("q71_global_rf")
+    assert(rows == Seq(Seq("click", 165L, 1.0),
+      Seq("error", 159L, 0.9937106918238994), Seq("purchase", 159L, 1.0),
+      Seq("signup", 156L, 1.0), Seq("view", 153L, 1.0)), rows)
+  }
+
+  test("q46 and q236 forests: output rows are pinned exactly") {
+    val q46 = pinnedRows("q46_rf_accuracy")
+    assert(q46 == Seq(Seq("click", 165L, 0.9878787878787879),
+      Seq("error", 159L, 0.9937106918238994), Seq("purchase", 159L, 1.0),
+      Seq("signup", 156L, 1.0), Seq("view", 153L, 1.0)), q46)
+    val q236 = pinnedRows("q236_cv_accuracy")
+    assert(q236 == Seq(Seq(0L, 184L, 0.967391304347826),
+      Seq(1L, 189L, 0.9735449735449735), Seq(2L, 208L, 0.9855769230769231),
+      Seq(3L, 211L, 0.985781990521327)), q236)
+  }
+
   test("q235/q236 k-fold CV: folds are deterministic and partition the bars; CV-mean beats the majority baseline") {
     val dir = "/root/testdata/sf0.001"
     // fold assignment is a pure function of the bar key: two runs agree,

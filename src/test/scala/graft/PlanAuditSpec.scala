@@ -403,6 +403,29 @@ class PlanAuditSpec extends AnyFunSuite {
       s"KMV lost its partial pass; partials=$kmvPartials")
   }
 
+  private def noopWrite(q: String): SparkCounts.Counts = SparkCounts(spark) {
+    SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
+  }
+
+  test("q71 build+materialize reads `events` once and starts no class-count scan") {
+    val events = graft.tables.Tables.events(spark, dir).count()
+    val c = noopWrite("q71_global_rf")
+    // fit and score share one materialization of the bars: the result
+    // must not re-derive them from `events` after the cache is released
+    assert(c.scanRecords == events,
+      s"events scanned ${c.scanRecords} records for $events rows")
+    // the label's metadata carries the class count (movement ∈ {0, 1})
+    val scans = c.execSites.filter(_.contains("getNumClasses"))
+    assert(scans.isEmpty, s"class-count scans started at:\n${scans.mkString("\n\n")}")
+  }
+
+  test("q217 reads each `lineitem` record once") {
+    val lines = graft.tables.Tables.lineitem(spark, dir).count()
+    val c = noopWrite("q217_kmv_distinct")
+    assert(c.scanRecords == lines,
+      s"lineitem scanned ${c.scanRecords} records for $lines rows")
+  }
+
   test("q68 CMS probe: no Scala closure UDF anywhere; sketch aggregates map-side") {
     val df = SparkEntry.queries("q68_countmin_check")(spark, dir)
     // the point estimate is least(element_at(...)) over native hash

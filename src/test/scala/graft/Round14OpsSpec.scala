@@ -8,10 +8,10 @@ import graft.dedup.{IndexManifest, IndexedDedup}
 import graft.dedup.IndexTxn.Point
 import graft.text.Bm25Index
 
-/** Round-14 pins: the ADVICE r13 fixes (zero-df tombstone re-audit in
-  * both retract paths; manifest gc ordered AFTER the commit rename),
-  * the expected-version CAS commit (VERDICT r13 #5), and the IVF
-  * per-batch manifest commit protocol (#1). */
+/** Round-14 pins: manifest gc ordered AFTER the commit rename, the
+  * expected-version CAS commit (VERDICT r13 #5), and the IVF per-batch
+  * manifest commit protocol (#1). The zero-df tombstone re-audit specs
+  * live with their families, in IndexedDedupSpec and Bm25IndexSpec. */
 class Round14OpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -22,16 +22,11 @@ class Round14OpsSpec extends AnyFunSuite {
   private def mkDocs(rows: Seq[(Long, String)]): DataFrame =
     rows.toDF("doc_id", "text")
 
-  // ---------------------------------------- zero-df tombstone re-audit
+  // ---------------------------------------- takedown fixtures
 
-  /** 'h h' in docs 1,2,3 — df 3 > cap 2, tombstoned at bootstrap.
-    * Retracting ALL THREE drops its remaining-corpus df to ZERO: a
-    * fresh bootstrap on doc 4 alone has no 'h h' row of any kind, so
-    * the re-audit must un-tombstone a shingle with NO restored rows
-    * (ADVICE r13 — deriving unTomb from the restored groups missed it). */
+  /** 'h h' in docs 1,2,3 — df 3 > cap 2, tombstoned at bootstrap. */
   private val ZKeep = Seq(
     1L -> "h h p q", 2L -> "h h r s", 3L -> "h h t u", 4L -> "v w x y")
-  private val ZRetractIds = Set(1L, 2L, 3L)
 
   private def dedupBoot(docs: DataFrame): IndexedDedup.Indexes =
     IndexedDedup.bootstrap(spark, docs, k = 2, maxShingleDf = 2,
@@ -45,38 +40,6 @@ class Round14OpsSpec extends AnyFunSuite {
         .select("doc_id", "n_keep").as[(Long, Long)].collect().toSet)
   }
 
-  test("IndexedDedup.retractBatch: a tombstoned shingle whose " +
-    "remaining-corpus df drops to ZERO is un-tombstoned (no stale " +
-    "tombstone row survives) — retract == fresh bootstrap") {
-    val keep = mkDocs(ZKeep)
-    val retract = mkDocs(ZKeep.filter(r => ZRetractIds(r._1)))
-    val remaining = mkDocs(ZKeep.filterNot(r => ZRetractIds(r._1)))
-    val idx = dedupBoot(keep)
-    val (s0, _) = dedupState(idx)
-    assert(s0.contains(("h h", -1L)), "fixture must tombstone 'h h'")
-    IndexedDedup.retractBatch(spark, idx, retract, 1L, k = 2,
-      maxShingleDf = 2, retained = Some(remaining))
-    val (s1, d1) = dedupState(idx)
-    assert(!s1.exists(_._1 == "h h"),
-      s"zero-df shingle must vanish entirely (tombstone included): $s1")
-    val fresh = dedupBoot(remaining)
-    assert((s1, d1) == dedupState(fresh),
-      "retract(all containing docs) must equal a fresh bootstrap")
-    // and the shingle participates in duplicate detection again: two
-    // new docs sharing ONLY 'h h'-adjacent content pair up
-    val b = mkDocs(Seq(101L -> "h h z1 z2", 102L -> "h h z1 z2"))
-    val got = IndexedDedup.processBatch(spark, idx, b, 2L, k = 2,
-      threshold = 0.3, maxShingleDf = 2)
-      .as[(Long, String, Long)].collect().toSet
-    assert(got == Set((101L, "kept", 101L), (102L, "dup_in_drop", 101L)),
-      s"un-tombstoned shingle must create pairs again: $got")
-  }
-
-  /** 'hot' in docs 1,2,3 — df 3 > cap 2; retract all three. */
-  private val ZBm25Keep = Seq(
-    1L -> "hot p q", 2L -> "hot r s", 3L -> "hot t u",
-    4L -> "alpha w x")
-
   private def bm25Boot(docs: DataFrame): Bm25Index.Indexes =
     Bm25Index.bootstrap(spark, docs, maxTermDf = 2L, tmp("r14b_t_"),
       tmp("r14b_d_"), tmp("r14b_g_"), tmp("r14b_m_"), rowCap = 64L)
@@ -89,32 +52,6 @@ class Round14OpsSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toSet,
       idx.stats.allRows(st.buckets(idx.statsName))
         .as[(String, Long, Long)].collect().toSet)
-  }
-
-  test("Bm25Index.retractBatch: a tombstoned term whose remaining-corpus " +
-    "df drops to ZERO is un-tombstoned — no permanent retrieval " +
-    "suppression, retract == fresh bootstrap") {
-    val keep = mkDocs(ZBm25Keep)
-    val retract = mkDocs(ZBm25Keep.filter(r => ZRetractIds(r._1)))
-    val remaining = mkDocs(ZBm25Keep.filterNot(r => ZRetractIds(r._1)))
-    val idx = bm25Boot(keep)
-    val (t0, _, _) = bm25State(idx)
-    assert(t0.exists(r => r._2 == "hot" && r._3 == -1L),
-      "fixture must tombstone 'hot'")
-    Bm25Index.retractBatch(spark, idx, retract, 1L, maxTermDf = 2L,
-      retained = Some(remaining))
-    val st1 = bm25State(idx)
-    assert(!st1._1.exists(_._2 == "hot"),
-      s"zero-df term must vanish entirely (tombstone included): ${st1._1}")
-    assert(bm25State(bm25Boot(remaining)) == st1,
-      "retract(all containing docs) must equal a fresh bootstrap")
-    // future merges index the term again — retrieval is NOT suppressed
-    Bm25Index.mergeBatch(spark, idx,
-      mkDocs(Seq(201L -> "hot fresh doc")), 2L, maxTermDf = 2L)
-    val hits = Bm25Index.query(spark, idx, Seq("hot"), k = 3)
-      .select("doc_id").as[Long].collect().toSet
-    assert(hits == Set(201L),
-      s"'hot' must be retrievable after re-indexing: $hits")
   }
 
   // ---------------------------------------- manifest commit ordering + CAS

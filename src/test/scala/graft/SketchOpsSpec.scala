@@ -41,6 +41,60 @@ class SketchOpsSpec extends AnyFunSuite {
     assert(got == Seq(3L, 5L, 9L))
   }
 
+  test("property: the KMV buffer keeps the k smallest distinct values under any split and merge order") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.LongType
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.functions.KMinDistinctLongs
+
+    // narrow value ranges force duplicates and fewer than k distinct
+    // values; the full range covers both signs and the extremes
+    val value = (range: Long) => Gen.frequency(
+      12 -> Gen.choose(-range, range).map(Option(_)),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue, 0L).map(Option(_)),
+      1 -> Gen.const(Option.empty[Long]))
+    val gen = for {
+      k <- Gen.oneOf(Gen.const(1), Gen.choose(2, 8), Gen.choose(9, 64))
+      range <- Gen.oneOf(3L, 40L, 1000L, Long.MaxValue)
+      n <- Gen.choose(0, 300)
+      vals <- Gen.listOfN(n, value(range))
+      cuts <- Gen.listOfN(5, Gen.choose(0, n))
+      mergeSeed <- Gen.long
+    } yield (k, vals, cuts.sorted, mergeSeed)
+
+    (1 to 300).foreach { i =>
+      gen(Gen.Parameters.default, Seed(i.toLong)).foreach {
+        case (k, vals, cuts, mergeSeed) =>
+          val agg = KMinDistinctLongs(BoundReference(0, LongType, nullable = true), k)
+          // random split: one partial per slice between the cut points
+          val bounds = (0 +: cuts :+ vals.size).sliding(2).toSeq
+          val partials = scala.collection.mutable.ArrayBuffer(bounds.map {
+            case Seq(lo, hi) =>
+              vals.slice(lo, hi).foldLeft(agg.createAggregationBuffer()) {
+                (b, v) => agg.update(b, InternalRow(v.map(Long.box).orNull))
+              }
+          }: _*)
+          // random merge tree; every other merge ships a serialized partial
+          val rnd = new scala.util.Random(mergeSeed)
+          var shipped = false
+          while (partials.size > 1) {
+            val a = partials.remove(rnd.nextInt(partials.size))
+            val b0 = partials.remove(rnd.nextInt(partials.size))
+            shipped = !shipped
+            val b = if (shipped) agg.deserialize(agg.serialize(b0)) else b0
+            partials += agg.merge(a, b)
+          }
+          val got = agg.eval(partials.head).asInstanceOf[ArrayData]
+            .toLongArray().toSeq
+          val expected = vals.flatten.distinct.sorted.take(k)
+          assert(got == expected, s"seed $i, k $k: $got != $expected")
+      }
+    }
+  }
+
   // ---------------------------------------------------- CountMinLongs
   test("count-min sketch is partitioning-invariant and replays the cell formula") {
     import graft.functions.CountMinLongs
