@@ -11,13 +11,7 @@ object Bench {
     // after ONE discarded warm-up rep per query (first-rep JIT/shuffle
     // warm-up otherwise inflates sub-second medians).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus)
     // Ambient-load sentinels: BENCH_r06's main pass carried 2.5× load
     // inflation on two queries that only the isolated section exposed.
     // Recording the OS 1-min load average at start/end makes a loaded

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.queries.EngineQueries
 
 /** SCALING experiment for q294 (VERDICT r12 #7): time the BPE ENCODE
@@ -27,13 +27,7 @@ object BpeBudgetBench {
     val budget = args(1).toInt
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus)
     val allRules = EngineQueries.bpeProductionRules(spark, dir)
       .sortBy(_._1).map(m => (m._5, m._6))
     val rules = allRules.take(budget)

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.dedup.IndexedDedup
 
 /** SCALING experiment for RETRACTION-HEAVY CHURN (VERDICT r13 #7): the
@@ -34,13 +34,7 @@ object ChurnBench {
     val dir = args(0)
     val cycles = if (args.length > 1) args(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus)
     val docs = graft.tables.Tables.documents(spark, dir)
       .select("doc_id", "text")
     val sample = docs.where(col("doc_id") % 10 === 0)

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
+
 /** Deterministic N× blow-up of a testdata SF directory — the
   * scaling-curve fixture generator (a BUILD STEP: writes to a caller-
   * chosen scratch dir, never committed data). Weak-scaling semantics:
@@ -57,13 +59,7 @@ object ScaleUp {
     val Array(srcDir, outDir, factorS) = args.take(3)
     val factor = factorS.toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus)
     run(spark, srcDir, outDir, factor)
     println(s"""{"scaleup":"done","src":"$srcDir","out":"$outDir","factor":$factor}""")
     spark.stop()

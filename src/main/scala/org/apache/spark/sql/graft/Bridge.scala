@@ -34,6 +34,11 @@ object Bridge {
       case _ => false
     }
 
+  /** Blocks until every event posted so far has reached every listener
+    * (the listener bus is `private[spark]`). */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Temp-function registration on a live session (the FunctionRegistry is
     * `private[sql]` too). For build-time registration prefer
     * `graft.functions.GraftExtensions` via spark.sql.extensions. */

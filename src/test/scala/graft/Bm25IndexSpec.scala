@@ -4,15 +4,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.text.Bm25Index
 import graft.dedup.IndexTxn.Point
+import graft.obs.QueryProfile
+import graft.text.Bm25Index
 
 /** Commit-protocol and probe-IO pins for the persisted BM25 index —
   * the same bar IndexedDedupSpec holds the dedup indexes to:
   * crash-injected atomicity (readers stay on the pre-batch snapshot of
-  * ALL THREE indexes, replay converges bit-identically) and
-  * SparkListener proof that query IO tracks the query's terms, not the
-  * index size. */
+  * ALL THREE indexes, replay converges bit-identically), profiled
+  * proof that query IO tracks the query's terms, not the index size,
+  * and retraction: a retracted index equals a fresh bootstrap on the
+  * remaining corpus, also after a crashed retract is replayed. */
 class Bm25IndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -145,10 +147,9 @@ class Bm25IndexSpec extends AnyFunSuite {
           (i.toLong, s"u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f"))),
         seq, maxTermDf = 65536L)
     }
-    def q(): Long = SparkCounts.recordsRead(spark) {
+    def q(): Long = QueryProfile.of(spark) {
       Bm25Index.query(spark, idx, Seq("alpha", "beta"), k = 5).count()
-      ()
-    }
+    }._2.recordsRead
     grow(1001, 800, 1L) // 17x the base rows
     val buckets1 = idx.manifest.read().get.buckets("term").size
     val r1 = q()
@@ -207,5 +208,88 @@ class Bm25IndexSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(hits == Set(201L),
       s"'hot' must be retrievable after re-indexing: $hits")
+  }
+
+  // ------------------------------------------------ retract
+
+  /** 'hot' in docs 1,2,3: df 3 > cap 2 — tombstoned at bootstrap;
+    * retracting 2,3 re-audits it back to a live posting list. */
+  private val Bm25Keep = Seq(
+    1L -> "hot alpha p q", 2L -> "hot r s", 3L -> "hot t u v",
+    4L -> "alpha w x")
+  private val Bm25RetractIds = Set(2L, 3L)
+
+  test("Bm25Index.retractBatch == bootstrap on the remaining corpus: " +
+    "postings/doc rows gone, stats decremented exactly, touched " +
+    "tombstones re-audited") {
+    val keep = mkDocs(Bm25Keep)
+    val retract = mkDocs(Bm25Keep.filter(r => Bm25RetractIds(r._1)))
+    val remaining = mkDocs(Bm25Keep.filterNot(r => Bm25RetractIds(r._1)))
+    val idx = bm25Boot(keep)
+    val (t0, _, g0) = bm25State(idx)
+    assert(t0.exists(r => r._2 == "hot" && r._3 == -1L),
+      "fixture must tombstone 'hot'")
+    assert(g0 == Set(("g", 4L, 14L)), g0.toString)
+    Bm25Index.retractBatch(spark, idx, retract, 1L, maxTermDf = 2L,
+      retained = Some(remaining))
+    val fresh = bm25Boot(remaining)
+    assert(bm25State(idx) == bm25State(fresh),
+      "retract(batch) must be content-equivalent to a fresh bootstrap")
+    val (t1, d1, g1) = bm25State(idx)
+    assert(t1.exists(r => r._2 == "hot" && r._3 == 1L && r._4 == 1L),
+      "un-tombstoned posting must be restored")
+    assert(!t1.exists(_._3 == -1L), "tombstone must be re-audited away")
+    assert(d1 == Set((1L, 4L), (4L, 3L)))
+    assert(g1 == Set(("g", 2L, 7L)), "stats must decrement exactly")
+    // retrieval equals a one-shot scorer over the remaining corpus
+    val got = Bm25Index.query(spark, idx, Seq("alpha", "hot"), k = 4)
+      .as[(Long, Long, Double)].collect().toSet
+    val oneShot = graft.text.Retrieval.bm25TopK(
+        remaining.withColumn("part", lit(0)), "part", "doc_id", "text",
+        Seq("alpha", "hot"), k = 4)
+      .select(col("rank").cast("long"), col("doc_id"), col("score"))
+      .as[(Long, Long, Double)].collect().toSet
+    assert(got == oneShot)
+  }
+
+  private def retractCrashCase(arm: (() => Unit) => Unit,
+                            reset: () => Unit): Unit = {
+    val keep = mkDocs(Bm25Keep)
+    val retract = mkDocs(Bm25Keep.filter(r => Bm25RetractIds(r._1)))
+    val remaining = mkDocs(Bm25Keep.filterNot(r => Bm25RetractIds(r._1)))
+    val control = bm25Boot(keep)
+    Bm25Index.retractBatch(spark, control, retract, 1L, maxTermDf = 2L,
+      retained = Some(remaining))
+    val ctrl = bm25State(control)
+    val crashed = bm25Boot(keep)
+    val pre = bm25State(crashed)
+    final class InjectedCrash extends RuntimeException("injected")
+    arm(() => throw new InjectedCrash)
+    try {
+      intercept[InjectedCrash] {
+        Bm25Index.retractBatch(spark, crashed, retract, 1L, maxTermDf = 2L,
+          retained = Some(remaining))
+      }
+    } finally reset()
+    assert(bm25State(crashed) == pre,
+      "a crashed retract leaked into the committed snapshot")
+    Bm25Index.retractBatch(spark, crashed, retract, 1L, maxTermDf = 2L,
+      retained = Some(remaining))
+    assert(bm25State(crashed) == ctrl,
+      "post-crash retract replay differs from the uncrashed control")
+  }
+
+  test("Bm25Index.retractBatch: crash BETWEEN index rewrites — readers " +
+    "hold the pre-retract snapshot, replay converges") {
+    retractCrashCase(
+      hook => CrashPoints.arm(Point.Bm25BetweenWrites)(hook),
+      () => CrashPoints.disarm())
+  }
+
+  test("Bm25Index.retractBatch: crash BEFORE the manifest rename — " +
+    "same guarantee") {
+    retractCrashCase(
+      hook => CrashPoints.arm(Point.Bm25Staged)(hook),
+      () => CrashPoints.disarm())
   }
 }

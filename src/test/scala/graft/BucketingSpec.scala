@@ -20,9 +20,7 @@ class BucketingSpec extends AnyFunSuite {
     val sup = Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey")
     val bli = Bucketing.writeBucketed(li, "bkt_li", "l_suppkey", 4, s"$tmp/li")
     val bsup = Bucketing.writeBucketed(sup, "bkt_sup", "s_suppkey", 4, s"$tmp/sup")
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // plan-audit the bare join: bucketing must satisfy the join's
       // distribution requirement with NO Exchange on either side (a
       // downstream re-agg on another key still shuffles, correctly)
@@ -41,10 +39,7 @@ class BucketingSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("n"), sum("l_quantity").as("q"))
         .orderBy("s_nationkey").collect()
       assert(got.sameElements(want))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-      Bucketing.drop(spark, "bkt_li", "bkt_sup")
-    }
+    } finally Bucketing.drop(spark, "bkt_li", "bkt_sup")
   }
 
   test("downstream aggregation on the bucket key also skips its exchange") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
+import graft.obs.QueryProfile
 import graft.similarity.Similarity
 
 class DedupSimilaritySpec extends AnyFunSuite {
@@ -199,38 +200,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // 2 eager-checkpoint jobs (sym, initial labels) + 1 count per round.
     // A single edge converges in exactly 2 rounds → 4 jobs total; a
     // reintroduced per-round convergence join/count would show up here.
-    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val labels = Dedup.connectedComponents(
-        Seq((1L, 2L)).toDF("a", "b"), "a", "b", maxIter = 5)
-      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-        Map(1L -> 1L, 2L -> 1L))
-      // listener delivery is async — wait until the count stops moving
-      var last = -1
-      var waited = 0
-      while (jobs.get() != last && waited < 5000) {
-        last = jobs.get(); Thread.sleep(200); waited += 200
+    SparkTestSession.withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val (_, p) = QueryProfile.of(spark) {
+        val labels = Dedup.connectedComponents(
+          Seq((1L, 2L)).toDF("a", "b"), "a", "b", maxIter = 5)
+        assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+          Map(1L -> 1L, 2L -> 1L))
       }
       // 4 jobs from the CC call + 1 from the assertion collect above
-      assert(jobs.get() == 5,
-        s"expected 2 ckpt + 2 round + 1 collect jobs, got ${jobs.get()}")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+      assert(p.jobs == 5,
+        s"expected 2 ckpt + 2 round + 1 collect jobs, got ${p.jobs}")
     }
   }
 

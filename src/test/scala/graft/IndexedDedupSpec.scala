@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{Dedup, IndexManifest, IndexedDedup, LinearHashIndex}
 import graft.dedup.IndexTxn.Point
+import graft.obs.QueryProfile
 
 /** Pins for the persistent-dedup-index work (VERDICT r10 #1, r11 #1):
   * linear-hash bucket splitting under generational directories,
@@ -118,9 +119,9 @@ class IndexedDedupSpec extends AnyFunSuite {
     val (big, liveBig) = build(8192)
     val keys = Seq("k3", "k77", "k401").toDF("s")
     def probed(ix: LinearHashIndex, live: Set[String]): Long =
-      SparkCounts.recordsRead(spark) {
-        ix.probe(keys, live).where(col("doc_id") >= 0).count(); ()
-      }
+      QueryProfile.of(spark) {
+        ix.probe(keys, live).where(col("doc_id") >= 0).count()
+      }._2.recordsRead
     val rSmall = probed(small, liveSmall)
     val rBig = probed(big, liveBig)
     assert(rBig <= rSmall * 4 + 64,
@@ -392,18 +393,16 @@ class IndexedDedupSpec extends AnyFunSuite {
     val b = mkDocs(Seq(
       9001L -> "w5a w5b w5c w5d w5e w5f w5g w5h", // dup of keep doc 5
       9002L -> "x1 x2 x3 x4 x5 x6 x7 x8"))
-    val rIndexed = SparkCounts.recordsRead(spark) {
+    val rIndexed = QueryProfile.of(spark) {
       val v = IndexedDedup.processBatch(spark, idx, b, 1L, k = 3,
         threshold = 0.3, maxShingleDf = 20)
       v.count()
       org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(v)
-      ()
-    }
-    val rRecompute = SparkCounts.recordsRead(spark) {
+    }._2.recordsRead
+    val rRecompute = QueryProfile.of(spark) {
       Dedup.incrementalDedup(keep, b, "doc_id", "text", k = 3,
         threshold = 0.3, maxShingleDf = 20).count()
-      ()
-    }
+    }._2.recordsRead
     assert(rIndexed * 2 < rRecompute,
       s"indexed path read $rIndexed records vs recompute $rRecompute")
   }

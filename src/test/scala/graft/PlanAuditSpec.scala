@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.QueryProfile
+
 /** Guards the physical plans, not just the results: no accidental
   * cartesian products, and pushdown/pruning actually reaching the scans
   * on representative queries (SURVEY.md "Optimize for scale"). */
@@ -250,9 +252,7 @@ class PlanAuditSpec extends AnyFunSuite {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    SparkTestSession.withConf(confs: _*) {
       val left = spark.range(0, 60000).select(
         when(col("id") < 50000, 0L).otherwise(col("id") % 2000).as("k"),
         col("id").as("v"))
@@ -264,9 +264,6 @@ class PlanAuditSpec extends AnyFunSuite {
       val plan = joined.queryExecution.executedPlan.toString()
       assert(plan.contains("skew=true"),
         "AQE skew-split did not kick in:\n" + plan.take(3000))
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -403,9 +400,9 @@ class PlanAuditSpec extends AnyFunSuite {
       s"KMV lost its partial pass; partials=$kmvPartials")
   }
 
-  private def noopWrite(q: String): SparkCounts.Counts = SparkCounts(spark) {
+  private def noopWrite(q: String): QueryProfile = QueryProfile.of(spark) {
     SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
-  }
+  }._2
 
   test("q71 build+materialize reads `events` once and starts no class-count scan") {
     val events = graft.tables.Tables.events(spark, dir).count()
@@ -415,7 +412,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(c.scanRecords == events,
       s"events scanned ${c.scanRecords} records for $events rows")
     // the label's metadata carries the class count (movement ∈ {0, 1})
-    val scans = c.execSites.filter(_.contains("getNumClasses"))
+    val scans = c.executions.map(_.details).filter(_.contains("getNumClasses"))
     assert(scans.isEmpty, s"class-count scans started at:\n${scans.mkString("\n\n")}")
   }
 
@@ -908,6 +905,31 @@ class PlanAuditSpec extends AnyFunSuite {
         .toArray(Array.empty[String]).zipWithIndex
       if banned.exists(ln.contains)
     } yield s"${f.getName}:${i + 1}: ${ln.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("Spark is listened to in one place: under src/main and src/test " +
+    "only graft/obs/QueryProfile.scala defines or registers a " +
+    "SparkListener or a StreamingQueryListener") {
+    val banned = Seq(
+      """\bnew\s+[\w.]*(SparkListener|StreamingQueryListener)\b""".r,
+      """\bextends\s+[\w.]*(SparkListener|StreamingQueryListener)\b""".r,
+      """\baddSparkListener\(""".r,
+      """\bstreams\.addListener\(""".r)
+    val owner = java.nio.file.Paths.get("src/main/scala/graft/obs/QueryProfile.scala")
+    assert(java.nio.file.Files.isRegularFile(owner), s"missing $owner")
+    import scala.jdk.CollectionConverters._
+    val files = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally s.close()
+    }
+    val offenders = for {
+      f <- files if f != owner
+      (ln, i) <- java.nio.file.Files.readAllLines(f)
+        .toArray(Array.empty[String]).zipWithIndex
+      if banned.exists(_.findFirstIn(ln).isDefined)
+    } yield s"$f:${i + 1}: ${ln.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -33,15 +33,15 @@ class RangeJoinRuleSpec extends AnyFunSuite {
     assert(plan.contains("__bin"), plan.take(3000))
 
     // ground truth with the rule disabled (the quadratic plan)
-    spark.conf.set(graft.plans.BinnedRangeJoinRule.EnabledKey, "false")
-    try {
+    SparkTestSession.withConf(
+        graft.plans.BinnedRangeJoinRule.EnabledKey -> "false") {
       val want = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
       val wplan = want.queryExecution.executedPlan.toString()
       assert(wplan.contains("BroadcastNestedLoopJoin"),
         "control join should be the nested loop:\n" + wplan.take(2000))
       assert(rows.map(_.toString).sorted.toSeq ==
         want.collect().map(_.toString).sorted.toSeq)
-    } finally spark.conf.set(graft.plans.BinnedRangeJoinRule.EnabledKey, "true")
+    }
   }
 
   test("join with an equi conjunct is left alone (range stays a residual)") {
@@ -58,9 +58,7 @@ class RangeJoinRuleSpec extends AnyFunSuite {
 
   test("malformed binWidth disables the rewrite, never fails other queries") {
     val key = graft.plans.BinnedRangeJoinRule.WidthKey
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "not-a-number")
-    try {
+    SparkTestSession.withConf(key -> "not-a-number") {
       // the resident rule must not throw while optimizing ANY query
       assert(spark.range(0, 10).count() == 10)
       // the range join still runs — unrewritten (falls back to Spark's plan)
@@ -70,9 +68,6 @@ class RangeJoinRuleSpec extends AnyFunSuite {
       assert(!plan.contains("__bin"), "rewrite should be disabled:\n" + plan.take(2000))
       spark.conf.set(key, "1000")
       assert(withRule == j.count(), "semantics must not depend on the conf")
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -3,34 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.QueryProfile
+
 /** Round-10 pins: loop-shape discipline (q252 HITS materialize-and-
   * evict) and the new batched-BPE / sampled-blocking / char-exact-span
   * / streaming-dedup queries. */
 class Round10OpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  /** Counts Spark jobs started while `body` runs (async listener bus —
-    * waits until the count is stable before returning). */
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1
-      var waited = 0
-      while (jobs.get() != last && waited < 5000) {
-        last = jobs.get(); Thread.sleep(200); waited += 200
-      }
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   // ---------------------------------------------------- q252 job shape
   test("q252: HITS derives the edge frame ONCE (job count pinned; " +
@@ -55,19 +35,13 @@ class Round10OpsSpec extends AnyFunSuite {
     Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 10L))
       .toDF("l_orderkey", "l_suppkey")
       .coalesce(1).write.parquet(s"$tmp/lineitem.parquet")
-    val confs = Seq("spark.sql.adaptive.enabled" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val n = countJobs {
+    SparkTestSession.withConf("spark.sql.adaptive.enabled" -> "false") {
+      val n = QueryProfile.of(spark) {
         val rows = SparkEntry.queries("q252_hits")(spark, tmp).collect()
         assert(rows.length == 5) // 2 hubs + 3 authorities, bounded top-10
-      }
+      }._2.jobs
       assert(n == 30,
         s"expected 1 edge-broadcast + 3 ckpt + 6 half-steps x 4 + 2 collect = 30 jobs, got $n")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -555,22 +529,16 @@ class Round10OpsSpec extends AnyFunSuite {
     // rounds-shaped: <= 5*5 + 5 = 30 regardless of how many merges the
     // batches carry — on sf0.001 that is >= 16 merges, i.e. strictly
     // fewer jobs than merges where the sequential shape needs 2x.
-    val confs = Seq("spark.sql.adaptive.enabled" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      var merges = 0L
-      val n = countJobs {
-        merges = SparkEntry.queries("q271_bpe_batched_train")(
+    SparkTestSession.withConf("spark.sql.adaptive.enabled" -> "false") {
+      val (merges, p) = QueryProfile.of(spark) {
+        SparkEntry.queries("q271_bpe_batched_train")(
           spark, "/root/testdata/sf0.001").count()
       }
+      val n = p.jobs
       assert(merges >= 16L, s"expected >= 16 merges, got $merges")
       assert(n <= 30, s"job count must be rounds-shaped (<= 30), got $n")
       assert(n < merges, s"jobs ($n) must undercut merges ($merges) — " +
         "the sequential shape can't")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -3,32 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.QueryProfile
+
 /** Round-11 pins: the q286 production-BPE trainer (wave selection,
   * single-pass batch apply, one-job rounds, lemma-derived totals) and
   * the round's other breadth queries. */
 class Round11OpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1
-      var waited = 0
-      while (jobs.get() != last && waited < 5000) {
-        last = jobs.get(); Thread.sleep(200); waited += 200
-      }
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   private def stageDocs(rows: Seq[(Long, String)]): String = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_r11_").toString
@@ -137,17 +119,14 @@ class Round11OpsSpec extends AnyFunSuite {
       waves = graft.queries.EngineQueries.BpeProdSubRounds)
     assert(expect.length >= 128,
       s"fixture saturates below the target: ${expect.length}")
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false")
-    try {
+    SparkTestSession.withConf("spark.sql.adaptive.enabled" -> "false") {
       // the trainer runs its loop eagerly and returns a driver-local
       // frame; materializing THAT is sink cost, not trainer cost — keep
       // it outside the counted window
-      var res: org.apache.spark.sql.DataFrame = null
-      val jobs = countJobs {
-        res = SparkEntry.queries("q286_bpe_production_train")(spark, dir)
+      val (res, p) = QueryProfile.of(spark) {
+        SparkEntry.queries("q286_bpe_production_train")(spark, dir)
       }
+      val jobs = p.jobs
       val got = res.as[(Long, Long, Long, Long, String, String, Long, Long)]
         .collect().toSeq
       assert(got == expect,
@@ -161,7 +140,7 @@ class Round11OpsSpec extends AnyFunSuite {
         s"round cost crept past one job per census: $jobs jobs, $rounds rounds")
       assert(jobs * 4 < merges,
         s"jobs/merge >= 0.25: $jobs jobs for $merges merges")
-    } finally spark.conf.set(aqeKey, aqePrev)
+    }
   }
 
   test("q286: self-pair runs (l==r) — census counts floor(run/2), and " +

@@ -6,14 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{Dedup, IndexManifest, IndexedDedup}
 import graft.dedup.IndexTxn.Point
+import graft.obs.QueryProfile
 import graft.text.Bm25Index
 
 /** Round-13 pins: RETRACTION batches for the persisted index layer
   * (VERDICT r12 #1 — the equivalence standard is an index bootstrapped
   * from scratch on the remaining corpus, including the df-cap
-  * tombstone RE-AUDIT), crash-injection through both retract paths,
-  * the query-TABLE BM25 entry point (#3), and configurable manifest
-  * retention (#5). */
+  * tombstone RE-AUDIT), crash-injection through the dedup retract path
+  * (the BM25 retract pins live in Bm25IndexSpec), the query-TABLE BM25
+  * entry point (#3), and configurable manifest retention (#5). */
 class Round13OpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -157,14 +158,7 @@ class Round13OpsSpec extends AnyFunSuite {
       () => CrashPoints.disarm())
   }
 
-  // ------------------------------------------------ Bm25Index retract
-
-  /** 'hot' in docs 1,2,3: df 3 > cap 2 — tombstoned at bootstrap;
-    * retracting 2,3 re-audits it back to a live posting list. */
-  private val Bm25Keep = Seq(
-    1L -> "hot alpha p q", 2L -> "hot r s", 3L -> "hot t u v",
-    4L -> "alpha w x")
-  private val Bm25RetractIds = Set(2L, 3L)
+  // ------------------------------------------------ Bm25Index fixtures
 
   private def bm25Boot(docs: DataFrame): Bm25Index.Indexes =
     Bm25Index.bootstrap(spark, docs, maxTermDf = 2L, tmp("r13b_t_"),
@@ -178,80 +172,6 @@ class Round13OpsSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toSet,
       idx.stats.allRows(st.buckets(idx.statsName))
         .as[(String, Long, Long)].collect().toSet)
-  }
-
-  test("Bm25Index.retractBatch == bootstrap on the remaining corpus: " +
-    "postings/doc rows gone, stats decremented exactly, touched " +
-    "tombstones re-audited") {
-    val keep = mkDocs(Bm25Keep)
-    val retract = mkDocs(Bm25Keep.filter(r => Bm25RetractIds(r._1)))
-    val remaining = mkDocs(Bm25Keep.filterNot(r => Bm25RetractIds(r._1)))
-    val idx = bm25Boot(keep)
-    val (t0, _, g0) = bm25State(idx)
-    assert(t0.exists(r => r._2 == "hot" && r._3 == -1L),
-      "fixture must tombstone 'hot'")
-    assert(g0 == Set(("g", 4L, 14L)), g0.toString)
-    Bm25Index.retractBatch(spark, idx, retract, 1L, maxTermDf = 2L,
-      retained = Some(remaining))
-    val fresh = bm25Boot(remaining)
-    assert(bm25State(idx) == bm25State(fresh),
-      "retract(batch) must be content-equivalent to a fresh bootstrap")
-    val (t1, d1, g1) = bm25State(idx)
-    assert(t1.exists(r => r._2 == "hot" && r._3 == 1L && r._4 == 1L),
-      "un-tombstoned posting must be restored")
-    assert(!t1.exists(_._3 == -1L), "tombstone must be re-audited away")
-    assert(d1 == Set((1L, 4L), (4L, 3L)))
-    assert(g1 == Set(("g", 2L, 7L)), "stats must decrement exactly")
-    // retrieval equals a one-shot scorer over the remaining corpus
-    val got = Bm25Index.query(spark, idx, Seq("alpha", "hot"), k = 4)
-      .as[(Long, Long, Double)].collect().toSet
-    val oneShot = graft.text.Retrieval.bm25TopK(
-        remaining.withColumn("part", lit(0)), "part", "doc_id", "text",
-        Seq("alpha", "hot"), k = 4)
-      .select(col("rank").cast("long"), col("doc_id"), col("score"))
-      .as[(Long, Long, Double)].collect().toSet
-    assert(got == oneShot)
-  }
-
-  private def bm25CrashCase(arm: (() => Unit) => Unit,
-                            reset: () => Unit): Unit = {
-    val keep = mkDocs(Bm25Keep)
-    val retract = mkDocs(Bm25Keep.filter(r => Bm25RetractIds(r._1)))
-    val remaining = mkDocs(Bm25Keep.filterNot(r => Bm25RetractIds(r._1)))
-    val control = bm25Boot(keep)
-    Bm25Index.retractBatch(spark, control, retract, 1L, maxTermDf = 2L,
-      retained = Some(remaining))
-    val ctrl = bm25State(control)
-    val crashed = bm25Boot(keep)
-    val pre = bm25State(crashed)
-    final class InjectedCrash extends RuntimeException("injected")
-    arm(() => throw new InjectedCrash)
-    try {
-      intercept[InjectedCrash] {
-        Bm25Index.retractBatch(spark, crashed, retract, 1L, maxTermDf = 2L,
-          retained = Some(remaining))
-      }
-    } finally reset()
-    assert(bm25State(crashed) == pre,
-      "a crashed retract leaked into the committed snapshot")
-    Bm25Index.retractBatch(spark, crashed, retract, 1L, maxTermDf = 2L,
-      retained = Some(remaining))
-    assert(bm25State(crashed) == ctrl,
-      "post-crash retract replay differs from the uncrashed control")
-  }
-
-  test("Bm25Index.retractBatch: crash BETWEEN index rewrites — readers " +
-    "hold the pre-retract snapshot, replay converges") {
-    bm25CrashCase(
-      hook => CrashPoints.arm(Point.Bm25BetweenWrites)(hook),
-      () => CrashPoints.disarm())
-  }
-
-  test("Bm25Index.retractBatch: crash BEFORE the manifest rename — " +
-    "same guarantee") {
-    bm25CrashCase(
-      hook => CrashPoints.arm(Point.Bm25Staged)(hook),
-      () => CrashPoints.disarm())
   }
 
   // ------------------------------------------------ queryTable
@@ -290,9 +210,9 @@ class Round13OpsSpec extends AnyFunSuite {
         mkDocs((from until from + n).map(i =>
           (i.toLong, s"u${i}a u${i}b u${i}c u${i}d"))),
         seq, maxTermDf = 2L)
-    def run(): Long = SparkCounts.recordsRead(spark) {
-      Bm25Index.queryTable(spark, idx, qdf, k = 5).count(); ()
-    }
+    def run(): Long = QueryProfile.of(spark) {
+      Bm25Index.queryTable(spark, idx, qdf, k = 5).count()
+    }._2.recordsRead
     grow(1001, 600, 1L)
     val r1 = run()
     grow(10001, 600, 2L)

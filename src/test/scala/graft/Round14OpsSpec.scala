@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{IndexManifest, IndexedDedup}
 import graft.dedup.IndexTxn.Point
+import graft.obs.QueryProfile
 import graft.text.Bm25Index
 
 /** Round-14 pins: manifest gc ordered AFTER the commit rename, the
@@ -419,13 +420,13 @@ class Round14OpsSpec extends AnyFunSuite {
     "the same store") {
     import graft.curation.CuratedIndexes
     val idx = curatedAnnBoot()
-    val ingest = SparkCounts(spark) {
+    val (_, ingest) = QueryProfile.of(spark) {
       val v = CuratedIndexes.processBatch(spark, idx,
         mkDocs(Seq(22L -> "q r s t")), 1L, k = 2, threshold = 0.3,
         maxShingleDf = 4, maxTermDf = 64L, annVecs = Some(curVecs(Seq(22L))))
       org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(v)
     }
-    val takedown = SparkCounts(spark) {
+    val (_, takedown) = QueryProfile.of(spark) {
       CuratedIndexes.retractBatch(spark, idx, mkDocs(Seq(2L -> "e f g h")),
         2L, k = 2, maxShingleDf = 4, maxTermDf = 64L,
         retained = Some(mkDocs(CurKeep.filterNot(_._1 == 2L)

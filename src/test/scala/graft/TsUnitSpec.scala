@@ -31,12 +31,9 @@ class TsUnitSpec extends AnyFunSuite {
     // pyarrow timestamp[us] = INT64; Spark's default writer emits INT96,
     // so pin the output type for a faithful emulation)
     val usDir = Files.createTempDirectory("graft_ts_us_").toString
-    val prevOut = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try base.write.mode("overwrite").parquet(usDir)
-    finally prevOut match {
-      case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
-      case None => spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    SparkTestSession.withConf(
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      base.write.mode("overwrite").parquet(usDir)
     }
 
     // encoding 2: raw int64 ns since epoch (what a TIMESTAMP(NANOS)
