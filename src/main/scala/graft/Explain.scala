@@ -1,11 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = LocalSpark.session("8")
     spark.sparkContext.setLogLevel("ERROR")
     // plans are size-estimate-sensitive (a join that auto-broadcasts at
     // sf0.01 plans sort-merge at sf0.1) — capture at the SF under study

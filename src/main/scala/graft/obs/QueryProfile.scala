@@ -6,15 +6,15 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** What a block of Spark work did, read off the listener bus: its SQL
   * executions, jobs, stages and tasks, the wall its jobs cover against
   * the driver gap between them, task time and bytes, and the progress
   * of the streaming micro-batches it ran. Only work the block started
   * counts: stages and tasks of its own jobs, batches of the streaming
-  * queries it started. The one place in the engine that listens to
-  * Spark.
+  * queries it started, in its session or in any other. The one place
+  * in the engine that listens to Spark.
   *
   * @param wallMs          wall time of the block
   * @param executions      SQL executions started by the block, by id
@@ -56,23 +56,19 @@ object QueryProfile {
                              jobs: Int, jobWallMs: Long)
 
   /** Runs `body` and profiles it. The listener bus is drained before the
-    * listeners attach, so earlier work is not counted, and again after
+    * listener attaches, so earlier work is not counted, and again after
     * `body`, so every event of its work has arrived. */
   def of[A](spark: SparkSession)(body: => A): (A, QueryProfile) = {
     Bridge.drainListenerBus(spark)
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
-    spark.streams.addListener(rec.streams)
     try {
       val t0 = System.nanoTime()
       val a = body
       val wallMs = (System.nanoTime() - t0) / 1e6
       Bridge.drainListenerBus(spark)
       (a, rec.profile(wallMs))
-    } finally {
-      spark.sparkContext.removeSparkListener(rec)
-      spark.streams.removeListener(rec.streams)
-    }
+    } finally spark.sparkContext.removeSparkListener(rec)
   }
 
   private final class Recorder extends SparkListener {
@@ -94,6 +90,14 @@ object QueryProfile {
           s.description.linesIterator.nextOption().getOrElse(""), s.details,
           "(?<!Reused)Exchange ".r.findAllIn(plan).size,
           "BroadcastExchange".r.findAllIn(plan).size, jobs = 0, jobWallMs = 0L)
+      }
+      // every session's streaming events reach the shared bus too, so
+      // queries started in a child session count as well
+      case s: StreamingQueryListener.QueryStartedEvent => synchronized {
+        ownRuns += s.runId; ()
+      }
+      case p: StreamingQueryListener.QueryProgressEvent => synchronized {
+        progress(p.progress)
       }
       case _ => ()
     }
@@ -144,30 +148,19 @@ object QueryProfile {
       }
     }
 
-    val streams: StreamingQueryListener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit =
-        Recorder.this.synchronized { ownRuns += e.runId; () }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        Recorder.this.synchronized {
-          val p = e.progress
-          if (ownRuns(p.runId)) {
-            nBatches += 1
-            p.durationMs.forEach((k, v) => add(durations, k, v))
-            p.stateOperators.foreach { so =>
-              val op = so.operatorName
-              add(state, s"$op.allUpdatesTimeMs", so.allUpdatesTimeMs)
-              add(state, s"$op.commitTimeMs", so.commitTimeMs)
-              add(state, s"$op.allRemovalsTimeMs", so.allRemovalsTimeMs)
-              state(s"$op.numRowsTotal") =
-                state.getOrElse(s"$op.numRowsTotal", 0L).max(so.numRowsTotal)
-            }
-          }
+    private def progress(p: StreamingQueryProgress): Unit =
+      if (ownRuns(p.runId)) {
+        nBatches += 1
+        p.durationMs.forEach((k, v) => add(durations, k, v))
+        p.stateOperators.foreach { so =>
+          val op = so.operatorName
+          add(state, s"$op.allUpdatesTimeMs", so.allUpdatesTimeMs)
+          add(state, s"$op.commitTimeMs", so.commitTimeMs)
+          add(state, s"$op.allRemovalsTimeMs", so.allRemovalsTimeMs)
+          state(s"$op.numRowsTotal") =
+            state.getOrElse(s"$op.numRowsTotal", 0L).max(so.numRowsTotal)
         }
-    }
+      }
 
     private def add(m: mutable.Map[String, Long], k: String, v: Long): Unit =
       m(k) = m.getOrElse(k, 0L) + v

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Parquet layout maintenance — the small-files problem. A streaming
   * ingest (q64/q103's sinks, the reference's per-batch inserts) leaves
@@ -19,21 +20,18 @@ import org.apache.spark.sql.functions._
 object Layout {
 
   /** Rewrite `df` into `outDir` as size-targeted parquet files: one
-    * AQE-rebalanced shuffle, `advisoryBytes` per output partition. */
-  def compact(df: DataFrame, outDir: String, advisoryBytes: Long): Unit = {
-    val spark = df.sparkSession
-    val keys = Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisoryBytes.toString)
-    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try df.hint("rebalance").write.mode("overwrite").parquet(outDir)
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    * AQE-rebalanced shuffle, `advisoryBytes` per output partition. The
+    * write runs in a child session that holds the AQE settings, so the
+    * caller's session conf is never written. */
+  def compact(df: DataFrame, outDir: String, advisoryBytes: Long): Unit =
+    graft.LocalSpark.withChildSession(df.sparkSession,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+          advisoryBytes.toString) { child =>
+      Bridge.rebind(df, child).hint("rebalance")
+        .write.mode("overwrite").parquet(outDir)
     }
-  }
 
   /** Scale a non-negative-range integer column onto the z-grid:
     * `floor((c - min) * (2^bits - 1) / (max - min))`. The multiply and

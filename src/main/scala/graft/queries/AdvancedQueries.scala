@@ -17,10 +17,7 @@ object AdvancedQueries extends QueryPack {
     * on both sides (signup↔purchase within 30 minutes) — the streaming
     * twin of q31, checked against the same batch SQL. */
   private def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def src = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    def src = Tables.eventsStream(spark, dir)
     val signups = src.where(col("event_type") === "signup")
       .select(col("user_id"), col("ts").as("s_ts"), col("event_id").as("signup_id"))
       .withWatermark("s_ts", "1 hour")
@@ -50,10 +47,7 @@ object AdvancedQueries extends QueryPack {
     * collect), so the emission boundary's exact strictness never reaches
     * the compare. */
   private def streamStreamLeftOuter(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def src = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    def src = Tables.eventsStream(spark, dir)
     val signups = src.where(col("event_type") === "signup")
       .select(col("user_id"), col("ts").as("s_ts"), col("event_id").as("signup_id"))
       .withWatermark("s_ts", "1 hour")
@@ -90,10 +84,7 @@ object AdvancedQueries extends QueryPack {
     * the batch FULL JOIN twin apply the identical gate, so the
     * emission boundary's strictness never reaches the compare. */
   private def streamStreamFullOuter(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def src = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    def src = Tables.eventsStream(spark, dir)
     val signups = src.where(col("event_type") === "signup")
       .select(col("user_id").as("s_user"), col("ts").as("s_ts"),
         col("event_id").as("signup_id"))

@@ -184,25 +184,18 @@ object ExtendedQueries extends QueryPack {
         (1 to 5).map(i => try_element_at(col("top5"), lit(i)).as(s"top$i")): _*)
       .orderBy("event_type")
 
-  /** Conf bracket for [[aqeSkewJoin]]/its plan audit: force the
-    * sort-merge path (both broadcast thresholds off) and lower the AQE
-    * skew thresholds so the fixture-scale skew actually trips the
-    * splitter; always restores the session's previous values. */
-  private[graft] def withSkewSplitConfigs[T](spark: SparkSession)(body: => T): T = {
-    val wanted = Seq(
+  /** Runs `body` on a child session for [[aqeSkewJoin]] and its plan
+    * audit: it forces the sort-merge path (both broadcast thresholds
+    * off) and lowers the AQE skew thresholds so the fixture-scale skew
+    * actually trips the splitter. The caller's session is untouched. */
+  private[graft] def withSkewSplitConfigs[T](spark: SparkSession)(
+      body: SparkSession => T): T =
+    graft.LocalSpark.withChildSession(spark,
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = wanted.map { case (k, _) => k -> spark.conf.getOption(k) }
-    wanted.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** The skewed join itself (separate from [[aqeSkewJoin]] so the plan
     * audit can execute it under [[withSkewSplitConfigs]] and inspect the
@@ -243,15 +236,15 @@ object ExtendedQueries extends QueryPack {
     * into advisory-sized sub-partitions (duplicating the matching dim
     * rows) so the straggler disappears WITHOUT changing the query. At
     * 100 TB this is the difference between one task processing 10 TB
-    * and 300 tasks processing 30 GB each. Executed inside the conf
-    * bracket (a temp-parquet materialization pins execution to the
-    * bracket; the tiny readback is what the driver hashes); the plan
-    * audit asserts `skew=true` on the final SMJ. The result is
+    * and 300 tasks processing 30 GB each. Executed in the skew-split
+    * child session (a temp-parquet materialization pins execution to
+    * the child; the tiny readback is what the oracle gate hashes); the
+    * plan audit asserts `skew=true` on the final SMJ. The result is
     * split-invariant, so the oracle is the plain join replay. */
   private def aqeSkewJoin(spark: SparkSession, dir: String): DataFrame = {
     val out = MlQueries.tempDirDeletedOnExit("graft_skew_")
-    withSkewSplitConfigs(spark) {
-      skewJoinFrame(spark, dir).write.mode("overwrite").parquet(out)
+    withSkewSplitConfigs(spark) { child =>
+      skewJoinFrame(child, dir).write.mode("overwrite").parquet(out)
     }
     spark.read.parquet(out).orderBy("cb")
   }

@@ -84,7 +84,6 @@ object MlQueries extends QueryPack {
     * parquet sink — the reference's change-stream → predict → insert loop
     * (`predict_from_vm4.py:44-65`) with durable sinks. */
   private def streamingInference(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val allBars = TrendModel.dailyBars(Tables.events(spark, dir)).coalesce(8).cache()
     try {
       // Holdout: the max symbol stays untrained (so the P8 guard has
@@ -96,9 +95,7 @@ object MlQueries extends QueryPack {
       val models = TrendModel.trainPerSymbol(
         allBars.join(broadcast(holdout), Seq("symbol"), "left_anti"),
         numTrees = 10)
-      val raw = spark.readStream.schema(Tables.eventsRawSchema)
-        .parquet(s"$dir/events*.parquet")
-        .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+      val raw = Tables.eventsStream(spark, dir)
       val out = tempDirDeletedOnExit("graft_infer_")
       val q = raw.writeStream
         .option("checkpointLocation", tempDirDeletedOnExit("graft_infer_ckpt_"))

@@ -82,9 +82,7 @@ object PipelineQueries extends QueryPack {
     * broadcast customer dim (no shuffle of the stream, no state), windowless
     * running aggregate to a memory sink. */
   private def streamStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
+    val raw = Tables.eventsStream(spark, dir)
     val dim = Tables.customer(spark, dir).select("c_custkey", "c_mktsegment")
     val agg = raw.join(broadcast(dim), raw("user_id") === dim("c_custkey"))
       .groupBy("c_mktsegment")

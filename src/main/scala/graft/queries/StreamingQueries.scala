@@ -4,7 +4,10 @@ import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.LocalSpark
 import graft.streaming.Pipelines
 import graft.tables.Tables
 
@@ -15,31 +18,36 @@ import graft.tables.Tables
   * table, so the driver's oracle checks genuine streaming output. */
 object StreamingQueries extends QueryPack {
 
-  /** Stateful streaming ops size their shuffle by STATE volume, not scan
+  /** Runs `df`'s streaming query to the end of its input and stops it.
+    * Stateful streaming ops size their shuffle by STATE volume, not scan
     * width: every shuffle partition is a state-store instance with fixed
     * per-micro-batch overhead (load/commit/snapshot), so over-partitioning
-    * dominates cost. Scope a state-sized partition count to the drain and
-    * restore the session setting after. */
-  private[queries] def withStatePartitions[A](spark: org.apache.spark.sql.SparkSession,
-                                              n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Drain a streaming frame into a uniquely-named memory sink and return
-    * the sink table (shared by every driver-visible streaming query). */
-  private[queries] def runToMemorySink(df: DataFrame, prefix: String,
-                                       mode: String = "complete"): DataFrame = {
-    val spark = df.sparkSession
-    val name = prefix + "_" + UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, 8) {
-      val q = df.writeStream.outputMode(mode)
-        .format("memory").queryName(name).start()
+    * dominates cost. The query therefore runs in a child session with 8
+    * shuffle partitions, plus `confs`: `start` gets `df` re-bound to the
+    * child. The caller's session conf is never written. Returns the
+    * child, where a memory sink registers its table. */
+  private[queries] def drain(df: DataFrame,
+                             confs: Seq[(String, String)] = Nil)(
+      start: DataFrame => StreamingQuery): SparkSession =
+    LocalSpark.withChildSession(df.sparkSession,
+        ("spark.sql.shuffle.partitions" -> "8") +: confs: _*) { child =>
+      val q = start(Bridge.rebind(df, child))
       try q.processAllAvailable() finally q.stop()
+      child
     }
-    spark.table(name)
+
+  /** Drain a streaming frame into a uniquely-named memory sink (see
+    * [[drain]]) and return the sink table as a frame of the caller's
+    * session, so what reads it plans under the caller's conf (shared by
+    * every streaming query the oracle gate checks). */
+  private[queries] def runToMemorySink(df: DataFrame, prefix: String,
+                                       mode: String = "complete",
+                                       confs: Seq[(String, String)] = Nil)
+      : DataFrame = {
+    val name = prefix + "_" + UUID.randomUUID().toString.replace("-", "")
+    val child = drain(df, confs)(_.writeStream.outputMode(mode)
+      .format("memory").queryName(name).start())
+    Bridge.rebind(child.table(name), df.sparkSession)
   }
 
   /** E1 (F2+F3): project to the wire schema, encode to_json, parse back
@@ -61,10 +69,7 @@ object StreamingQueries extends QueryPack {
 
   /** Streaming events file source → hourly bars per event type. */
   private def streamingBars(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    val raw = Tables.eventsStream(spark, dir)
     val bars = raw
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(min(col("value")).as("low"), max(col("value")).as("high"),
@@ -82,11 +87,8 @@ object StreamingQueries extends QueryPack {
   /** The q45 streaming frame, exposed so StreamingSpec can assert the
     * plan carries an event-time watermark (bounded dedup state). */
   private[graft] def dedupStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def src = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
+    def src = Tables.eventsStream(spark, dir)
     val dup = src.unionByName(src)
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
     Pipelines.watermarkDedup(dup, ts = "ts", key = "event_id")
       .groupBy("event_type").agg(count(lit(1)).as("n"))
   }
@@ -100,10 +102,7 @@ object StreamingQueries extends QueryPack {
     * (users × sessions) — bounded like q44's bars; the production path
     * for unbounded retention is watermark + append. */
   private def streamingSessions(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    val raw = Tables.eventsStream(spark, dir)
     val sess = raw
       .groupBy(col("user_id"), session_window(col("ts"), "5 minutes"))
       .agg(count(lit(1)).as("n_events"))
@@ -126,10 +125,7 @@ object StreamingQueries extends QueryPack {
     * Exposed `private[graft]` so StreamingSpec can assert the plan carries
     * the watermark and that emission/eviction happens mid-stream. */
   private[graft] def sessionsAppendStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    val raw = Tables.eventsStream(spark, dir)
     raw.withWatermark("ts", "30 seconds")
       .groupBy(col("user_id"), session_window(col("ts"), "5 minutes"))
       .agg(count(lit(1)).as("n_events"))
@@ -160,10 +156,7 @@ object StreamingQueries extends QueryPack {
     * discipline. Exposed `private[graft]` so StreamingSpec can assert
     * the plan carries BOTH stateful operators and the watermark. */
   private[graft] def chainedWindowStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    val raw = Tables.eventsStream(spark, dir)
       .withColumn("vc", round(col("value") * 100).cast("long"))
     val w15 = raw.withWatermark("ts", "30 seconds")
       .groupBy(window(col("ts"), "15 minutes"), col("event_type"))
@@ -208,10 +201,7 @@ object StreamingQueries extends QueryPack {
     * can assert all three stateful operators and both watermarks from
     * one analyzed plan. */
   private[graft] def windowJoinStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def src = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    def src = Tables.eventsStream(spark, dir)
       .withColumn("vc", round(col("value") * 100).cast("long"))
     def side(t: String, pfx: String) = src.where(col("event_type") === t)
       .withWatermark("ts", "30 seconds")
@@ -258,10 +248,7 @@ object StreamingQueries extends QueryPack {
     * hour-floor group-by). Exposed `private[graft]` for the plan
     * spec. */
   private[graft] def joinAggStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def src = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    def src = Tables.eventsStream(spark, dir)
     val signups = src.where(col("event_type") === "signup")
       .select(col("user_id"), col("ts").as("s_ts"))
       .withWatermark("s_ts", "1 hour")
@@ -309,10 +296,7 @@ object StreamingQueries extends QueryPack {
     * epoch, so they are `trunc_hour(ts)` and `trunc_hour(ts) − 1 h`);
     * money stays in integer cents. */
   private def streamingSlidingWindows(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    val raw = Tables.eventsStream(spark, dir)
       .withColumn("vc", round(col("value") * 100).cast("long"))
     val windows = raw
       .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
@@ -332,18 +316,15 @@ object StreamingQueries extends QueryPack {
     * Cross-batch merge semantics are additionally pinned by
     * StreamingSpec's two-batch MemoryStream test. */
   private def streamingCdcApply(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def src = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    def src = Tables.eventsStream(spark, dir)
       .select("event_id", "ts", "event_type", "value")
     val base = src.withColumn("rev", lit(0))
     val updates = src.where(col("event_id") % 10 === 0)
       .withColumn("value", col("value") * 2)
       .withColumn("rev", lit(1))
     val out = MlQueries.tempDirDeletedOnExit("graft_cdc_")
-    withStatePartitions(spark, 8) {
-      val q = base.unionByName(updates).writeStream
+    drain(base.unionByName(updates)) { s =>
+      s.writeStream
         .option("checkpointLocation",
           MlQueries.tempDirDeletedOnExit("graft_cdc_ckpt_"))
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -351,7 +332,6 @@ object StreamingQueries extends QueryPack {
             version = "rev", tiebreak = "event_id", nBuckets = 16)
         }
         .start()
-      try q.processAllAvailable() finally q.stop()
     }
     spark.read.parquet(out)
       .select(col("event_id"), col("event_type"),
@@ -368,10 +348,7 @@ object StreamingQueries extends QueryPack {
     * from batch SQL plus a tolerance boolean (rsd 0.05 → 10% bound),
     * same pattern as q68/q69/q80. */
   private def streamingWindowDistinct(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
-      .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, Tables.eventsGlob(dir))))
+    val raw = Tables.eventsStream(spark, dir)
     val agg = raw
       .groupBy(window(col("ts"), "1 day"))
       .agg(approx_count_distinct(col("user_id")).as("approx_users"),
@@ -467,11 +444,10 @@ object StreamingQueries extends QueryPack {
       .parquet(watch)
     val filtered = Pipelines.highWatermarkFilterTws(spark, stream,
       "user_id", "ts_us", ttlMs = 0L)
-    // transformWithState runs only on the RocksDB state store; scope the
-    // provider to this drain and restore the session default after
-    val sunk = Pipelines.withRocksDBProvider(spark) {
-      runToMemorySink(filtered, "tws", mode = "append")
-    }
+    // transformWithState runs only on the RocksDB state store, which
+    // the drain's child session selects
+    val sunk = runToMemorySink(filtered, "tws", "append",
+      Seq(Pipelines.RocksDBProvider))
     sunk
       .groupBy(col("user_id").cast("long").as("user_id"))
       .agg(count(lit(1)).as("n_emitted"),
@@ -499,9 +475,8 @@ object StreamingQueries extends QueryPack {
       .option("maxFilesPerTrigger", 1)
       .parquet(watch)
     val moments = Pipelines.streamingMoments(spark, stream, "user_id", "cents")
-    val sunk = Pipelines.withRocksDBProvider(spark) {
-      runToMemorySink(moments, "moments", mode = "append")
-    }
+    val sunk = runToMemorySink(moments, "moments", "append",
+      Seq(Pipelines.RocksDBProvider))
     val f = col("final")
     sunk
       .groupBy(col("user_id").cast("long").as("user_id"))
@@ -577,9 +552,8 @@ object StreamingQueries extends QueryPack {
       .parquet(watch)
     val flagged = Pipelines.streamingAnomaly(spark, stream,
       key = "user_id", ord = "event_id", cents = "cents", n = 50, k = 3)
-    Pipelines.withRocksDBProvider(spark) {
-      runToMemorySink(flagged, "sanom", mode = "append")
-    }
+    runToMemorySink(flagged, "sanom", "append",
+      Seq(Pipelines.RocksDBProvider))
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id"), col("cents"))
       .orderBy("user_id", "event_id")
@@ -610,9 +584,8 @@ object StreamingQueries extends QueryPack {
     val flagged = Pipelines.streamingCusum(spark, stream,
       key = "user_id", ord = "event_id", cents = "cents",
       warm = 30, kAllow = 10L, h = 150L)
-    Pipelines.withRocksDBProvider(spark) {
-      runToMemorySink(flagged, "scusum", mode = "append")
-    }
+    runToMemorySink(flagged, "scusum", "append",
+      Seq(Pipelines.RocksDBProvider))
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id"), col("cents"), col("up_alarm"), col("dn_alarm"))
       .orderBy("user_id", "event_id")
@@ -658,8 +631,8 @@ object StreamingQueries extends QueryPack {
       .schema("doc_id BIGINT, text STRING")
       .option("maxFilesPerTrigger", 1)
       .parquet(watch)
-    withStatePartitions(spark, 8) {
-      val q = stream.writeStream
+    drain(stream) { s =>
+      s.writeStream
         .option("checkpointLocation",
           MlQueries.tempDirDeletedOnExit("graft_sdedup_ckpt_"))
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -679,7 +652,6 @@ object StreamingQueries extends QueryPack {
           ()
         }
         .start()
-      try q.processAllAvailable() finally q.stop()
     }
     spark.read.parquet(outDir) // drops the merge's __bkt via the select
       .select(col("batch_seq"), col("doc_id"), col("status"), col("rep_id"))
@@ -729,8 +701,8 @@ object StreamingQueries extends QueryPack {
       .schema("doc_id BIGINT, text STRING")
       .option("maxFilesPerTrigger", 1)
       .parquet(watch)
-    withStatePartitions(spark, 8) {
-      val q = stream.writeStream
+    drain(stream) { s =>
+      s.writeStream
         .option("checkpointLocation",
           MlQueries.tempDirDeletedOnExit("graft_xdedup_ckpt_"))
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -750,7 +722,6 @@ object StreamingQueries extends QueryPack {
           ()
         }
         .start()
-      try q.processAllAvailable() finally q.stop()
     }
     spark.read.parquet(outDir)
       .select(col("batch_seq"), col("doc_id"), col("status"), col("rep_id"))
@@ -916,8 +887,8 @@ object StreamingQueries extends QueryPack {
       .schema("doc_id BIGINT, text STRING")
       .option("maxFilesPerTrigger", 1)
       .parquet(watch)
-    withStatePartitions(spark, 8) {
-      val q = stream.writeStream
+    drain(stream) { s =>
+      s.writeStream
         .option("checkpointLocation",
           MlQueries.tempDirDeletedOnExit("graft_bm25_ckpt_"))
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -926,9 +897,8 @@ object StreamingQueries extends QueryPack {
           ()
         }
         .start()
-      try q.processAllAvailable() finally q.stop()
-      Bm25Index.query(spark, idx, Bm25Terms, k = 10).orderBy("rank")
     }
+    Bm25Index.query(spark, idx, Bm25Terms, k = 10).orderBy("rank")
   }
 
   private[queries] val Bm25Terms =
@@ -1068,8 +1038,8 @@ object StreamingQueries extends QueryPack {
       .schema("doc_id BIGINT, text STRING, op STRING")
       .option("maxFilesPerTrigger", 1)
       .parquet(watch)
-    withStatePartitions(spark, 8) {
-      val q = stream.writeStream
+    drain(stream) { s =>
+      s.writeStream
         .option("checkpointLocation",
           MlQueries.tempDirDeletedOnExit("graft_stk_ckpt_"))
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -1113,7 +1083,6 @@ object StreamingQueries extends QueryPack {
           ()
         }
         .start()
-      try q.processAllAvailable() finally q.stop()
     }
     // post-retract censuses via manifest TIME TRAVEL: the retained
     // snapshot the takedown committed, anchored by its BATCH id
@@ -1744,8 +1713,8 @@ object StreamingQueries extends QueryPack {
       .schema(emb.select("vec_id", "embedding").schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(watch)
-    withStatePartitions(spark, 8) {
-      val q = stream.writeStream
+    drain(stream) { s =>
+      s.writeStream
         .option("checkpointLocation",
           MlQueries.tempDirDeletedOnExit("graft_ivfidx_ckpt_"))
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -1754,7 +1723,6 @@ object StreamingQueries extends QueryPack {
           ()
         }
         .start()
-      try q.processAllAvailable() finally q.stop()
     }
     IvfIndex.probe(spark, idxDir, emb.where(col("vec_id") < 10),
         "vec_id", "embedding", centroids, nProbe = 4, k = 5)

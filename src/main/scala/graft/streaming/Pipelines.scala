@@ -132,14 +132,8 @@ object Pipelines {
           .where(col("__bkt").isin(affected.toIndexedSeq: _*)),
         bucketed, key, version, tiebreak)
     val merged = merged0.localCheckpoint()
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try merged.write.mode("overwrite").partitionBy("__bkt").parquet(sinkDir)
-    finally prev match {
-      case Some(v) => spark.conf.set(modeKey, v)
-      case None => spark.conf.unset(modeKey)
-    }
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__bkt").parquet(sinkDir)
   }
 
   /** CDC apply WITH TOMBSTONES — [[mergeIntoParquet]] for a feed whose
@@ -184,14 +178,8 @@ object Pipelines {
         .where(col("__bkt").isin(affected.toIndexedSeq: _*))
     val merged = graft.ops.Merge.upsertLatest(base, bucketed, key,
       version, tiebreak).localCheckpoint()
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try merged.write.mode("overwrite").partitionBy("__bkt").parquet(sinkDir)
-    finally prev match {
-      case Some(v) => spark.conf.set(modeKey, v)
-      case None => spark.conf.unset(modeKey)
-    }
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__bkt").parquet(sinkDir)
     org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(merged)
   }
 
@@ -287,14 +275,8 @@ object Pipelines {
       .localCheckpoint()
     val keptBuckets = kept.select("__bkt").distinct()
       .collect().map(_.getInt(0)).toSet
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try kept.write.mode("overwrite").partitionBy("__bkt").parquet(sinkDir)
-    finally prevMode match {
-      case Some(v) => spark.conf.set(modeKey, v)
-      case None => spark.conf.unset(modeKey)
-    }
+    kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__bkt").parquet(sinkDir)
     org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(kept)
     buckets.filterNot(keptBuckets).foreach { b =>
       fs.delete(new org.apache.hadoop.fs.Path(sinkDir, s"__bkt=$b"), true)
@@ -608,20 +590,13 @@ object Pipelines {
     }
   }
 
-  /** Run `f` with the RocksDB state store provider (the only backend
-    * `transformWithState` supports), restoring the session's previous
-    * provider afterwards so co-resident queries keep their default. */
-  def withRocksDBProvider[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** The conf selecting the RocksDB state store provider, the only
+    * backend `transformWithState` supports. Set it on a child session
+    * (`graft.LocalSpark.withChildSession(spark, RocksDBProvider)`), so
+    * co-resident queries on `spark` keep their default. */
+  val RocksDBProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** The reference's 60-second cadence (T1: `fetch_stock.py:47`). */
   val ReferenceTrigger: Trigger = Trigger.ProcessingTime("60 seconds")

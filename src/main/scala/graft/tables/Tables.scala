@@ -180,11 +180,32 @@ object Tables {
     * actual read always agree on the same footer. */
   def eventsGlob(dir: String): String = s"$dir/events*.parquet"
 
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    load(spark, dir, "events", eventsRawSchema)
-      .withColumn("ts", org.apache.spark.sql.functions.expr(
-        rawTsToMicrosFor(spark, eventsGlob(dir))))
+  /** The events table, `ts` as µs TimestampType (see [[eventsRawSchema]]).
+    *
+    * Spark 4 reads a TIMESTAMP(NANOS) int64 as LongType only under
+    * `spark.sql.legacy.parquet.nanosAsLong`; a TIMESTAMP(MICROS) or
+    * unannotated int64 reads as LongType without it. `graft.LocalSpark`
+    * sessions set it when built. On any other session this sets it
+    * whenever the footers under [[eventsGlob]] do not pin µs: a
+    * `TsUnitUnknown` directory may hold nanos files. A µs directory
+    * leaves the session's conf as it was. The one place outside
+    * `graft.LocalSpark` that writes a session conf. */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    withMicrosTs(spark, dir, load(spark, dir, "events", eventsRawSchema))
+
+  /** [[events]] as a file stream over [[eventsGlob]]: every parquet file
+    * that appears there becomes input of the next micro-batch. */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    withMicrosTs(spark, dir,
+      spark.readStream.schema(eventsRawSchema).parquet(eventsGlob(dir)))
+
+  private def withMicrosTs(spark: SparkSession, dir: String,
+                           raw: DataFrame): DataFrame = {
+    val glob = eventsGlob(dir)
+    if (tsUnit(spark, glob) != TsUnitMicros)
+      spark.conf.set(graft.LocalSpark.NanosAsLong, "true")
+    raw.withColumn("ts",
+      org.apache.spark.sql.functions.expr(rawTsToMicrosFor(spark, glob)))
   }
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents", documentsSchema)
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings", embeddingsSchema)

@@ -39,6 +39,38 @@ object Bridge {
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** A clone of `spark` (`cloneSession` is `private[sql]`): a session of
+    * its own whose conf, temp views and temp functions start as copies
+    * of `spark`'s, so conf written to the clone never reaches `spark`.
+    * `newSession()` would start from the builder's conf and drop the
+    * caller's runtime confs, views and functions. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** `df`'s analyzed plan as a frame of `spark`, planned and run under
+    * `spark`'s conf (`Dataset.ofRows` is `private[sql]`). */
+  def rebind(df: org.apache.spark.sql.DataFrame,
+             spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+        .queryExecution.analyzed)
+
+  /** Takes `spark`'s streaming-event relay off the shared listener bus.
+    * Every session whose `streams` manager exists keeps one relay there,
+    * and Spark never removes it, so a session made per call would leave
+    * one behind per call. After this, listeners added to `spark.streams`
+    * hear nothing; listeners on the shared bus still hear its queries. */
+  def detachStreams(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val relay = classOf[org.apache.spark.sql.classic.StreamingQueryManager]
+      .getDeclaredField("listenerBus")
+    relay.setAccessible(true)
+    spark.sparkContext.listenerBus.removeListener(relay.get(spark.streams)
+      .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+  }
+
   /** Temp-function registration on a live session (the FunctionRegistry is
     * `private[sql]` too). For build-time registration prefer
     * `graft.functions.GraftExtensions` via spark.sql.extensions. */

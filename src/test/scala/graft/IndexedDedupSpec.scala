@@ -456,4 +456,121 @@ class IndexedDedupSpec extends AnyFunSuite {
     assert(got == Set((101L, "kept", 101L), (102L, "dup_in_drop", 101L)),
       s"un-tombstoned shingle must create pairs again: $got")
   }
+
+  // ------------------------------------------------ retractBatch
+
+  /** keep: 'h h' appears in docs 1,2,3 — df 3 > cap 2, tombstoned at
+    * bootstrap. Retracting docs 2,3 drops df('h h') to 1 ≤ cap: the
+    * re-audit must UN-TOMBSTONE it and restore doc 1's posting. */
+  private val DedupKeep = ZKeep
+  private val DedupRetractIds = Set(2L, 3L)
+
+  test("IndexedDedup.retractBatch == bootstrap on the remaining corpus: " +
+    "postings and doc rows of retracted docs gone, touched df-cap " +
+    "tombstones re-audited and UN-TOMBSTONED with restored postings") {
+    val keep = mkDocs(DedupKeep)
+    val retract = mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1)))
+    val remaining = mkDocs(DedupKeep.filterNot(r => DedupRetractIds(r._1)))
+    val idx = dedupBoot(keep)
+    // pre-retract: the tombstone exists and doc 1 does NOT count 'h h'
+    val (s0, d0) = dedupState(idx)
+    assert(s0.contains(("h h", -1L)), "fixture must tombstone 'h h'")
+    assert(d0.contains((1L, 2L)))
+    IndexedDedup.retractBatch(spark, idx, retract, 1L, k = 2,
+      maxShingleDf = 2, retained = Some(remaining))
+    val fresh = dedupBoot(remaining)
+    assert(dedupState(idx) == dedupState(fresh),
+      "retract(batch) must be content-equivalent to a fresh bootstrap " +
+        "on the remaining corpus")
+    // the un-tombstone is visible: restored posting + n_keep increment
+    val (s1, d1) = dedupState(idx)
+    assert(s1.contains(("h h", 1L)) && !s1.exists(_._1 == "h h h"), s1.toString)
+    assert(!s1.contains(("h h", -1L)), "tombstone must be re-audited away")
+    assert(d1.contains((1L, 3L)), "doc 1 must regain the restored shingle")
+    assert(!d1.exists(r => DedupRetractIds(r._1)), "retracted doc rows leak")
+  }
+
+  test("IndexedDedup.retractBatch with retained=None: the cap is a " +
+    "one-way policy — postings removed, tombstone kept") {
+    val idx = dedupBoot(mkDocs(DedupKeep))
+    IndexedDedup.retractBatch(spark, idx,
+      mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1))), 1L, k = 2,
+      maxShingleDf = 2, retained = None)
+    val (s1, d1) = dedupState(idx)
+    assert(s1.contains(("h h", -1L)), "one-way policy must keep the tombstone")
+    assert(d1.contains((1L, 2L)), "no re-audit => no n_keep increment")
+    assert(!s1.exists(r => r._2 >= 0 && DedupRetractIds(r._2)),
+      "retracted postings leak")
+    // replay of the committed retract is a no-op
+    val before = dedupState(idx)
+    IndexedDedup.retractBatch(spark, idx,
+      mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1))), 1L, k = 2,
+      maxShingleDf = 2, retained = None)
+    assert(idx.manifest.read().get.batchSeq == 1L)
+    assert(dedupState(idx) == before, "committed retract replay mutated state")
+  }
+
+  test("IndexedDedup.retractBatch: post-retract verdicts equal " +
+    "incrementalDedup against the remaining corpus (re-admission of " +
+    "taken-down content)") {
+    val keep = mkDocs(DedupKeep)
+    val retract = mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1)))
+    val remaining = mkDocs(DedupKeep.filterNot(r => DedupRetractIds(r._1)))
+    val idx = dedupBoot(keep)
+    IndexedDedup.retractBatch(spark, idx, retract, 1L, k = 2,
+      maxShingleDf = 2, retained = Some(remaining))
+    // a copy of retracted doc 2 and a copy of surviving doc 4
+    val b = mkDocs(Seq(102L -> "h h r s", 104L -> "v w x y"))
+    val got = IndexedDedup.processBatch(spark, idx, b, 2L, k = 2,
+      threshold = 0.3, maxShingleDf = 2)
+      .as[(Long, String, Long)].collect().toSet
+    val want = Dedup.incrementalDedup(remaining, b, "doc_id", "text",
+        k = 2, threshold = 0.3, maxShingleDf = 2)
+      .as[(Long, String, Long)].collect().toSet
+    assert(got == want)
+    assert(got.exists(r => r._1 == 102L && r._2 == "kept"),
+      "the taken-down content must re-enter as kept")
+    assert(got.exists(r => r._1 == 104L && r._2 == "dup_of_keep"))
+  }
+
+  private def dedupCrashCase(arm: (() => Unit) => Unit,
+                             reset: () => Unit): Unit = {
+    val keep = mkDocs(DedupKeep)
+    val retract = mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1)))
+    val remaining = mkDocs(DedupKeep.filterNot(r => DedupRetractIds(r._1)))
+    val control = dedupBoot(keep)
+    IndexedDedup.retractBatch(spark, control, retract, 1L, k = 2,
+      maxShingleDf = 2, retained = Some(remaining))
+    val ctrl = dedupState(control)
+    val crashed = dedupBoot(keep)
+    val pre = dedupState(crashed)
+    final class InjectedCrash extends RuntimeException("injected")
+    arm(() => throw new InjectedCrash)
+    try {
+      intercept[InjectedCrash] {
+        IndexedDedup.retractBatch(spark, crashed, retract, 1L, k = 2,
+          maxShingleDf = 2, retained = Some(remaining))
+      }
+    } finally reset()
+    assert(dedupState(crashed) == pre,
+      "a crashed retract leaked into the committed snapshot")
+    IndexedDedup.retractBatch(spark, crashed, retract, 1L, k = 2,
+      maxShingleDf = 2, retained = Some(remaining))
+    assert(dedupState(crashed) == ctrl,
+      "post-crash retract replay differs from the uncrashed control")
+  }
+
+  test("IndexedDedup.retractBatch: crash BETWEEN the two index rewrites " +
+    "— readers hold the pre-retract snapshot, replay converges") {
+    dedupCrashCase(
+      hook => CrashPoints.arm(Point.DedupBetweenWrites)(hook),
+      () => CrashPoints.disarm())
+  }
+
+  test("IndexedDedup.retractBatch: crash AFTER both rewrites BEFORE the " +
+    "manifest rename — same guarantee") {
+    dedupCrashCase(
+      hook => CrashPoints.arm(Point.DedupStaged)(hook),
+      () => CrashPoints.disarm())
+  }
 }

@@ -47,9 +47,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("q67 stream-static enrich plan broadcasts the dim (no stream shuffle for the join)") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream.schema(Tables.eventsRawSchema)
-      .parquet(s"$dir/events*.parquet")
+    val raw = Tables.eventsStream(spark, dir)
     val dim = Tables.customer(spark, dir).select("c_custkey", "c_mktsegment")
     val joined = raw.join(broadcast(dim), raw("user_id") === dim("c_custkey"))
     val name = "p_" + java.util.UUID.randomUUID().toString.replace("-", "")

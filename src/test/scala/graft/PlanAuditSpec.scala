@@ -593,8 +593,8 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q196 AQE splits the skewed sort-merge partition (skew=true in the final plan)") {
-    queries.ExtendedQueries.withSkewSplitConfigs(spark) {
-      val df = queries.ExtendedQueries.skewJoinFrame(spark, dir)
+    queries.ExtendedQueries.withSkewSplitConfigs(spark) { child =>
+      val df = queries.ExtendedQueries.skewJoinFrame(child, dir)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString()
       assert(plan.contains("SortMergeJoin"),
@@ -905,6 +905,31 @@ class PlanAuditSpec extends AnyFunSuite {
         .toArray(Array.empty[String]).zipWithIndex
       if banned.exists(ln.contains)
     } yield s"${f.getName}:${i + 1}: ${ln.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("engine code never writes a session conf: under src/main only " +
+    "LocalSpark.scala and tables/Tables.scala call conf.set(, conf.unset(, " +
+    "setConf( or setConfString(, or run a SQL SET") {
+    val banned = Seq(
+      """\bconf\.(set|unset)\(""".r,
+      """\bsetConf(String)?\(""".r,
+      """(?i)\bsql\(\s*s?"+\s*(RE)?SET\b""".r)
+    val owners = Set("src/main/scala/graft/LocalSpark.scala",
+      "src/main/scala/graft/tables/Tables.scala").map(java.nio.file.Paths.get(_))
+    owners.foreach(o => assert(java.nio.file.Files.isRegularFile(o), s"missing $o"))
+    import scala.jdk.CollectionConverters._
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally s.close()
+    }
+    val offenders = for {
+      f <- files if !owners(f)
+      (ln, i) <- java.nio.file.Files.readAllLines(f)
+        .toArray(Array.empty[String]).zipWithIndex
+      if banned.exists(_.findFirstIn(ln).isDefined)
+    } yield s"$f:${i + 1}: ${ln.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 

@@ -4,17 +4,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.{Dedup, IndexManifest, IndexedDedup}
+import graft.dedup.{IndexManifest, IndexedDedup}
 import graft.dedup.IndexTxn.Point
 import graft.obs.QueryProfile
 import graft.text.Bm25Index
 
-/** Round-13 pins: RETRACTION batches for the persisted index layer
-  * (VERDICT r12 #1 — the equivalence standard is an index bootstrapped
-  * from scratch on the remaining corpus, including the df-cap
-  * tombstone RE-AUDIT), crash-injection through the dedup retract path
-  * (the BM25 retract pins live in Bm25IndexSpec), the query-TABLE BM25
-  * entry point (#3), and configurable manifest retention (#5). */
+/** Round-13 pins: the query-TABLE BM25 entry point (VERDICT r12 #3),
+  * cross-family curated commits and retractions, IVF rebuild and
+  * delete crash-injection, and configurable manifest retention (#5).
+  * The retraction pins of the single-family indexes live in
+  * IndexedDedupSpec and Bm25IndexSpec. */
 class Round13OpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -25,18 +24,12 @@ class Round13OpsSpec extends AnyFunSuite {
   private def mkDocs(rows: Seq[(Long, String)]): DataFrame =
     rows.toDF("doc_id", "text")
 
-  // ------------------------------------------------ IndexedDedup retract
+  // ------------------------------------------------ dedup fixtures
 
-  /** keep: 'h h' appears in docs 1,2,3 — df 3 > cap 2, tombstoned at
-    * bootstrap. Retracting docs 2,3 drops df('h h') to 1 ≤ cap: the
-    * re-audit must UN-TOMBSTONE it and restore doc 1's posting. */
+  /** 'h h' appears in docs 1,2,3 — df 3 > cap 2, tombstoned at
+    * bootstrap (the curated-index fixtures below reuse it). */
   private val DedupKeep = Seq(
     1L -> "h h p q", 2L -> "h h r s", 3L -> "h h t u", 4L -> "v w x y")
-  private val DedupRetractIds = Set(2L, 3L)
-
-  private def dedupBoot(docs: DataFrame): IndexedDedup.Indexes =
-    IndexedDedup.bootstrap(spark, docs, k = 2, maxShingleDf = 2,
-      tmp("r13d_s_"), tmp("r13d_d_"), tmp("r13d_m_"), rowCap = 64L)
 
   /** Content fingerprint through the committed manifest; doc-index rows
     * compared WITHOUT ver (last-writer ids legitimately differ between
@@ -47,115 +40,6 @@ class Round13OpsSpec extends AnyFunSuite {
         .as[(String, Long)].collect().toSet,
       idx.doc.allRows(st.buckets(idx.docName))
         .select("doc_id", "n_keep").as[(Long, Long)].collect().toSet)
-  }
-
-  test("IndexedDedup.retractBatch == bootstrap on the remaining corpus: " +
-    "postings and doc rows of retracted docs gone, touched df-cap " +
-    "tombstones re-audited and UN-TOMBSTONED with restored postings") {
-    val keep = mkDocs(DedupKeep)
-    val retract = mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1)))
-    val remaining = mkDocs(DedupKeep.filterNot(r => DedupRetractIds(r._1)))
-    val idx = dedupBoot(keep)
-    // pre-retract: the tombstone exists and doc 1 does NOT count 'h h'
-    val (s0, d0) = dedupState(idx)
-    assert(s0.contains(("h h", -1L)), "fixture must tombstone 'h h'")
-    assert(d0.contains((1L, 2L)))
-    IndexedDedup.retractBatch(spark, idx, retract, 1L, k = 2,
-      maxShingleDf = 2, retained = Some(remaining))
-    val fresh = dedupBoot(remaining)
-    assert(dedupState(idx) == dedupState(fresh),
-      "retract(batch) must be content-equivalent to a fresh bootstrap " +
-        "on the remaining corpus")
-    // the un-tombstone is visible: restored posting + n_keep increment
-    val (s1, d1) = dedupState(idx)
-    assert(s1.contains(("h h", 1L)) && !s1.exists(_._1 == "h h h"), s1.toString)
-    assert(!s1.contains(("h h", -1L)), "tombstone must be re-audited away")
-    assert(d1.contains((1L, 3L)), "doc 1 must regain the restored shingle")
-    assert(!d1.exists(r => DedupRetractIds(r._1)), "retracted doc rows leak")
-  }
-
-  test("IndexedDedup.retractBatch with retained=None: the cap is a " +
-    "one-way policy — postings removed, tombstone kept") {
-    val idx = dedupBoot(mkDocs(DedupKeep))
-    IndexedDedup.retractBatch(spark, idx,
-      mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1))), 1L, k = 2,
-      maxShingleDf = 2, retained = None)
-    val (s1, d1) = dedupState(idx)
-    assert(s1.contains(("h h", -1L)), "one-way policy must keep the tombstone")
-    assert(d1.contains((1L, 2L)), "no re-audit => no n_keep increment")
-    assert(!s1.exists(r => r._2 >= 0 && DedupRetractIds(r._2)),
-      "retracted postings leak")
-    // replay of the committed retract is a no-op
-    val before = dedupState(idx)
-    IndexedDedup.retractBatch(spark, idx,
-      mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1))), 1L, k = 2,
-      maxShingleDf = 2, retained = None)
-    assert(idx.manifest.read().get.batchSeq == 1L)
-    assert(dedupState(idx) == before, "committed retract replay mutated state")
-  }
-
-  test("IndexedDedup.retractBatch: post-retract verdicts equal " +
-    "incrementalDedup against the remaining corpus (re-admission of " +
-    "taken-down content)") {
-    val keep = mkDocs(DedupKeep)
-    val retract = mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1)))
-    val remaining = mkDocs(DedupKeep.filterNot(r => DedupRetractIds(r._1)))
-    val idx = dedupBoot(keep)
-    IndexedDedup.retractBatch(spark, idx, retract, 1L, k = 2,
-      maxShingleDf = 2, retained = Some(remaining))
-    // a copy of retracted doc 2 and a copy of surviving doc 4
-    val b = mkDocs(Seq(102L -> "h h r s", 104L -> "v w x y"))
-    val got = IndexedDedup.processBatch(spark, idx, b, 2L, k = 2,
-      threshold = 0.3, maxShingleDf = 2)
-      .as[(Long, String, Long)].collect().toSet
-    val want = Dedup.incrementalDedup(remaining, b, "doc_id", "text",
-        k = 2, threshold = 0.3, maxShingleDf = 2)
-      .as[(Long, String, Long)].collect().toSet
-    assert(got == want)
-    assert(got.exists(r => r._1 == 102L && r._2 == "kept"),
-      "the taken-down content must re-enter as kept")
-    assert(got.exists(r => r._1 == 104L && r._2 == "dup_of_keep"))
-  }
-
-  private def dedupCrashCase(arm: (() => Unit) => Unit,
-                             reset: () => Unit): Unit = {
-    val keep = mkDocs(DedupKeep)
-    val retract = mkDocs(DedupKeep.filter(r => DedupRetractIds(r._1)))
-    val remaining = mkDocs(DedupKeep.filterNot(r => DedupRetractIds(r._1)))
-    val control = dedupBoot(keep)
-    IndexedDedup.retractBatch(spark, control, retract, 1L, k = 2,
-      maxShingleDf = 2, retained = Some(remaining))
-    val ctrl = dedupState(control)
-    val crashed = dedupBoot(keep)
-    val pre = dedupState(crashed)
-    final class InjectedCrash extends RuntimeException("injected")
-    arm(() => throw new InjectedCrash)
-    try {
-      intercept[InjectedCrash] {
-        IndexedDedup.retractBatch(spark, crashed, retract, 1L, k = 2,
-          maxShingleDf = 2, retained = Some(remaining))
-      }
-    } finally reset()
-    assert(dedupState(crashed) == pre,
-      "a crashed retract leaked into the committed snapshot")
-    IndexedDedup.retractBatch(spark, crashed, retract, 1L, k = 2,
-      maxShingleDf = 2, retained = Some(remaining))
-    assert(dedupState(crashed) == ctrl,
-      "post-crash retract replay differs from the uncrashed control")
-  }
-
-  test("IndexedDedup.retractBatch: crash BETWEEN the two index rewrites " +
-    "— readers hold the pre-retract snapshot, replay converges") {
-    dedupCrashCase(
-      hook => CrashPoints.arm(Point.DedupBetweenWrites)(hook),
-      () => CrashPoints.disarm())
-  }
-
-  test("IndexedDedup.retractBatch: crash AFTER both rewrites BEFORE the " +
-    "manifest rename — same guarantee") {
-    dedupCrashCase(
-      hook => CrashPoints.arm(Point.DedupStaged)(hook),
-      () => CrashPoints.disarm())
   }
 
   // ------------------------------------------------ Bm25Index fixtures

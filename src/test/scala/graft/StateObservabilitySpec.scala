@@ -43,10 +43,10 @@ class StateObservabilitySpec extends AnyFunSuite {
     q.lastProgress.stateOperators.map(_.numRowsTotal).toSeq
 
   test("transformWithState (q239 CUSUM shape): state rows == distinct keys seen, flat under repeats") {
-    implicit val sc = spark.sqlContext
-    Pipelines.withRocksDBProvider(spark) {
+    LocalSpark.withChildSession(spark, Pipelines.RocksDBProvider) { child =>
+      implicit val sc = child.sqlContext
       val input = MemoryStream[(String, Long, Long)]
-      val out = Pipelines.streamingCusum(spark,
+      val out = Pipelines.streamingCusum(child,
         input.toDF().toDF("k", "ord", "c"), "k", "ord", "c",
         warm = 2, kAllow = 0L, h = 1000L)
       val q = out.writeStream.outputMode("append").format("memory")
@@ -77,10 +77,10 @@ class StateObservabilitySpec extends AnyFunSuite {
   }
 
   test("transformWithState (q127 moments shape): state rows == distinct keys across batches") {
-    implicit val sc = spark.sqlContext
-    Pipelines.withRocksDBProvider(spark) {
+    LocalSpark.withChildSession(spark, Pipelines.RocksDBProvider) { child =>
+      implicit val sc = child.sqlContext
       val input = MemoryStream[(String, Long)]
-      val out = Pipelines.streamingMoments(spark,
+      val out = Pipelines.streamingMoments(child,
         input.toDF().toDF("k", "c"), "k", "c")
       val q = out.writeStream.outputMode("append").format("memory")
         .queryName("state_obs_moments").start()

@@ -128,18 +128,18 @@ class StreamingSpec extends AnyFunSuite {
     // Same scenario as the fMGWS TTL test, driven through the Spark 4
     // transformWithState processor whose TTL is enforced by the state
     // store itself. Requires RocksDB — the only provider the new API
-    // supports; set-and-restore so other suites keep the default.
+    // supports; a child session holds it so other suites keep the default.
     // The TTL is checked against each batch's timestamp, so the test
     // waits until the batch that takes each row has committed: the
     // first two rows land in back-to-back batches far inside the TTL,
     // and the third is added a full TTL plus margin after the second
     // was judged — no wall-clock race on a loaded machine.
     val ttlMs = 8000L
-    Pipelines.withRocksDBProvider(spark) {
-      implicit val sc = spark.sqlContext
+    LocalSpark.withChildSession(spark, Pipelines.RocksDBProvider) { child =>
+      implicit val sc = child.sqlContext
       val input = MemoryStream[(String, Long)]
       val stream = input.toDF().toDF("symbol", "ts")
-      val filtered = Pipelines.highWatermarkFilterTws(spark, stream,
+      val filtered = Pipelines.highWatermarkFilterTws(child, stream,
         "symbol", "ts", ttlMs)
       val name = "t_" + java.util.UUID.randomUUID().toString.replace("-", "")
       // 500 ms trigger + quiesced stop: see the fMGWS TTL test above.
@@ -166,7 +166,7 @@ class StreamingSpec extends AnyFunSuite {
         // the SAME stale row now re-admits (key restarted cold)
         judged(input.addData(("AAPL", 150L)))
       } finally quiesceStop(q)
-      val got = spark.table(name).as[(String, Long)].collect().toSeq
+      val got = child.table(name).as[(String, Long)].collect().toSeq
         .groupBy(identity).view.mapValues(_.size).toMap
       assert(got == Map(("AAPL", 200L) -> 1, ("AAPL", 150L) -> 1),
         s"got $got")
@@ -174,11 +174,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streamingMoments: exact sums accumulate across batches, any split") {
-    Pipelines.withRocksDBProvider(spark) {
-      implicit val sc = spark.sqlContext
+    LocalSpark.withChildSession(spark, Pipelines.RocksDBProvider) { child =>
+      implicit val sc = child.sqlContext
       val input = MemoryStream[(String, Long)]
       val stream = input.toDF().toDF("symbol", "cents")
-      val moments = Pipelines.streamingMoments(spark, stream, "symbol", "cents")
+      val moments = Pipelines.streamingMoments(child, stream, "symbol", "cents")
       val name = "m_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val q = moments.writeStream.outputMode("append").format("memory")
         .queryName(name).start()
@@ -188,7 +188,7 @@ class StreamingSpec extends AnyFunSuite {
         input.addData(("AAPL", 200L))
         q.processAllAvailable()
       } finally q.stop()
-      val finals = spark.table(name)
+      val finals = child.table(name)
         .as[(String, Long, Long, Long)].collect().toSeq
         .groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
       // AAPL: n=3, s=600, s2=100²+300²+200²=140000; MSFT: n=1, s=50, s2=2500
@@ -198,11 +198,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streamingCusum: warm-up and S-state survive the batch boundary; shift alarms, stable doesn't") {
-    Pipelines.withRocksDBProvider(spark) {
-      implicit val sc = spark.sqlContext
+    LocalSpark.withChildSession(spark, Pipelines.RocksDBProvider) { child =>
+      implicit val sc = child.sqlContext
       val input = MemoryStream[(String, Long, Long)]
       val stream = input.toDF().toDF("symbol", "seq", "cents")
-      val flagged = Pipelines.streamingCusum(spark, stream,
+      val flagged = Pipelines.streamingCusum(child, stream,
         key = "symbol", ord = "seq", cents = "cents",
         warm = 4, kAllow = 5L, h = 50L)
       val name = "c_" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -224,7 +224,7 @@ class StreamingSpec extends AnyFunSuite {
           ("FLAT", 5L, 500L), ("FLAT", 6L, 500L))
         q.processAllAvailable()
       } finally q.stop()
-      val got = spark.table(name)
+      val got = child.table(name)
         .as[(String, Long, Long, Boolean, Boolean)].collect().toSeq
       val aapl = got.filter(_._1 == "AAPL").map(_._2).sorted
       assert(aapl == Seq(7L, 8L), s"expected alarms at 7,8 only: $got")
@@ -275,7 +275,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("windowed aggregation is exact across many micro-batches (maxFilesPerTrigger=1)") {
     import graft.tables.Tables
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Split the fixture into 4 files so the file source delivers 4
     // incremental micro-batches; the complete-mode result must equal the
     // single-pass batch aggregation.

@@ -43,7 +43,6 @@ class TsUnitSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(nsDir)
 
     def readBack(dir: String): Seq[(Long, String)] = {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.read
         .schema("ts LONG, event_id LONG").parquet(dir)
         .withColumn("ts", expr(Tables.rawTsToMicrosFor(spark, dir)))
@@ -63,5 +62,29 @@ class TsUnitSpec extends AnyFunSuite {
     val expected = marks.map { case (s, id) => (id, s) }.sortBy(_._1)
     assert(viaMicros == expected, s"µs read diverged: $viaMicros")
     assert(viaNanos == expected, s"ns read diverged: $viaNanos")
+  }
+
+  test("a TIMESTAMP(MICROS) events table reads as LongType on a session " +
+    "without nanosAsLong, and Tables.events leaves that flag unset") {
+    val flag = LocalSpark.NanosAsLong
+    val dir = Files.createTempDirectory("graft_ts_us_events_").toString
+    SparkTestSession.withConf(
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      marks.toDF("ts_str", "event_id")
+        .select(col("event_id"), to_timestamp(col("ts_str")).as("ts"),
+          lit(7L).as("user_id"), lit("click").as("event_type"),
+          lit(1.5).as("value"), lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    }
+    val bare = org.apache.spark.sql.graft.Bridge.cloneSession(spark)
+    bare.conf.unset(flag)
+    assert(!bare.conf.get(flag).toBoolean)
+    assert(Tables.tsUnit(bare, Tables.eventsGlob(dir)) == Tables.TsUnitMicros)
+    val got = Tables.events(bare, dir)
+      .select(col("event_id"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("s"))
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(got == marks.map { case (s, id) => (id, s) }.sortBy(_._1), got)
+    assert(!bare.conf.get(flag).toBoolean, "Tables.events set the flag")
   }
 }

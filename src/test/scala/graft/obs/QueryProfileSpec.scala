@@ -74,4 +74,26 @@ class QueryProfileSpec extends AnyFunSuite {
     assert(p.batches == 2, p)
     assert(p.durationMs.contains("addBatch"), p.durationMs)
   }
+
+  test("a stream started in a child session reports its 3 batches") {
+    val (_, p) = QueryProfile.of(spark) {
+      graft.LocalSpark.withChildSession(spark) { child =>
+        implicit val sc = child.sqlContext
+        val input = MemoryStream[Int]
+        val q = input.toDF().writeStream.format("noop").start()
+        try (1 to 3).foreach { i => input.addData(i); q.processAllAvailable() }
+        finally q.stop()
+      }
+    }
+    assert(p.batches == 3, p)
+  }
+
+  test("a body that floods the bus with 2000 tasks is counted to its " +
+    "last task") {
+    val (n, p) = QueryProfile.of(spark) {
+      spark.range(0L, 20000L, 1L, 2000).count()
+    }
+    assert(n == 20000L)
+    assert(p.tasks == 2000 + 1 && p.stages == 2, p)
+  }
 }
